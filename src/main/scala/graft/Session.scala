@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One place for session construction so every entrypoint (Bench, Verify,
-  * tests) runs with identical semantics-affecting conf:
+/** One place for session construction so every entrypoint (Verify, the
+  * e2ebench client, tests) runs with identical semantics-affecting conf:
   *
   *   - `spark.sql.legacy.parquet.nanosAsLong` — events.ts shipped as
   *     parquet TIMESTAMP(NANOS) in earlier driver corpus generations;
@@ -42,16 +42,15 @@ object Session {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       // Codegen class cache sized to the catalog (default 100): a
-      // 331-query suite churns the default FAR past capacity between a
-      // query's warmup and its timed/verified run, so every run paid a
-      // full driver-side Janino recompile (measured, CodegenProbe r12:
-      // q308 ~2.0 s of single-threaded compile per evicted run, +1.3 s
-      // wall vs warm; q261 +0.8 s) — pure fixed cost, and the window
-      // where an external CPU burst hits hardest since compilation
-      // cannot hide behind executor parallelism. 2000 entries keeps
-      // every generated class of the full catalog warm; memory cost is
-      // bounded (generated classes are small, Guava-weighted same as
-      // any long-lived repeated-query service would run).
+      // full-catalog run churns the default far past capacity between
+      // two runs of the same query, so every re-run paid a full
+      // driver-side Janino recompile (measured: q308 spent ~2.0 s of
+      // single-threaded compile per evicted run, +1.3 s wall vs warm;
+      // q261 +0.8 s) — pure fixed cost that cannot hide behind executor
+      // parallelism. 2000 entries keeps every generated class of the
+      // catalog warm; memory cost is bounded (generated classes are
+      // small). The traced e2ebench run reports the compile time per op
+      // as exec.codegen_compile_s.
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")

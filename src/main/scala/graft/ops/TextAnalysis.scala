@@ -402,7 +402,10 @@ object TextAnalysis extends QueryModule {
       // instead of the Percentile aggregate whose per-lang value map
       // holds a doc-scale distinct set in one task; the regex-token
       // frame is checkpointed once per invocation for its two
-      // consumers (q300 rationale).
+      // consumers (q300 rationale). exactPercentiles drops a lang whose
+      // ratios are all NULL (e.g. every n_chars NULL); the left join
+      // keeps that row with NULL percentiles, as the oracle's GROUP BY
+      // + quantile_cont does.
       val t = Tables.documents(s, d)
         .select(col("lang"), col("n_chars"),
           size(regexp_extract_all(col("text"),
@@ -415,7 +418,7 @@ object TextAnalysis extends QueryModule {
           sum(col("n_toks")).as("tot_tokens"),
           sum(col("n_chars")).as("tot_chars"))
         .join(graft.ops.DistributedRank.exactPercentiles(
-          t, col("r"), Seq(0.5, 0.9), Seq("lang")), Seq("lang"))
+          t, col("r"), Seq(0.5, 0.9), Seq("lang")), Seq("lang"), "left")
         .select(col("lang"), col("n_docs"), col("tot_tokens"),
           col("tot_chars"),
           (col("tot_tokens").cast("double") / col("tot_chars"))

@@ -265,6 +265,31 @@ class DegenerateInputSpec extends AnyFunSuite {
     assert(hr.length == 1 && hr(0).getAs[Long]("vocab") == 3L)
   }
 
+  // exactPercentiles has no row for a group whose values are all NULL;
+  // the oracle's GROUP BY + quantile_cont keeps the group with NULL
+  // percentiles, so q219 must too.
+  test("q219: an all-NULL n_chars language keeps its row with NULL percentiles") {
+    import spark.implicits._
+    val d = Paths.get("target/tmp/degenerate_q219").toAbsolutePath.toString
+    Seq[(Long, String, String, String, Option[Long])](
+      (1L, "aa bb", "en", "s0", Some(5L)),
+      (2L, "cc dd ee", "en", "s0", Some(8L)),
+      (3L, "ff gg", "de", "s0", None),
+      (4L, "hh", "de", "s0", None))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$d/documents.parquet")
+    val rows = SparkEntry.queries("q219_tokenizer_fertility")(spark, d)
+      .collect().map(r => r.getAs[String]("lang") -> r).toMap
+    assert(rows.keySet == Set("de", "en"))
+    val de = rows("de")
+    assert(de.getAs[Long]("n_docs") == 2L)
+    assert(de.isNullAt(de.fieldIndex("p50_fertility")))
+    assert(de.isNullAt(de.fieldIndex("p90_fertility")))
+    val en = rows("en")
+    assert(!en.isNullAt(en.fieldIndex("p50_fertility")))
+    assert(!en.isNullAt(en.fieldIndex("p90_fertility")))
+  }
+
   test("q177: an all-equal-price brand medians at the tie, full weight") {
     // total ties: the cumulative weight crosses tot/2 inside the one
     // tie group, so the median is the tied price with the full weight
