@@ -2,7 +2,9 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 /** The canonical DEGENERATE corpus — every table at the smallest
   * cardinality that still exercises the catalog's denominators and
@@ -21,7 +23,7 @@ object DegenCorpus {
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
   /** Writes the corpus under `dir` (one parquet per table, the same
-    * layout as `/root/testdata/sf*`). Idempotent — callers may share
+    * layout and column types as the testdata corpora). Idempotent — callers may share
     * one scratch dir. With `empty = true` every table keeps its schema
     * but carries ZERO rows — the limiting degenerate corpus. With
     * `nulls = true` every PAYLOAD column (strings, text, timestamps,
@@ -38,39 +40,50 @@ object DegenCorpus {
       "p_partkey", "o_orderkey", "o_custkey", "l_orderkey",
       "l_partkey", "l_suppkey", "l_linenumber", "event_id", "user_id",
       "doc_id", "vec_id", "label")
-    implicit class Cut(df: org.apache.spark.sql.DataFrame) {
-      def cut: org.apache.spark.sql.DataFrame =
-        if (empty) df.limit(0)
-        else if (nulls) df.select(df.schema.fields.map { f =>
-          if (keep(f.name)) org.apache.spark.sql.functions.col(f.name)
-          else org.apache.spark.sql.functions.lit(null)
-            .cast(f.dataType).as(f.name)
+    // each table is written with the corpus contract's column types
+    // (Tables.schemas; a session-zoned TIMESTAMP goes to disk as the
+    // naive µs timestamp the corpus files carry), then cut down
+    implicit class Save(df: DataFrame) {
+      def save(name: String): Unit = {
+        val typed = df.select(Tables.schemas(name).fields.map { f =>
+          col(f.name).cast(f.dataType match {
+            case TimestampType => TimestampNTZType
+            case t => t
+          }).as(f.name)
         }.toSeq: _*)
-        else df
+        val cut =
+          if (empty) typed.limit(0)
+          else if (nulls) typed.select(typed.schema.fields.map { f =>
+            if (keep(f.name)) col(f.name)
+            else lit(null).cast(f.dataType).as(f.name)
+          }.toSeq: _*)
+          else typed
+        cut.write.mode("overwrite").parquet(Tables.path(dir, name))
+      }
     }
-    Seq((0, "R0")).toDF("r_regionkey", "r_name").cut
-      .write.mode("overwrite").parquet(s"$dir/region.parquet")
-    Seq((0, "N0", 0)).toDF("n_nationkey", "n_name", "n_regionkey").cut
-      .write.mode("overwrite").parquet(s"$dir/nation.parquet")
+    Seq((0, "R0")).toDF("r_regionkey", "r_name")
+      .save("region")
+    Seq((0, "N0", 0)).toDF("n_nationkey", "n_name", "n_regionkey")
+      .save("nation")
     Seq((1L, "C1", 0, 0.0, "SEG"))
       .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal",
-        "c_mktsegment").cut
-      .write.mode("overwrite").parquet(s"$dir/customer.parquet")
+        "c_mktsegment")
+      .save("customer")
     Seq((1L, "S1", 0, 0.0))
-      .toDF("s_suppkey", "s_name", "s_nationkey", "s_acctbal").cut
-      .write.mode("overwrite").parquet(s"$dir/supplier.parquet")
+      .toDF("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
+      .save("supplier")
     Seq((1L, "P1", "B1", "T1", 1, 10.0))
       .toDF("p_partkey", "p_name", "p_brand", "p_type", "p_size",
-        "p_retailprice").cut
-      .write.mode("overwrite").parquet(s"$dir/part.parquet")
+        "p_retailprice")
+      .save("part")
     // two identical-price orders in ONE month from one customer:
     // zero price variance, one order cohort
     Seq(
       (1L, 1L, "O", 100.0, ts("2024-01-10 00:00:00"), "1-URGENT"),
       (2L, 1L, "O", 100.0, ts("2024-01-20 00:00:00"), "1-URGENT"))
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "o_orderdate", "o_orderpriority").cut
-      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+        "o_orderdate", "o_orderpriority")
+      .save("orders")
     // constant-quantity lines shipping INSIDE the order month:
     // zero-variance quantity (Cp/Cpk) and a single development lag
     // (chain ladder)
@@ -81,8 +94,8 @@ object DegenCorpus {
         ts("2024-01-25 00:00:00")))
       .toDF("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
         "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-        "l_returnflag", "l_linestatus", "l_shipdate").cut
-      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+        "l_returnflag", "l_linestatus", "l_shipdate")
+      .save("lineitem")
     // ONE user, ONE day, ONE event type, constant value: one rater
     // (Kendall W), one item (Cronbach), one group (ICC), all-tie
     // ranks, single-day user (survival), zero dispersion
@@ -90,14 +103,14 @@ object DegenCorpus {
       (1L, ts("2024-01-05 09:00:00"), 10L, "click", 7.0, "{}"),
       (2L, ts("2024-01-05 10:00:00"), 10L, "click", 7.0, "{}"),
       (3L, ts("2024-01-05 11:00:00"), 10L, "click", 7.0, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props").cut
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .save("events")
     // exact-duplicate documents from one source
     Seq(
       (1L, "aa bb cc dd ee", "en", "s1", 14L),
       (2L, "aa bb cc dd ee", "en", "s1", 14L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars").cut
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .save("documents")
     // an identical vector pair (zero within-pair distance) plus two
     // orthogonal singletons
     Seq(
@@ -105,8 +118,8 @@ object DegenCorpus {
       (2L, Seq(1.0f, 0.0f, 0.0f, 0.0f), 0),
       (3L, Seq(0.0f, 1.0f, 0.0f, 0.0f), 1),
       (4L, Seq(0.0f, 0.0f, 1.0f, 0.0f), 1))
-      .toDF("vec_id", "embedding", "label").cut
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+      .toDF("vec_id", "embedding", "label")
+      .save("embeddings")
     dir
   }
 }

@@ -84,7 +84,11 @@ object ScaleGen {
         shifted("l_suppkey", ss) +: t("lineitem").columns.toSeq
           .filterNot(Set("l_orderkey", "l_partkey", "l_suppkey"))
           .map(col): _*), 16)
+    // events.ts reads as a session-zoned TIMESTAMP (Tables.schemas),
+    // which parquet would store as INT96: cast back to the naive µs
+    // type the corpus files hold
     save("events", fan(t("events"))
+      .withColumn("ts", col("ts").cast("timestamp_ntz"))
       .select(shifted("event_id", es) +: shifted("user_id", us) +:
         t("events").columns.toSeq
           .filterNot(Set("event_id", "user_id")).map(col): _*), 8)
@@ -120,7 +124,7 @@ object ScaleGen {
     println(s"[scalegen] wrote ${copies}x corpus to $out")
     Tables.names.foreach { n =>
       println(s"[scalegen] $n rows=" +
-        spark.read.parquet(s"$out/$n.parquet").count())
+        Tables(spark, out, n).count())
     }
     spark.stop()
   }

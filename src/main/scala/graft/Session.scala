@@ -5,15 +5,11 @@ import org.apache.spark.sql.SparkSession
 /** One place for session construction so every entrypoint (Verify, the
   * e2ebench client, tests) runs with identical semantics-affecting conf:
   *
-  *   - `spark.sql.legacy.parquet.nanosAsLong` — events.ts shipped as
-  *     parquet TIMESTAMP(NANOS) in earlier driver corpus generations;
-  *     Spark rejects that type by default, the legacy flag maps it to
-  *     LONG which [[Tables.events]] converts exactly. Harmless for the
-  *     current µs-typed corpus (no NANOS column exists to remap), kept so
-  *     either generation loads. Set here at build time, never mutated
-  *     inside a query (shared-session hygiene).
   *   - UTC session timezone — the DuckDB oracle compares timestamps in
-  *     UTC.
+  *     UTC, and [[Tables]] reads the corpus's naive µs `events.ts` as a
+  *     session-zoned TIMESTAMP, which is the same epoch only under UTC.
+  *     A parquet TIMESTAMP(NANOS) column is not part of the corpus
+  *     contract and fails the scan.
   *   - shuffle partitions = cores — local[N] has no reason for 200
   *     partitions; on a real cluster this is sized to executors × cores.
   *   - warehouse dir under target/tmp — bucketed tables (q116) go
@@ -39,7 +35,6 @@ object Session {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", "target/tmp/warehouse")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       // Codegen class cache sized to the catalog (default 100): a
       // full-catalog run churns the default far past capacity between

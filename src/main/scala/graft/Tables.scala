@@ -1,21 +1,68 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.types.StructType
 
-/** Loaders for the driver corpus (TESTDATA.md): one parquet file per table
-  * under `sfDir`. Reads are plain `spark.read.parquet` so Catalyst gets
-  * full pushdown (PushedFilters / ReadSchema) into the scan.
+import scala.collection.immutable.ListMap
+
+/** Loaders for the corpus (TESTDATA.md): one parquet file or directory
+  * per table under `sfDir`.
+  *
+  * The ten table schemas are a declared contract, not something read
+  * back from the files: `apply` is `spark.read.schema(...).parquet`, so
+  * building a query launches no schema-inference job (an inferred read
+  * starts one job per table to read a footer). Column order and types
+  * are exactly what the testdata corpora, `e2ebench/gen_corpus.py`,
+  * [[ScaleGen]] and [[DegenCorpus]] write; `l_shipdate` and
+  * `o_orderdate` are naive microsecond timestamps (TIMESTAMP_NTZ).
+  * Scans still prune columns and push filters (ReadSchema /
+  * PushedFilters) exactly as an inferred read does.
+  *
+  * Drift is caught in two places: `TablesSpec` checks every declared
+  * schema against the inferred schema of all three testdata corpora, and
+  * a parquet column whose physical type cannot be read as its declared
+  * type fails the scan loudly instead of being adapted.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
+  /** The declared schema of each table, in `names` order.
+    *
+    * `events.ts` is the one declared type that differs from the file's:
+    * the corpus writes a naive µs timestamp, and declaring it TIMESTAMP
+    * reads the same µs value as a session-zoned instant. The session
+    * timezone is pinned to UTC ([[Session.builder]]), so the epoch is
+    * bit-identical to DuckDB's naive read — the type every downstream
+    * query and oracle was verified against.
+    */
+  val schemas: ListMap[String, StructType] = ListMap(
+    "region" -> "r_regionkey INT, r_name STRING",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+      "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "supplier" ->
+      "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, " +
+      "p_type STRING, p_size INT, p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, " +
+      "o_orderstatus STRING, o_totalprice DOUBLE, " +
+      "o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, " +
+      "l_suppkey BIGINT, l_linenumber INT, l_quantity DOUBLE, " +
+      "l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, " +
+      "l_returnflag STRING, l_linestatus STRING, " +
+      "l_shipdate TIMESTAMP_NTZ"),
+    "events" -> ("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
+      "event_type STRING, value DOUBLE, props STRING"),
+    "documents" -> ("doc_id BIGINT, text STRING, lang STRING, " +
+      "source STRING, n_chars BIGINT"),
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
+  ).map { case (n, ddl) => n -> StructType.fromDDL(ddl) }
+
+  val names: Seq[String] = schemas.keys.toSeq
 
   def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(path(sfDir, name))
+    spark.read.schema(schemas(name)).parquet(path(sfDir, name))
 
   def region(s: SparkSession, d: String): DataFrame = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = apply(s, d, "nation")
@@ -24,31 +71,7 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame = apply(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame = apply(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame = apply(s, d, "lineitem")
-  /** events.ts has shipped as two different parquet types across driver
-    * corpus generations, so the loader adapts by the SCHEMA it finds,
-    * normalizing both to session-zoned TimestampType at µs precision —
-    * the type every downstream query and oracle was verified against:
-    *
-    *   - TIMESTAMP(NANOS): Spark rejects it by default
-    *     ([PARQUET_TYPE_ILLEGAL]); [[Session.builder]] sets
-    *     `spark.sql.legacy.parquet.nanosAsLong=true`, the column arrives
-    *     as LONG nanos, and exact integer division truncates to µs (ns
-    *     epoch exceeds 2^53, so `/` via double would lose microseconds).
-    *   - timestamp[us] (isAdjustedToUTC=false): Spark reads
-    *     TIMESTAMP_NTZ; the cast to TimestampType reinterprets the same
-    *     µs value in the session timezone, which is pinned to UTC — a
-    *     bit-identical epoch, matching DuckDB's naive read.
-    */
-  def events(s: SparkSession, d: String): DataFrame = {
-    val df = apply(s, d, "events")
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        df.withColumn("ts", expr("CAST(ts AS TIMESTAMP)"))
-      case _ => df
-    }
-  }
+  def events(s: SparkSession, d: String): DataFrame = apply(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
 

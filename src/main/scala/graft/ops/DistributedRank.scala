@@ -86,7 +86,7 @@ object DistributedRank {
       sums.flatMap { case (nm, _) =>
         Seq(col(s"_dr_off_$nm"), col(s"tot_$nm"))
       }: _*)
-    val joined = local.join(broadcast(offsets), keys)
+    val joined = joinKeys(local, offsets, keys)
       .withColumn(rkCol, col("_dr_off_c") + col("_dr_rn"))
     sums.foldLeft(joined) { case (acc, (nm, _)) =>
       // first bucket of a group has a null (empty-frame) sum offset
@@ -112,8 +112,8 @@ object DistributedRank {
     * interpolated form can differ in the last ulp there; the guards
     * are part of bit-equality, not style). NULL values are excluded
     * exactly as the aggregate excludes them; a group whose values are
-    * all NULL disappears from the output (callers in this catalog
-    * have non-null value columns).
+    * all NULL disappears from the output, while a NULL part key is one
+    * group of its own, as in SQL `GROUP BY`.
     *
     * Returns one row per group: (partCols…, `out` array<double>) with
     * the array in the given percentage order.
@@ -144,7 +144,7 @@ object DistributedRank {
       .withColumn("_ep_hi", ceil(col("_ep_pos")))
     val probes =
       if (partCols.isEmpty) vt.crossJoin(broadcast(kf))
-      else vt.join(broadcast(kf), partCols)
+      else joinKeys(vt, kf, partCols)
     val vlo = col("_ep_vlo").cast("double")
     val vhi = col("_ep_vhi").cast("double")
     probes
@@ -198,9 +198,25 @@ object DistributedRank {
       .agg(max(c).as("_dr_bmax"))
       .withColumn("_dr_omax", max(col("_dr_bmax")).over(wOff))
       .select((keys.map(col) :+ col("_dr_omax")): _*)
-    local.join(broadcast(offsets), keys)
+    joinKeys(local, offsets, keys)
       .withColumn(outCol, greatest(col("_dr_lmax"), col("_dr_omax")))
       .drop("_dr_bkt", "_dr_lmax", "_dr_omax")
+  }
+
+  /** Inner join of `left` to the broadcast bounded frame `right` on
+    * `keys`, with the column layout of `left.join(right, keys)` (keys
+    * first). Keys match NULL to NULL (`<=>`): a NULL part key is one
+    * group, as in SQL `GROUP BY`, where a USING join would drop its
+    * rows.
+    */
+  private def joinKeys(
+      left: DataFrame, right: DataFrame, keys: Seq[String]): DataFrame = {
+    val r = keys.foldLeft(right)((acc, k) =>
+      acc.withColumnRenamed(k, s"_jk_$k"))
+    left.join(broadcast(r),
+        keys.map(k => col(k) <=> col(s"_jk_$k")).reduce(_ && _))
+      .select((keys ++ left.columns.filterNot(keys.contains) ++
+        right.columns.filterNot(keys.contains)).map(col): _*)
   }
 
   /** Spark/DuckDB `ntile(k)` from a 1-based rank and the group size —

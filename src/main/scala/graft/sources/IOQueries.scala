@@ -115,11 +115,12 @@ object IOQueries extends QueryModule {
     // Verify harness): transformed projection → parquet → read-back.
     "q82_parquet_roundtrip" -> ((s, d) => {
       val dir = scratch(d, "parquet")
-      Tables.orders(s, d)
+      val src = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice"), to_date(col("o_orderdate")).as("odate"))
-        .write.mode("overwrite").parquet(dir)
-      s.read.parquet(dir)
+      src.write.mode("overwrite").parquet(dir)
+      // read back with the writer's schema: no inference job (q81)
+      s.read.schema(src.schema).parquet(dir)
         .groupBy(col("o_orderstatus"))
         .agg(
           count(lit(1)).as("n"),
@@ -412,16 +413,17 @@ object IOQueries extends QueryModule {
     "q118_compaction" -> ((s, d) => {
       val frag = scratch(d, "frag")
       val compact = scratch(d, "compact")
-      Tables.documents(s, d)
+      val src = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-        .repartition(64)
+      src.repartition(64)
         .write.mode("overwrite").parquet(frag)
-      s.read.parquet(frag)
+      // both re-reads use the writer's schema: no inference job (q81)
+      s.read.schema(src.schema).parquet(frag)
         .hint("rebalance")
         .write.mode("overwrite")
         .option("maxRecordsPerFile", "2000")
         .parquet(compact)
-      s.read.parquet(compact)
+      s.read.schema(src.schema).parquet(compact)
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n"),
           sum(col("n_chars")).as("chars"),

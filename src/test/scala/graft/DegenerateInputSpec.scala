@@ -290,6 +290,29 @@ class DegenerateInputSpec extends AnyFunSuite {
     assert(!en.isNullAt(en.fieldIndex("p90_fertility")))
   }
 
+  // a NULL lang is one group of the oracle's GROUP BY lang; its
+  // percentiles must join back to it rather than read NULL. Expected
+  // values are the DuckDB oracle's on this corpus.
+  test("q219: a NULL-lang group keeps its percentiles") {
+    import spark.implicits._
+    val d = Paths.get("target/tmp/degenerate_q219_null_lang")
+      .toAbsolutePath.toString
+    Seq[(Long, String, Option[String], String, Long)](
+      (1L, "aa bb", Some("en"), "s0", 5L),
+      (2L, "aa bb", None, "s0", 4L),
+      (3L, "cc dd ee", None, "s0", 8L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$d/documents.parquet")
+    val rows = SparkEntry.queries("q219_tokenizer_fertility")(spark, d)
+      .collect().map(r => Option(r.getAs[String]("lang")) -> r).toMap
+    assert(rows.keySet == Set(None, Some("en")))
+    val nul = rows(None)
+    assert(nul.getAs[Long]("n_docs") == 2L)
+    assert(nul.getAs[Double]("p50_fertility") == 0.4375)
+    assert(nul.getAs[Double]("p90_fertility") == 0.4875)
+    assert(rows(Some("en")).getAs[Double]("p50_fertility") == 0.4)
+  }
+
   test("q177: an all-equal-price brand medians at the tie, full weight") {
     // total ties: the cumulative weight crosses tot/2 inside the one
     // tie group, so the median is the tied price with the full weight

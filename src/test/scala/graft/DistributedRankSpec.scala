@@ -159,4 +159,43 @@ class DistributedRankSpec extends AnyFunSuite {
     assert(one.head.getLong(0) == 1L && one.head.getLong(1) == 1L)
     assert(one.head.getLong(2) == 5L && one.head.getLong(3) == 5L)
   }
+
+  test("a NULL part key is one group in withRank, withExclMax and exactPercentiles") {
+    // SQL GROUP BY / PARTITION BY keep a NULL key as a group of its own;
+    // the bucket-offset join must not drop those rows
+    val df = (1 to 60).map { i =>
+      (i.toLong, if (i % 3 == 0) None else Some(s"g${i % 3}"),
+        (i % 7).toDouble)
+    }.toDF("k", "g", "v")
+    val w = Window.partitionBy(col("g")).orderBy(col("v"), col("k"))
+    val expected = df
+      .withColumn("rn_w", row_number().over(w).cast("long"))
+      .withColumn("mx_w", max(col("v")).over(
+        w.rowsBetween(Window.unboundedPreceding, -1)))
+      .select(col("k"), col("rn_w"), col("mx_w"))
+      .collect().map(r => (r.getLong(0), (r.getLong(1), r.get(2)))).toMap
+    val ranked = DistributedRank.withRank(df, Seq(col("v"), col("k")),
+        partCols = Seq("g"))
+      .select(col("k"), col("rk"), col("n_all")).collect()
+    assert(ranked.length == 60, "rows with a NULL part key were dropped")
+    for (r <- ranked) {
+      assert(r.getLong(1) == expected(r.getLong(0))._1)
+      assert(r.getLong(2) == 20L)
+    }
+    val mx = DistributedRank.withExclMax(df, Seq(col("v"), col("k")),
+        Seq("g"), col("v"), "mx")
+      .select(col("k"), col("mx")).collect()
+    assert(mx.length == 60)
+    for (r <- mx) assert(r.get(1) == expected(r.getLong(0))._2)
+    val ps = Seq(0.5, 0.9)
+    val agg = df.groupBy(col("g"))
+      .agg(percentile(col("v"), array(ps.map(lit): _*)).as("ps"))
+      .collect().map(r => (Option(r.getString(0)), r.getSeq[Double](1)))
+      .toMap
+    val got = DistributedRank.exactPercentiles(df, col("v"), ps, Seq("g"))
+      .collect().map(r => (Option(r.getString(0)), r.getSeq[Double](1)))
+      .toMap
+    assert(got.keySet.contains(None))
+    assert(got == agg)
+  }
 }

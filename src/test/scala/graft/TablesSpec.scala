@@ -1,0 +1,63 @@
+package graft
+
+import java.nio.file.Paths
+
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructType, TimestampNTZType}
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The corpus schema contract of [[Tables]]: the declared schemas are
+  * what the testdata corpora hold, and reading a table through them
+  * launches no Spark job while a query is built.
+  */
+class TablesSpec extends AnyFunSuite {
+  import SparkTestSession._
+
+  private val corpora = Seq("sf0.001", "sf0.01", "sf0.1")
+    .map(n => Paths.get(sf).getParent.resolve(n).toString)
+
+  private def fields(s: StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
+
+  test("declared schemas match the inferred schema of every testdata table") {
+    for (dir <- corpora; name <- Tables.names) {
+      val inferred = spark.read.parquet(Tables.path(dir, name)).schema
+      // events.ts: the files carry a naive µs timestamp that the
+      // contract declares as a session-zoned TIMESTAMP
+      val declared =
+        if (name == "events") StructType(Tables.schemas(name).map { f =>
+          if (f.name == "ts") f.copy(dataType = TimestampNTZType) else f
+        })
+        else Tables.schemas(name)
+      assert(fields(declared) === fields(inferred), s"$name in $dir")
+    }
+  }
+
+  test("events.ts reads as the UTC instant of the stored naive timestamp") {
+    val raw = spark.read.parquet(Tables.path(sf, "events"))
+      .select(col("event_id"), col("ts").cast("timestamp").as("ts"))
+    val declared = Tables.events(spark, sf).select(col("event_id"), col("ts"))
+    assert(declared.schema === raw.schema)
+    assert(declared.exceptAll(raw).isEmpty && raw.exceptAll(declared).isEmpty)
+  }
+
+  test("building the tpch_x10 queries launches no Spark job") {
+    val sc = spark.sparkContext
+    val group = "tables-spec-build"
+    sc.setJobGroup(group, "construction only")
+    try {
+      Seq("q182_min_cost_supplier", "q191_supplier_counts",
+        "q193_big_orders", "q195_waiting_suppliers")
+        .foreach(q => SparkEntry.queries(q)(spark, sf))
+      // status events arrive in order: once this later job is visible,
+      // every job the construction started is visible too
+      sc.setJobGroup(s"$group-sentinel", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+    } finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(s"$group-sentinel").isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(s"$group-sentinel").nonEmpty)
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty,
+      "query construction launched Spark jobs")
+  }
+}
