@@ -82,36 +82,16 @@ object Tables {
     * so every consumer can filter or fold them as its algorithm needs.
     *
     * This is the ONLY corpus-sized stage of the whole graph tier
-    * (lineitem⋈orders⋈customer⋈supplier → ≤|nations|² rows). Round
-    * 13-14 memoised a `persist()`ed copy per (session, sfDir); under
-    * the bench rules that is a cross-invocation cache of a
-    * corpus-derived intermediate (the warmup pass derives it and every
-    * timed graph query skips its only corpus-scale stage), so round 15
-    * replaced it with a per-invocation eager `localCheckpoint()`: each
-    * query derives the edge list from parquet when it is constructed
-    * (timed/verified), and its consumers — several graph algorithms
-    * read the frame from 2-4 branches plus bounded driver collects —
-    * iterate the materialized ≤|nations|² rows instead of re-planning
-    * the 4-table join per branch.
+    * (lineitem⋈orders⋈customer⋈supplier → ≤|nations|² rows). Each
+    * query derives it from parquet when it is built and materializes it
+    * through [[graft.ops.Materialize.frame]] (never a cross-invocation
+    * cache), so its consumers — several graph algorithms read the frame
+    * from 2-4 branches plus bounded driver collects — iterate the
+    * ≤|nations|² rows instead of re-planning the 4-table join per
+    * branch. Under `Materialize.withLazyPlans` the frame is this plan,
+    * one scan per base table (`PlanShapeSpec`).
     */
   def nationEdges(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, count, lit}
-    nationEdgesLazy(s, d)
-      // single-partition materialization: the aggregation itself runs
-      // fully parallel (map-side partials + a cpus-way reduce), and
-      // only the ≤|nations|² result squeezes into one block; without
-      // this every tiny downstream graph stage pays 32-task scheduling
-      // (measured r13: q166/q175 ~+0.5-1.0 s each at sf0.1).
-      .repartition(1)
-      .transform(graft.ops.Materialize.frame)
-  }
-
-  /** The edge derivation without the materialization — split out so
-    * tests can assert the pre-checkpoint plan (one scan per base
-    * table, ADVICE r14 #3) without executing it.
-    */
-  private[graft] def nationEdgesLazy(s: SparkSession, d: String)
-      : DataFrame = {
     import org.apache.spark.sql.functions.{col, count, lit}
     lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
       .join(orders(s, d).select(col("o_orderkey"), col("o_custkey")),
@@ -124,6 +104,13 @@ object Tables {
         col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("src"), col("dst"))
       .agg(count(lit(1)).as("cnt"))
+      // single-partition materialization: the aggregation itself runs
+      // fully parallel (map-side partials + a cpus-way reduce), and
+      // only the ≤|nations|² result squeezes into one block; without
+      // this every tiny downstream graph stage pays 32-task scheduling
+      // (measured r13: q166/q175 ~+0.5-1.0 s each at sf0.1).
+      .repartition(1)
+      .transform(graft.ops.Materialize.frame)
   }
 }
 

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{QueryModule, Tables}
+import graft.ops.Parity.{dec, dec19, lm, ln6, snap6}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -98,7 +99,6 @@ object CorpusSignals extends QueryModule {
     // top-100 cut is one TakeOrdered heap; |docs| is a 1-row
     // broadcast.
     "q325_word_burstiness" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val tok = Tables.documents(s, d)
         .select(col("doc_id"), explode(Text.words(col("text"))).as("w"))
         .filter(col("w") =!= "")
@@ -154,8 +154,6 @@ object CorpusSignals extends QueryModule {
     // funneled every doc through ONE task); everything shingle-sized
     // is hash-keyed.
     "q284_heaps_law" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(19,0)")
       // the vocab unit is the 60-bit md5 fold of the shingle, hashed
       // on BOTH engines (the q363 recipe, r14: the raw-string
       // first-occurrence aggregate dominated the 100× rung's memory —
@@ -188,24 +186,20 @@ object CorpusSignals extends QueryModule {
         .groupBy(col("k"), col("cp_doc"), col("cum_toks"))
         .agg(count(lit(1)).as("vocab"))
       val pts = vocab
-        .withColumn("lx",
-          floor(log(col("cum_toks").cast("double")) * 1e6 + 0.5)
-            .cast("long"))
-        .withColumn("ly",
-          floor(log(col("vocab").cast("double")) * 1e6 + 0.5)
-            .cast("long"))
+        .withColumn("lx", ln6(col("cum_toks")))
+        .withColumn("ly", ln6(col("vocab")))
       val ols = pts.agg(count(lit(1)).as("n_points"),
-        sum(dec(col("lx"))).as("sx"), sum(dec(col("ly"))).as("sy"),
-        sum(dec(col("lx")) * dec(col("lx"))).as("sxx"),
-        sum(dec(col("lx")) * dec(col("ly"))).as("sxy"))
+        sum(dec19(col("lx"))).as("sx"), sum(dec19(col("ly"))).as("sy"),
+        sum(dec19(col("lx")) * dec19(col("lx"))).as("sxx"),
+        sum(dec19(col("lx")) * dec19(col("ly"))).as("sxy"))
         // a degenerate curve (one checkpoint, or all-equal lx) has no
         // slope: NULL, never 0/0 = NaN (r14 one-doc-corpus guard;
         // mirrored in the oracle)
-        .withColumn("den", (dec(col("n_points")) * col("sxx")
+        .withColumn("den", (dec19(col("n_points")) * col("sxx")
           - col("sx") * col("sx")).cast("double"))
         .select(col("n_points"),
           when(col("den") =!= 0.0,
-            snap6((dec(col("n_points")) * col("sxy")
+            snap6((dec19(col("n_points")) * col("sxy")
               - col("sx") * col("sy")).cast("double") / col("den")))
             .as("beta"))
       pts.select(col("k"), col("cp_doc"), col("cum_toks"), col("vocab"))
@@ -248,8 +242,8 @@ object CorpusSignals extends QueryModule {
         .groupBy(col("source"))
         .agg(count(when(col("tf") >= 1, lit(1))).as("nt"))
         .agg(count(when(col("nt") >= 1, lit(1))).as("ns"))
-      val idfm = floor(log((col("ns").cast("double") + 1.0)
-        / (col("df").cast("double") + 1.0)) * 1e6 + 0.5).cast("long")
+      val idfm = ln6((col("ns").cast("double") + 1.0)
+        / (col("df").cast("double") + 1.0))
       val rk = tf
         .withColumn("df",
           count(lit(1)).over(Window.partitionBy(col("term"))))
@@ -300,9 +294,6 @@ object CorpusSignals extends QueryModule {
     // frame, the 1-row total broadcast back, TakeOrdered-50 readout
     // (bounded heap, no global sort).
     "q265_collocations" -> ((s, d) => {
-      def lm(c: Column): Column = when(c > 0L,
-        floor(log(c.cast("double")) * 1e6 + 0.5).cast("long"))
-        .otherwise(lit(0L))
       def t(k: Column): Column =
         k.cast("decimal(14,0)") * lm(k).cast("decimal(9,0)")
       val bg = Tables.documents(s, d)
@@ -376,8 +367,7 @@ object CorpusSignals extends QueryModule {
               / col("cw1").cast("double")
               * (col("nw2").cast("double") / col("nbb").cast("double")))
         .select(col("w1"), col("w2"),
-          (-floor(log(col("pkn")) * 1e6 + 0.5)).cast("long")
-            .as("cost_micros"))
+          (-ln6(col("pkn"))).as("cost_micros"))
       bigrams(docs).join(model, Seq("w1", "w2"))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_bigrams"),
@@ -455,8 +445,6 @@ object CorpusSignals extends QueryModule {
     // TakeOrdered heap for the top-1000 → rank window + OLS on that
     // bounded frame only.
     "q245_zipf_slope" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(19,0)")
       val top = Tables.documents(s, d)
         .select(explode(Text.words(col("text"))).as("w"))
         .filter(length(col("w")) >= 1)
@@ -467,18 +455,16 @@ object CorpusSignals extends QueryModule {
       val wRank = Window.orderBy(col("freq").desc, col("w"))
       top
         .withColumn("rk", row_number().over(wRank).cast("long"))
-        .withColumn("lx",
-          floor(log(col("rk").cast("double")) * 1e6 + 0.5).cast("long"))
-        .withColumn("ly",
-          floor(log(col("freq").cast("double")) * 1e6 + 0.5).cast("long"))
+        .withColumn("lx", ln6(col("rk")))
+        .withColumn("ly", ln6(col("freq")))
         .agg(count(lit(1)).as("n_terms"),
-          sum(dec(col("lx"))).as("sx"), sum(dec(col("ly"))).as("sy"),
-          sum(dec(col("lx")) * dec(col("lx"))).as("sxx"),
-          sum(dec(col("lx")) * dec(col("ly"))).as("sxy"))
+          sum(dec19(col("lx"))).as("sx"), sum(dec19(col("ly"))).as("sy"),
+          sum(dec19(col("lx")) * dec19(col("lx"))).as("sxx"),
+          sum(dec19(col("lx")) * dec19(col("ly"))).as("sxy"))
         .select(col("n_terms"),
-          snap6((dec(col("n_terms")) * col("sxy") - col("sx") * col("sy"))
+          snap6((dec19(col("n_terms")) * col("sxy") - col("sx") * col("sy"))
             .cast("double")
-            / (dec(col("n_terms")) * col("sxx") - col("sx") * col("sx"))
+            / (dec19(col("n_terms")) * col("sxx") - col("sx") * col("sx"))
             .cast("double")).as("zipf_slope"))
     }),
 
@@ -575,10 +561,6 @@ object CorpusSignals extends QueryModule {
     // self-join, q288's shape); the pair frame is |shared vocab| ×
     // |source pairs| — sources are a curated bounded set.
     "q291_jsd_sources" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
-      def ln6(c: Column): Column =
-        floor(log(c.cast("double")) * 1e6 + 0.5).cast("long")
       val muLn2 = 693147L // floor(ln(2)·1e6 + 0.5), spelled both engines
       val ct = Tables.documents(s, d)
         .select(col("source"), explode(split(col("text"), " ")).as("tok"))
@@ -624,8 +606,6 @@ object CorpusSignals extends QueryModule {
     // division, 6-snapped. Scale shape: one tokenize pass, map-side
     // combined per shingle; the readout aggregate is 4 counters.
     "q302_capture_recapture" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       Tables.documents(s, d)
         .withColumn("ws", Text.words(col("text")))
         .filter(size(col("ws")) >= 3)
@@ -667,10 +647,6 @@ object CorpusSignals extends QueryModule {
     // range-partitioned sort of the VOCABULARY frame (tokens, not
     // corpus rows); output is top-15 by G² with the BH verdict.
     "q329_keyness_fdr" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
-      def ln6(c: Column): Column =
-        floor(log(c.cast("double")) * 1e6 + 0.5).cast("long")
       val cnt = Tables.documents(s, d)
         .select((col("source") === "src0").as("focus"),
           explode(split(col("text"), " ")).as("tok"))
@@ -744,7 +720,6 @@ object CorpusSignals extends QueryModule {
     // cross-engine because the oracle folds identically — the ADVICE
     // r12 concern was the ONE-SIDED xxhash64, not hashing per se).
     "q363_novelty_curve" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val docsF = Tables.documents(s, d)
         .withColumn("ws", Text.words(col("text")))
         .filter(size(col("ws")) >= 3)
@@ -791,7 +766,6 @@ object CorpusSignals extends QueryModule {
     // pair join is token-keyed with bounded source fan-out; the
     // grid is |sources|² — a curated bounded set.
     "q367_vocab_overlap" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val st = Tables.documents(s, d)
         .select(col("source"), explode(split(col("text"), " ")).as("tok"))
         .filter(col("tok") =!= "")
@@ -838,8 +812,6 @@ object CorpusSignals extends QueryModule {
     */
   private[graft] def lmPerplexity(docs: DataFrame): DataFrame = {
     val V = 256
-    def lnCostMicros(p: org.apache.spark.sql.Column) =
-      -floor(log(p) * 1e6 + 0.5).cast("long")
     val toks = docs
       .select(col("doc_id"),
         filter(Text.words(coalesce(col("text"), lit(""))),
@@ -854,13 +826,12 @@ object CorpusSignals extends QueryModule {
     val vocab = tf.orderBy(col("c").desc, col("term").asc).limit(V)
     val costs = vocab.crossJoin(broadcast(nv))
       .select(col("term"),
-        lnCostMicros((col("c") + 1.0) / (col("n_corpus") + col("v") + 1.0))
+        (-ln6((col("c") + 1.0) / (col("n_corpus") + col("v") + 1.0)))
           .as("lc"))
       .agg(map_from_entries(collect_list(struct(col("term"), col("lc"))))
         .as("cmap"))
     val oovCost = nv.select(
-      lnCostMicros(lit(1.0) / (col("n_corpus") + col("v") + 1.0))
-        .as("oov_lc"))
+      (-ln6(lit(1.0) / (col("n_corpus") + col("v") + 1.0))).as("oov_lc"))
     toks.crossJoin(broadcast(costs)).crossJoin(broadcast(oovCost))
       .select(col("doc_id"), size(col("ts")).cast("long").as("n_tokens"),
         size(filter(col("ts"), t => element_at(col("cmap"), t).isNull))
@@ -897,8 +868,8 @@ object CorpusSignals extends QueryModule {
         col("a.doc_id") === col("b.doc_id") && col("a.term") < col("b.term"))
       .groupBy(col("a.term").as("term_a"), col("b.term").as("term_b"))
       .agg(count(lit(1)).as("c_ab"))
-    val pmi6 = floor(log(col("c_ab").cast("double") * col("n")
-      / (col("df_a").cast("double") * col("df_b"))) * 1e6 + 0.5) / 1e6
+    val pmi6 = snap6(log(col("c_ab").cast("double") * col("n")
+      / (col("df_a").cast("double") * col("df_b"))))
     pairs
       .join(broadcast(top.select(col("term").as("term_a"),
         col("df").as("df_a"))), "term_a")
@@ -941,9 +912,9 @@ object CorpusSignals extends QueryModule {
     val dfq = tf.filter(col("term").isin(qterms: _*))
       .groupBy(col("term"))
       .agg(count(when(col("tf") >= 1, lit(1))).as("df"))
-    val idf6 = floor(
+    val idf6 = snap6(
       log(lit(1.0) + (col("n").cast("double") - col("df") + 0.5)
-        / (col("df") + 0.5)) * 1e6 + 0.5) / 1e6
+        / (col("df") + 0.5)))
     val avgdl = col("sumdl").cast("double") / col("n").cast("double")
     // literals spelled as the decimals the oracle SQL parses: K1+1
     // computed in Scala (1.2 + 1) rounds differently than the parsed
@@ -983,8 +954,6 @@ object CorpusSignals extends QueryModule {
     * order it induces — is bit-identical cross-engine.
     */
   private[graft] def distinctiveTerms(docs: DataFrame): DataFrame = {
-    def snapLn(c: org.apache.spark.sql.Column) =
-      floor(log(c) * 1e6 + 0.5) / 1e6
     val terms = docs.select(col("source"),
       explode_outer(Text.words(col("text"))).as("term"))
       .filter(col("term") =!= "")
@@ -999,8 +968,9 @@ object CorpusSignals extends QueryModule {
       .join(totT, "term")
       .crossJoin(broadcast(tot))
       .withColumn("score",
-        snapLn((col("tf") + 1.0) / (col("tot_s") - col("tf") + 1.0))
-          - snapLn((col("tf_t") + 1.0) / (col("tot") - col("tf_t") + 1.0)))
+        snap6(log((col("tf") + 1.0) / (col("tot_s") - col("tf") + 1.0)))
+          - snap6(log((col("tf_t") + 1.0)
+            / (col("tot") - col("tf_t") + 1.0))))
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= 3)
       .select(col("source"), col("rnk"), col("term"), col("tf"),
@@ -1195,8 +1165,7 @@ object CorpusSignals extends QueryModule {
     val df = tf.groupBy(col("term"))
       .agg(count(when(col("tf") >= 1, lit(1))).as("df"))
     val n = docs.agg(count(lit(1)).as("n"))
-    val idf6 = floor(log((col("n") + 1.0) / (col("df") + 1.0)) * 1e6
-      + 0.5) / 1e6
+    val idf6 = snap6(log((col("n") + 1.0) / (col("df") + 1.0)))
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("score").desc, col("term").asc)
     tf.join(df, "term").crossJoin(broadcast(n))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{QueryModule, Tables}
+import graft.ops.Parity.{dec, ln6, snap6}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -502,14 +503,10 @@ object Curation extends QueryModule {
           sum(col("n_db")).as("cr"))
         .withColumn("t_total", sum(col("ct")).over(wAll))
         .withColumn("r_total", sum(col("cr")).over(wAll))
-        .withColumn("micro_t",
-          floor(log((col("ct") + 1L).cast("double")
-            / (col("t_total") + 64L).cast("double")) * 1e6 + 0.5)
-            .cast("long"))
-        .withColumn("micro_r",
-          floor(log((col("cr") + 1L).cast("double")
-            / (col("r_total") + 64L).cast("double")) * 1e6 + 0.5)
-            .cast("long"))
+        .withColumn("micro_t", ln6((col("ct") + 1L).cast("double")
+          / (col("t_total") + 64L).cast("double")))
+        .withColumn("micro_r", ln6((col("cr") + 1L).cast("double")
+          / (col("r_total") + 64L).cast("double")))
         .select(col("bucket").as("b"),
           (col("micro_t") - col("micro_r")).as("d_micro"))
       db.join(broadcast(dist), col("bucket") === col("b"))
@@ -554,7 +551,7 @@ object Curation extends QueryModule {
       val k = 100
       val h = Text.md5Long(col("doc_id").cast("string"), 8)
       val u = (h + lit(1L)).cast("double") / lit(4294967297.0)
-      val lnu = floor(log(u) * 1e6 + 0.5) / 1e6
+      val lnu = snap6(log(u))
       Tables.documents(s, d)
         .filter(col("n_chars") >= 1)
         .select(col("doc_id"), col("n_chars"),
@@ -650,8 +647,6 @@ object Curation extends QueryModule {
     // a reader sees occupancy). Scale shape: one pass to ≤m·2 bucket
     // counts, windows over that bounded frame.
     "q321_hash_uniformity" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val cnts = Tables.documents(s, d)
         .select(col("doc_id"),
           Text.md5Long(col("doc_id").cast("string"), 12).as("h"),
@@ -695,15 +690,12 @@ object Curation extends QueryModule {
     // expressions + ONE TakeOrdered top-25 heap — no shuffle at all
     // beyond the final k rows.
     "q319_gumbel_topk" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def mu(c: Column): Column =
-        floor(log(c.cast("double")) * 1e6 + 0.5).cast("long")
       val m = 1000000007L
       Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
         .withColumn("h", pmod(Text.md5Long(
           col("doc_id").cast("string"), 12), lit(m)))
-        .withColumn("mneg", -(mu(col("h") + 1L) - mu(lit(m + 1L))))
+        .withColumn("mneg", -(ln6(col("h") + 1L) - ln6(lit(m + 1L))))
         .withColumn("score", when(col("mneg") > 0L,
           snap6(snap6(log(col("n_chars").cast("double")))
             - snap6(log(col("mneg").cast("double") / 1e6)))))
@@ -716,8 +708,6 @@ object Curation extends QueryModule {
     }),
 
     "q303_neyman_allocation" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val budget = 10000L
       val wAll = Window.partitionBy()
       Tables.documents(s, d)
@@ -794,15 +784,13 @@ object Curation extends QueryModule {
     * as `weightedSample(k)`.
     */
   private[graft] def weightedSample(docs: DataFrame, k: Int): DataFrame = {
-    def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
     docs
       .select(col("doc_id"), col("source"), col("n_chars"))
       .withColumn("u", pmod(Text.md5Long(concat(
         col("doc_id").cast("string"), lit(":es")), 8),
         lit(1000000L)))
-      .withColumn("key6", (lit(13815511L)
-        - floor(log((col("u") + 1L).cast("double")) * 1e6 + 0.5)
-          .cast("long")).cast("double") / col("n_chars").cast("double"))
+      .withColumn("key6", (lit(13815511L) - ln6(col("u") + 1L))
+        .cast("double") / col("n_chars").cast("double"))
       .select(col("doc_id"), col("source"), col("n_chars"), col("u"),
         snap6(col("key6")).as("es_key"))
       .orderBy(col("es_key"), col("doc_id"))
@@ -815,8 +803,6 @@ object Curation extends QueryModule {
     * `quantileNormalize()`.
     */
   private[graft] def quantileNormalize(docsIn: DataFrame): DataFrame = {
-    def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-    def dec(c: Column): Column = c.cast("decimal(38,0)")
     val docs = docsIn
       .select(col("doc_id"), col("source"), col("n_chars"))
       // Both rank sides ride DistributedRank's q101-style distributed
@@ -904,7 +890,6 @@ object Curation extends QueryModule {
     */
   private[graft] def temperatureMix(docs: DataFrame,
                                     alpha: Double = 0.5): DataFrame = {
-    def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
     val byLang = docs
       .select(col("lang"),
         size(Text.words(col("text"))).cast("long").as("toks"))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{QueryModule, Tables}
+import graft.ops.Parity.snap6
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1001,8 +1002,8 @@ object Dedup extends QueryModule {
       names.as("a").join(names.as("b"),
           col("a.noun") === col("b.noun")
             && col("a.p_name") < col("b.p_name"))
-        .withColumn("jw", floor(call_function("graft_jaro_winkler",
-          col("a.p_name"), col("b.p_name")) * 1e6 + 0.5) / 1e6)
+        .withColumn("jw", snap6(call_function("graft_jaro_winkler",
+          col("a.p_name"), col("b.p_name"))))
         .filter(col("jw") >= 0.94)
         .select(col("a.p_name").as("name_a"), col("b.p_name").as("name_b"),
           col("jw"),

@@ -2,52 +2,45 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 
-/** The one place a query materializes a shared intermediate
-  * per-invocation (the guide §5 lineage-cut pattern): every call site
-  * that used to call `localCheckpoint()` directly now goes through
-  * [[frame]], which gives the catalog
+import scala.collection.mutable
+
+/** The one place a query materializes a shared intermediate: a frame
+  * that several branches of the same query consume (a pair graph, a
+  * shingle-hash frame, a rank base) goes through [[frame]], which
+  * `localCheckpoint()`s it while the query is built. Each consumer then
+  * reads the checkpointed rows instead of re-planning the subtree, and
+  * the subtree runs once per invocation.
   *
-  *   - a deployment-mode gate (ADVICE r14 #1): `localCheckpoint()`
-  *     stores unreplicated blocks and truncates lineage, so on a real
-  *     multi-node cluster an executor loss makes the query
-  *     unrecoverable. Setting `spark.graft.materialize=persist` at
-  *     session build switches every site to `persist()+count()` —
-  *     recomputable lineage, same per-invocation eagerness. The
-  *     default stays `localCheckpoint` (the single-node bench path,
-  *     where a lost "executor" is a lost JVM anyway and the
-  *     checkpoint's fresh LogicalRDD guarantees a warmup pass can
-  *     never serve a timed run from the CacheManager — persist()
-  *     plan-matching CAN, which is why persist mode must never be set
-  *     for bench/verify runs);
-  *   - a test seam (ADVICE r14 #3): [[withLazyPlans]] turns [[frame]]
-  *     into the identity for the enclosed construction, so plan tests
-  *     can count the corpus scans INSIDE what the eager checkpoint
-  *     would otherwise hide behind a `Scan ExistingRDD`.
+  * Never a cross-run cache: the checkpoint is taken inside query
+  * construction and recomputed from parquet on every invocation, and
+  * its fresh LogicalRDD cannot be served from the CacheManager to a
+  * later run. Its blocks are unreplicated, so on a multi-node cluster an
+  * executor loss makes the query unrecoverable; on one node a lost
+  * executor is a lost JVM anyway. The blocks are freed when the driver
+  * garbage-collects the RDD.
   *
-  * Never a cross-run cache in either mode: the materialization happens
-  * inside the timed/verified query construction and is recomputed from
-  * parquet on every invocation.
+  * Tests see what the checkpoint hides behind a `Scan ExistingRDD` with
+  * [[withLazyPlans]].
   */
 object Materialize {
-  private val lazyPlans: ThreadLocal[java.lang.Boolean] =
-    ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
+  // Non-null only inside withLazyPlans: the frames `frame` was given.
+  private val lazyFrames = new ThreadLocal[mutable.Buffer[DataFrame]]
 
-  /** Construct plans WITHOUT materialization on this thread — test
-    * hook only; the returned frames re-plan their subtree per consumer
-    * exactly like the pre-checkpoint r13 shapes.
+  /** Build with `f` on this thread WITHOUT materializing: [[frame]] is
+    * the identity and records each frame it was given. Returns `f`'s
+    * result and those frames (the subtrees a normal build would have
+    * checkpointed), in call order. Test hook: the returned result
+    * re-plans every subtree per consumer.
     */
-  private[graft] def withLazyPlans[T](f: => T): T = {
-    lazyPlans.set(java.lang.Boolean.TRUE)
-    try f finally lazyPlans.set(java.lang.Boolean.FALSE)
+  private[graft] def withLazyPlans[T](f: => T): (T, Seq[DataFrame]) = {
+    val held = mutable.Buffer.empty[DataFrame]
+    lazyFrames.set(held)
+    try (f, held.toSeq) finally lazyFrames.remove()
   }
 
   /** Materialize `df` eagerly for this invocation (see object doc). */
-  def frame(df: DataFrame): DataFrame =
-    if (lazyPlans.get()) df
-    else if (df.sparkSession.conf
-        .getOption("spark.graft.materialize").contains("persist")) {
-      val p = df.persist()
-      p.count()
-      p
-    } else df.localCheckpoint()
+  def frame(df: DataFrame): DataFrame = lazyFrames.get match {
+    case null => df.localCheckpoint()
+    case held => held += df; df
+  }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{QueryModule, Tables}
+import graft.ops.Parity.{dec, fix6, snap6}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -81,7 +82,7 @@ object Similarity extends QueryModule {
         aggregate(col("x"), lit(0.0), (a, v) => greatest(a, abs(v))))
       .filter(col("amax") > 0)
       .withColumn("scale6",
-        floor(lit(127.0) / col("amax") * 1e6 + 0.5) / 1e6)
+        snap6(lit(127.0) / col("amax")))
       .filter(col("scale6") > 0)
       .select(col("vec_id"), col("scale6"),
         transform(col("x"), v =>
@@ -211,7 +212,6 @@ object Similarity extends QueryModule {
     // identical doubles; the ≤|labels|-term sum is snapped once more
     // to absorb summation order.
     "q222_label_balance" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val g = Tables.embeddings(s, d)
         .groupBy(col("label")).agg(count(lit(1)).as("n_vecs"))
       val tot = g.agg(sum(col("n_vecs")).as("n_total"),
@@ -239,7 +239,6 @@ object Similarity extends QueryModule {
     // are order-free comparisons of identical doubles; the median goes
     // through the exact percentile with the q219 6-decimal snap.
     "q223_norm_audit" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       // round 14: the median rides DistributedRank.exactPercentiles
       // (bit-identical, helper doc) instead of the Percentile
       // aggregate whose per-label value map holds an embedding-scale
@@ -253,11 +252,13 @@ object Similarity extends QueryModule {
         .agg(count(lit(1)).as("n_vecs"),
           min(col("n2")).as("min_norm2"),
           max(col("n2")).as("max_norm2"))
+        // `<=>`: a NULL label is one group of the oracle's GROUP BY
         .join(graft.ops.DistributedRank.exactPercentiles(
             n2f, col("n2"), Seq(0.5), Seq("label"))
-          .select(col("label"),
+          .select(col("label").as("ps_label"),
             snap6(element_at(col("ps"), 1)).as("p50_norm2")),
-          Seq("label"))
+          col("label") <=> col("ps_label"), "left")
+        .drop("ps_label")
         .orderBy(col("label"))
     }),
 
@@ -266,8 +267,8 @@ object Similarity extends QueryModule {
         .filter(col("embedding").isNotNull)
         .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "v")))
         .groupBy(col("label"), col("dim"))
-        .agg((floor(avg(col("v").cast("double")) * 1e6 + 0.5) / 1e6)
-          .as("cv"), count(lit(1)).as("nv"))
+        .agg(snap6(avg(col("v").cast("double"))).as("cv"),
+          count(lit(1)).as("nv"))
         .groupBy(col("label"))
         .agg(array_sort(collect_list(struct(col("dim"), col("cv"))))
           .as("pairs"), max(col("nv")).as("n"))
@@ -305,8 +306,7 @@ object Similarity extends QueryModule {
         .select(col("label"),
           posexplode(col("embedding")).as(Seq("dim", "v")))
         .groupBy(col("label"), col("dim"))
-        .agg((floor(avg(col("v").cast("double")) * 1e6 + 0.5) / 1e6)
-          .as("cv"))
+        .agg(snap6(avg(col("v").cast("double"))).as("cv"))
         .groupBy(col("label"))
         .agg(array_sort(collect_list(struct(col("dim"), col("cv"))))
           .as("pairs"))
@@ -326,8 +326,8 @@ object Similarity extends QueryModule {
         .agg(min(when(col("label") === col("cid"), col("dist2"))).as("a2"),
           min(when(col("label") =!= col("cid"), col("dist2"))).as("b2"))
         .withColumn("s_micro", when(den > 0,
-          floor((sqrt(col("b2")) - sqrt(col("a2"))) / den * 1e6 + 0.5)
-            .cast("long")).otherwise(lit(0L)))
+          fix6((sqrt(col("b2")) - sqrt(col("a2"))) / den))
+          .otherwise(lit(0L)))
         .groupBy(col("label"))
         .agg(count(lit(1)).as("n_vecs"),
           (sum(col("s_micro")).cast("double")
@@ -360,8 +360,7 @@ object Similarity extends QueryModule {
           posexplode(col("embedding")).as(Seq("dim", "v")))
         .groupBy(col("label"), (col("dim") / 8).cast("int").as("sub"),
           col("dim"))
-        .agg((floor(avg(col("v").cast("double")) * 1e6 + 0.5) / 1e6)
-          .as("cv"))
+        .agg(snap6(avg(col("v").cast("double"))).as("cv"))
         .groupBy(col("label"), col("sub"))
         .agg(array_sort(collect_list(struct(col("dim"), col("cv"))))
           .as("pairs"))
@@ -373,10 +372,10 @@ object Similarity extends QueryModule {
         .select(col("vec_id"), dvec(col("embedding")).as("x"))
       val assigned = pts.crossJoin(broadcast(cent))
         .withColumn("xs", slice(col("x"), col("sub") * 8 + 1, lit(8)))
-        .withColumn("dist", floor(greatest(
+        .withColumn("dist", fix6(greatest(
           dot(col("xs"), col("xs"))
             - lit(2.0) * dot(col("xs"), col("csub")) + col("cc"),
-          lit(0.0)) * 1e6 + 0.5).cast("long"))
+          lit(0.0))))
         .select(col("vec_id"), col("sub"),
           struct(col("dist"), col("cid")).as("dc"))
       val piv = assigned.groupBy(col("vec_id"))
@@ -528,7 +527,7 @@ object Similarity extends QueryModule {
           col("id").as("coh_dot"))
       } else {
         // identical IEEE op order to the oracle's floor(127.0/amax*1e6+0.5)/1e6
-        val gsc = math.floor(127.0 / amaxG * 1e6 + 0.5) / 1e6
+        val gsc = snap6(127.0 / amaxG)
         val quant = x.select(col("vec_id"),
           transform(col("x"), v => greatest(lit(-127L), least(lit(127L),
             floor(v * lit(gsc) + 0.5).cast("long")))).as("qs"))
@@ -618,7 +617,7 @@ object Similarity extends QueryModule {
         .withColumn("rank", row_number().over(wx)).filter(col("rank") <= K)
         .select(col("query_id"), col("vec_id"), col("rank"))
       def units(rel: Column, rank: Column): Column = {
-        val disc = floor(log2(rank.cast("double") + 1.0) * 1e6 + 0.5) / 1e6
+        val disc = snap6(log2(rank.cast("double") + 1.0))
         floor(rel.cast("double") / disc * 1e9 + 0.5).cast("long")
       }
       val dcg = run
@@ -764,8 +763,8 @@ object Similarity extends QueryModule {
         .select(col("label"), col("half"),
           posexplode(col("embedding")).as(Seq("dim", "v")))
         .groupBy(col("label"), col("half"), col("dim"))
-        .agg((floor(avg(col("v").cast("double")) * 1e6 + 0.5) / 1e6)
-          .as("cv"), count(lit(1)).as("nv"))
+        .agg(snap6(avg(col("v").cast("double"))).as("cv"),
+          count(lit(1)).as("nv"))
         .groupBy(col("label"), col("half"))
         .agg(array_sort(collect_list(struct(col("dim"), col("cv"))))
           .as("pairs"), max(col("nv")).as("n"))
@@ -989,7 +988,6 @@ object Similarity extends QueryModule {
     // on adjacent ids riding ReuseExchange; all math is per-row
     // codegen, no shuffle beyond the bounded per-label rollup.
     "q297_jl_distortion" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val e = Tables.embeddings(s, d)
       val b = e.select((col("vec_id") - 1L).as("bid"),
         col("embedding").as("emb_b"))
@@ -1013,8 +1011,8 @@ object Similarity extends QueryModule {
         .select(col("label"), orig2.as("orig2"), proj2.as("proj2"))
         .filter(col("orig2") > 0.0)
         .select(col("label"),
-          floor(col("proj2") / (lit(JlProjDims.toDouble) * col("orig2"))
-            * 1e6 + 0.5).cast("long").as("r6"))
+          fix6(col("proj2") / (lit(JlProjDims.toDouble) * col("orig2")))
+            .as("r6"))
         .groupBy(col("label"))
         .agg(count(lit(1)).as("n_pairs"),
           snap6(sum(col("r6")).cast("double")
@@ -1041,12 +1039,10 @@ object Similarity extends QueryModule {
     // out |labels|× per dim — linear in vectors with a bounded
     // constant; means fold on the label frame.
     "q347_silhouette" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val x = Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"),
           posexplode(dvec(col("embedding"))).as(Seq("dim", "xv")))
-        .withColumn("x6", floor(col("xv") * 1e6 + 0.5).cast("long"))
+        .withColumn("x6", fix6(col("xv")))
         .select(col("vec_id"), col("label"), col("dim"), col("x6"))
       val cent = x.groupBy(col("label").as("cl"), col("dim"))
         .agg(sum(col("x6")).as("sld"), count(lit(1)).as("cnt"))
@@ -1061,8 +1057,8 @@ object Similarity extends QueryModule {
         .agg(max(when(col("label") === col("cl"), col("dist"))).as("a"),
           min(when(col("label") =!= col("cl"), col("dist"))).as("b"))
         .withColumn("s6", when(greatest(col("a"), col("b")) > 0.0,
-          floor((col("b") - col("a")) / greatest(col("a"), col("b"))
-            * 1e6 + 0.5).cast("long")).otherwise(0L))
+          fix6((col("b") - col("a")) / greatest(col("a"), col("b"))))
+          .otherwise(0L))
       sil.groupBy(col("label"))
         .agg(count(lit(1)).as("n_vecs"),
           snap6(sum(col("s6")).cast("double")
@@ -1086,12 +1082,10 @@ object Similarity extends QueryModule {
     // |dims| aggregate broadcast back — one for the scores);
     // everything folds map-side; one row out.
     "q354_anisotropy" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val x = Tables.embeddings(s, d)
         .select(col("vec_id"),
           posexplode(dvec(col("embedding"))).as(Seq("dim", "xv")))
-        .withColumn("x6", floor(col("xv") * 1e6 + 0.5).cast("long"))
+        .withColumn("x6", fix6(col("xv")))
         .select(col("vec_id"), col("dim"), col("x6"))
       val cent = x.groupBy(col("dim"))
         .agg(sum(col("x6")).as("sd"), count(lit(1)).as("n"))
@@ -1105,10 +1099,10 @@ object Similarity extends QueryModule {
           sum(dec(col("x6")) * dec(col("x6"))).as("x2"))
       per.crossJoin(broadcast(mnorm))
         .withColumn("c6", when(col("x2") > 0 && col("m2") > 0,
-          floor(col("dt").cast("double")
+          fix6(col("dt").cast("double")
             / (sqrt(col("x2").cast("double"))
-              * sqrt(col("m2").cast("double"))) * 1e6 + 0.5)
-            .cast("long")).otherwise(0L))
+              * sqrt(col("m2").cast("double")))))
+          .otherwise(0L))
         .withColumn("nrm6", floor(sqrt(col("x2").cast("double"))
           + 0.5).cast("long"))
         .groupBy(col("nv"), col("ndims"))
@@ -1133,7 +1127,6 @@ object Similarity extends QueryModule {
     // per-label mean (q169 rule). Probes with no same-label neighbor
     // contribute rr = 0 (standard MRR).
     "q365_label_mrr" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val corpus = withNorm(Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"), dvec(col("embedding")).as("emb")))
       val probes = corpus.filter(col("vec_id") < 50)
@@ -1169,7 +1162,6 @@ object Similarity extends QueryModule {
     // is a division of exact longs. Same bounded-probe scale shape
     // as q365.
     "q366_knn_accuracy" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val corpus = withNorm(Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"), dvec(col("embedding")).as("emb")))
       val probes = corpus.filter(col("vec_id") < 50)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.ops.Parity.{dec, fix6, snap6}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -64,7 +65,6 @@ object Stats {
       maxBucket: Int): DataFrame = {
     require(bucketWidth > 0.0,
       s"psiDrift bucketWidth must be > 0, got $bucketWidth")
-    def snap6(c: org.apache.spark.sql.Column) = floor(c * 1e6 + 0.5) / 1e6
     val cells = df
       .select(col(groupCol),
         least(floor(col(valueCol) / lit(bucketWidth)),
@@ -113,7 +113,6 @@ object Stats {
   private[graft] def kmRmst(df: DataFrame, tCol: String,
       eventCol: String, tau: Long): DataFrame = {
     require(tau > 0L, s"kmRmst horizon tau must be > 0, got $tau")
-    def snap6(c: org.apache.spark.sql.Column) = floor(c * 1e6 + 0.5) / 1e6
     val byT = df
       .select(col(tCol).cast("long").as("t"), col(eventCol).as("ev"))
       .groupBy(col("t"))
@@ -134,7 +133,7 @@ object Stats {
         .otherwise(0L)).over(wCum))
       .withColumn("ln_survival", sum(col("term")).over(wCum))
       .withColumn("s6", when(col("dead") === 1L, lit(0L)).otherwise(
-        floor(exp(col("ln_survival")) * 1e6 + 0.5).cast("long")))
+        fix6(exp(col("ln_survival")))))
       .withColumn("t_next", coalesce(lead(col("t"), 1).over(
         Window.orderBy(col("t"))), lit(tau)))
       .withColumn("width", greatest(least(col("t_next"), lit(tau))
@@ -160,8 +159,6 @@ object Stats {
     */
   private[graft] def capability(df: DataFrame, xCol: String,
       lsl: Long, usl: Long): DataFrame = {
-    def snap6(c: org.apache.spark.sql.Column) = floor(c * 1e6 + 0.5) / 1e6
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     df.select(col(xCol).cast("long").as("x"))
       .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
         sum(dec(col("x")) * dec(col("x"))).as("sxx"),

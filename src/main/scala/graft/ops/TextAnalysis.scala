@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{QueryModule, Tables}
+import graft.ops.Parity.{dec, dec19, fix6, lm, ln6, snap6}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -42,7 +43,6 @@ object TextAnalysis extends QueryModule {
     // corpus pass of per-row flags map-side-combined to the 10-bin
     // frame; windows run over bins only.
     "q241_calibration" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       // split ONCE into an alias — the q58b single-parse discipline:
       // inlining Text.words(text) into every derived column re-runs
       // the regex+split per reference in the INTERPRETED projection
@@ -64,9 +64,8 @@ object TextAnalysis extends QueryModule {
         .withColumn("gold",
           col("n_big_distinct") * 10 >= (col("n_words") - 1L) * 9)
         .withColumn("score_micro",
-          floor(col("n_distinct").cast("double")
-            / col("n_words").cast("double") * 1e6 + 0.5)
-            .cast("long"))
+          fix6(col("n_distinct").cast("double")
+            / col("n_words").cast("double")))
         .withColumn("bin",
           least(expr("score_micro DIV 100000"), lit(9L)))
       val bins = scored.groupBy(col("bin"))
@@ -129,7 +128,6 @@ object TextAnalysis extends QueryModule {
     // c·ln c term is snapped, the ≤V-term sum snapped (q222 recipe),
     // H and H/ln n formed by single divisions of identical doubles.
     "q251_word_entropy" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       Tables.documents(s, d)
         .withColumn("ws", Text.words(col("text")))
         .withColumn("n_tokens", size(col("ws")).cast("long"))
@@ -165,8 +163,6 @@ object TextAnalysis extends QueryModule {
     // one tokenize pass map-side-combines to (lang, word) counts; the
     // spectrum folds that frame per language.
     "q314_renyi_spectrum" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val cnt = Tables.documents(s, d)
         .select(col("lang"), explode(Text.words(col("text"))).as("w"))
         .filter(col("w") =!= "")
@@ -177,8 +173,7 @@ object TextAnalysis extends QueryModule {
           count(lit(1)).as("n_types"),
           sum(dec(col("c")) * dec(col("c"))).as("sum_c2"),
           max(col("c")).as("c_max"),
-          sum(dec(col("c")) * dec(floor(log(col("c").cast("double"))
-            * 1e6 + 0.5).cast("long"))).as("sum_cmu"))
+          sum(dec(col("c")) * dec(ln6(col("c")))).as("sum_cmu"))
         .withColumn("ln_n", snap6(log(col("n_tokens").cast("double"))))
         .select(col("lang"), col("n_tokens"), col("n_types"),
           snap6(log(col("n_types").cast("double"))).as("h0_hartley"),
@@ -204,7 +199,6 @@ object TextAnalysis extends QueryModule {
     // ≤|langs|·|distinct r| rows; the r+1 lookup is a self-join on
     // that bounded ladder, never on corpus rows.
     "q315_good_turing" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val cnt = Tables.documents(s, d)
         .select(col("lang"), explode(Text.words(col("text"))).as("w"))
         .filter(col("w") =!= "")
@@ -240,7 +234,6 @@ object TextAnalysis extends QueryModule {
     // is total on N₂ = 0. Exact longs, two single divisions. Scale
     // shape: tokenize → (lang, word) counts → ≤|langs| fold.
     "q323_chao_richness" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val cnt = Tables.documents(s, d)
         .select(col("lang"), explode(Text.words(col("text"))).as("w"))
         .filter(col("w") =!= "")
@@ -396,7 +389,6 @@ object TextAnalysis extends QueryModule {
     // a 6-decimal floor snap to absorb the engines' 1-ulp interpolation
     // difference. One corpus-scale aggregation to a ≤|langs| frame.
     "q219_tokenizer_fertility" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       // round 14: the per-doc ratio quantiles ride
       // DistributedRank.exactPercentiles (bit-identical, helper doc)
       // instead of the Percentile aggregate whose per-lang value map
@@ -490,7 +482,7 @@ object TextAnalysis extends QueryModule {
             .as("n_quality"))
       val dup = docs.agg(count_distinct(
         sha2(Text.norm(col("text")).cast("binary"), 256)).as("n_unique"))
-      val ln6p = floor(log(col("p")) * 1e6 + 0.5) / 1e6
+      val ln6p = snap6(log(col("p")))
       val ent = docs.groupBy(col("lang")).agg(count(lit(1)).as("nl"))
         .crossJoin(broadcast(docs.agg(count(lit(1)).as("n"))))
         .select((col("nl").cast("double") / col("n")).as("p"))
@@ -676,7 +668,6 @@ object TextAnalysis extends QueryModule {
     // corpus). Three tokenize scans (main + two marginals) is the
     // q255 statelessness trade.
     "q283_length_ttr_corr" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val base = Tables.documents(s, d)
         .withColumn("ws", Text.words(col("text")))
         .filter(size(col("ws")) >= 1)
@@ -694,7 +685,6 @@ object TextAnalysis extends QueryModule {
         .select(col("lang"), col(v),
           (lit(2L) * (col("cum") - col("f")) + col("f") + 1L)
             .as(s"r2_$v"))
-      def dec(c: Column): Column = c.cast("decimal(19,0)")
       // doubled midranks sum to n(n+1) exactly (ties included), so the
       // centered moments reduce algebraically to raw rank products:
       // Σdxdy = Σr2x·r2y − n(n+1)², Σdx² = Σr2x² − n(n+1)² — no
@@ -704,11 +694,11 @@ object TextAnalysis extends QueryModule {
         .join(rankMap("y"), Seq("lang", "y"))
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
-          sum(dec(col("r2_x")) * dec(col("r2_y"))).as("pxy"),
-          sum(dec(col("r2_x")) * dec(col("r2_x"))).as("pxx"),
-          sum(dec(col("r2_y")) * dec(col("r2_y"))).as("pyy"))
-        .withColumn("c0", dec(col("n_docs")) * dec(col("n_docs") + 1L)
-          * dec(col("n_docs") + 1L))
+          sum(dec19(col("r2_x")) * dec19(col("r2_y"))).as("pxy"),
+          sum(dec19(col("r2_x")) * dec19(col("r2_x"))).as("pxx"),
+          sum(dec19(col("r2_y")) * dec19(col("r2_y"))).as("pyy"))
+        .withColumn("c0", dec19(col("n_docs")) * dec19(col("n_docs") + 1L)
+          * dec19(col("n_docs") + 1L))
         .select(col("lang"), col("n_docs"),
           (col("pxy") - col("c0")).as("sxy"),
           (col("pxx") - col("c0")).as("sxx"),
@@ -735,9 +725,6 @@ object TextAnalysis extends QueryModule {
     // exact for N ≤ 1e14 bigrams, one double division). Top bigram is
     // an exact struct-max (max count, max bigram on ties).
     "q272_char_bigrams" -> ((s, d) => {
-      def lm(c: Column): Column = when(c > 0L,
-        floor(log(c.cast("double")) * 1e6 + 0.5).cast("long"))
-        .otherwise(lit(0L))
       val cells = Tables.documents(s, d)
         .withColumn("nt", Text.norm(col("text")))
         .filter(length(col("nt")) >= 2)
@@ -775,7 +762,6 @@ object TextAnalysis extends QueryModule {
     // one corpus pass (the per-row classifier is a codegen'd filter
     // chain), map-side-combined cell counts, ≤|langs|² rows.
     "q368_langid_confusion" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val hits = profiles.map { case (l, ws) =>
         l -> expr(s"CAST(size(filter(wrds, w -> w IN ${inList(ws)})) AS LONG)")
       }

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryModule, Tables}
 import graft.ops.DistributedRank
+import graft.ops.Parity.{dec, dec19, fix6, idiv, ln6, snap6}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -252,18 +253,19 @@ object Aggregates extends QueryModule {
       // p50_exact via exactPercentiles (round 14, the q39b rationale) —
       // the approx sketches stay in the grouped agg, the exact median
       // joins in from the deduped-value rank frame, bit-identical to
-      // percentile(l_extendedprice, 0.5).
-      val sketch = li.groupBy(col("l_returnflag"))
+      // percentile(l_extendedprice, 0.5). Both joins match NULL to NULL
+      // (`<=>`): a NULL flag is one group of the oracle's GROUP BY.
+      val sketch = li.groupBy(col("l_returnflag").as("sk_flag"))
         .agg(
           approx_count_distinct(col("l_partkey"), 0.01).as("acd_parts"),
           percentile_approx(col("l_extendedprice"), lit(0.5), lit(10000)).as("p50_approx"))
         .join(graft.ops.DistributedRank.exactPercentiles(
             li.select(col("l_returnflag"), col("l_extendedprice")),
             col("l_extendedprice"), Seq(0.5), Seq("l_returnflag"))
-          .select(col("l_returnflag"),
+          .select(col("l_returnflag").as("ps_flag"),
             element_at(col("ps"), 1).as("p50_exact")),
-          Seq("l_returnflag"))
-      exact.join(sketch, Seq("l_returnflag"))
+          col("sk_flag") <=> col("ps_flag"), "left")
+      exact.join(sketch, col("l_returnflag") <=> col("sk_flag"))
         .select(col("l_returnflag"), col("exact_parts"),
           (abs(col("acd_parts") - col("exact_parts"))
             <= col("exact_parts") * 0.05).as("acd_within_5pct"),
@@ -308,11 +310,12 @@ object Aggregates extends QueryModule {
       val ev = Tables.events(s, d)
       val dir =
         s"target/tmp/agg/${d.replaceAll("[^A-Za-z0-9.]", "_")}/hll_shards"
-      ev.groupBy(col("event_type"))
+      val shards = ev.groupBy(col("event_type"))
         .agg(expr("hll_sketch_agg(user_id, 12)").as("sk"),
           count(lit(1)).as("n_rows"))
-        .write.mode("overwrite").parquet(dir)
-      val merged = s.read.parquet(dir).agg(
+      shards.write.mode("overwrite").parquet(dir)
+      // read back with the writer's schema: no inference job (q82)
+      val merged = s.read.schema(shards.schema).parquet(dir).agg(
         count(lit(1)).as("n_shards"),
         sum(col("n_rows")).as("rows_total"),
         // every shard was built at lgK 12, so the strict union (no
@@ -347,8 +350,6 @@ object Aggregates extends QueryModule {
         .agg(round(sum(col("value")), 4).as("m"))
         .withColumn("v",
           pmod(col("user_id") * 2654435761L + 7919L, lit(2)))
-      def snap6(c: org.apache.spark.sql.Column) =
-        floor(c * 1e6 + 0.5) / 1e6
       val r = metrics.agg(
         count(when(col("v") === 0, 1)).as("n_a"),
         count(when(col("v") === 1, 1)).as("n_b"),
@@ -421,9 +422,11 @@ object Aggregates extends QueryModule {
         .groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n_orders"),
           sum(price).cast("decimal(24,2)").as("total"))
-      partials(Tables.orders(s, d).filter(col("o_orderdate") < cutoff))
-        .write.mode("overwrite").parquet(dir)
-      s.read.parquet(dir)
+      val history =
+        partials(Tables.orders(s, d).filter(col("o_orderdate") < cutoff))
+      history.write.mode("overwrite").parquet(dir)
+      // read back with the writer's schema: no inference job (q82)
+      s.read.schema(history.schema).parquet(dir)
         .unionByName(partials(
           Tables.orders(s, d).filter(col("o_orderdate") >= cutoff)))
         .groupBy(col("o_custkey"))
@@ -543,9 +546,9 @@ object Aggregates extends QueryModule {
           sum((col("cents") * col("cents")).cast("decimal(38,0)"))
             .as("sum_c2"))
         .select(col("s_nationkey"), col("n_suppliers"),
-          (floor(col("sum_c2").cast("double")
-            / (col("sum_c").cast("double") * col("sum_c").cast("double"))
-            * 1e6 + 0.5) / 1e6).as("hhi"))
+          snap6(col("sum_c2").cast("double")
+            / (col("sum_c").cast("double") * col("sum_c").cast("double")))
+            .as("hhi"))
         .orderBy(col("s_nationkey"))
     }),
 
@@ -667,7 +670,6 @@ object Aggregates extends QueryModule {
     // global rank window runs over the BOUNDED distinct-value frame
     // (2-decimal money values), never corpus rows.
     "q231_mannwhitney" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       // every downstream quantity derives from ONE (value, type) count
       // frame via windows — a groupBy-totals + join-back would
       // instantiate the corpus subtree three times (measured 2 scans
@@ -721,7 +723,6 @@ object Aggregates extends QueryModule {
     // per-customer before the join; rank windows run per segment
     // over the customer dimension — the canonical rank shape.
     "q236_spearman" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val spend = Tables.orders(s, d)
         .groupBy(col("o_custkey"))
         .agg(sum(col("o_totalprice").cast("decimal(12,2)")).as("spend"))
@@ -750,7 +751,6 @@ object Aggregates extends QueryModule {
             (lit(2L) * (col("run_cnt") - col("cnt")) + col("cnt") + 1L)
               .as(out),
             col("tot_cnt").as(s"n_$out"))
-      def dec(c: Column): Column = c.cast("decimal(19,0)")
       val ranked = base
         .join(rankMap("x", "r2x"), Seq("seg", "x"))
         .join(rankMap("y", "r2y"), Seq("seg", "y"))
@@ -759,9 +759,9 @@ object Aggregates extends QueryModule {
         .withColumn("dy", col("r2y") - (col("n") + 1L))
       ranked.groupBy(col("seg"))
         .agg(max(col("n")).as("n_customers"),
-          sum(dec(col("dx")) * dec(col("dy"))).as("sxy"),
-          sum(dec(col("dx")) * dec(col("dx"))).as("sxx"),
-          sum(dec(col("dy")) * dec(col("dy"))).as("syy"))
+          sum(dec19(col("dx")) * dec19(col("dy"))).as("sxy"),
+          sum(dec19(col("dx")) * dec19(col("dx"))).as("sxx"),
+          sum(dec19(col("dy")) * dec19(col("dy"))).as("syy"))
         .select(col("seg"), col("n_customers"),
           when(col("sxx") > 0 && col("syy") > 0,
             snap6(col("sxy").cast("double")
@@ -872,7 +872,6 @@ object Aggregates extends QueryModule {
     // corpus rows (30 days at every sf here), so days²·|types| pairs
     // stay a dimension-sized frame at any corpus scale.
     "q288_kendall_tau" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val daily = Tables.events(s, d)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("x"), round(sum(col("value")), 4).as("y"))
@@ -919,8 +918,6 @@ object Aggregates extends QueryModule {
     // combined counts, rank windows over the bounded distinct-value
     // frame (2-decimal money values), never corpus rows.
     "q290_kruskal_wallis" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val byVal = Tables.events(s, d)
         .groupBy(col("value"), col("event_type"))
         .agg(count(lit(1)).as("ca"))
@@ -980,8 +977,6 @@ object Aggregates extends QueryModule {
     // collect_set sizes over the cell frame — never a distinct
     // re-aggregation of the corpus subtree.
     "q292_cramers_v" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val wAll = Window.partitionBy()
       val cells = Tables.events(s, d)
         .groupBy(col("event_type"),
@@ -1031,7 +1026,6 @@ object Aggregates extends QueryModule {
     // business domain); the j≤i≤k expansion is |levels|³ ≤ ~1.3e3
     // rows of pure dimension data — corpus-size-free.
     "q294_isotonic_response" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val wOrd = Window.orderBy(col("pct"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val levels = Tables.lineitem(s, d)
@@ -1085,8 +1079,6 @@ object Aggregates extends QueryModule {
     // shape: one part⋈lineitem pass map-side combines to the
     // |brands|×4 cell frame; the pooling is windows over it.
     "q301_mantel_haenszel" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val wAll = Window.partitionBy()
       def cnt(p: Column): Column = sum(when(p, 1L).otherwise(0L))
       val cells = Tables.lineitem(s, d)
@@ -1139,10 +1131,6 @@ object Aggregates extends QueryModule {
     // orders pass joined to the customer dimension; nation totals
     // ride windows; the decomposition runs on the ≤|nations| frame.
     "q305_theil_decomposition" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
-      def ln6(c: Column): Column =
-        floor(log(c.cast("double")) * 1e6 + 0.5).cast("long")
       val spend = Tables.orders(s, d)
         .groupBy(col("o_custkey"))
         .agg((sum(col("o_totalprice").cast("decimal(12,2)"))
@@ -1222,8 +1210,6 @@ object Aggregates extends QueryModule {
     // Scale shape: ONE corpus pass map-side-combines to the ≤|levels|
     // per-linestatus frame; the test folds ≤11 exact terms.
     "q317_trend_test" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val lv = Tables.lineitem(s, d)
         .groupBy(col("l_linestatus"),
           floor(col("l_discount") * 100 + 0.5).cast("long").as("i"))
@@ -1272,8 +1258,6 @@ object Aggregates extends QueryModule {
     // grow with the corpus); then a map-side-combined fold to the
     // ≤|types| frame.
     "q318_l_moments" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       // rank on the exact cents (a monotone image of the 2-decimal
       // value, so the order is identical to ordering on value itself)
       val ranked = DistributedRank.withRank(
@@ -1322,25 +1306,13 @@ object Aggregates extends QueryModule {
     // frame is ≤|types| rows broadcast back; one corpus pass to
     // per-type micro-moments; the test folds the bounded type frame.
     "q327_brown_forsythe" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
-      // exact integer division in DECIMAL space: Spark's `DIV`
-      // (IntegralDivide) returns a LONG and silently WRAPS past 2^63
-      // (measured: 4e24 DIV 2000 → garbage), so the q324 micro trick
-      // must divide as (a − a mod b)/b — the remainder subtraction
-      // makes the decimal quotient integral, hence exactly
-      // representable, hence un-rounded. DuckDB's `//` is HUGEINT and
-      // needs no such care.
-      def idiv(a: Column, b: Column): Column =
-        ((dec(a) - pmod(dec(a), dec(b))) / dec(b)).cast("decimal(38,0)")
       val med = Tables.events(s, d)
         .groupBy(col("event_type"))
         .agg(round(expr("percentile(value, 0.5)"), 4).as("med"))
       val perType = Tables.events(s, d)
         .join(broadcast(med), "event_type")
         .select(col("event_type"),
-          floor(abs(col("value") - col("med")) * 1e6 + 0.5).cast("long")
-            .as("zmu"))
+          fix6(abs(col("value") - col("med"))).as("zmu"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("ng"), sum(dec(col("zmu"))).as("sz"),
           sum(dec(col("zmu")) * dec(col("zmu"))).as("szz"))
@@ -1381,14 +1353,8 @@ object Aggregates extends QueryModule {
     // shape: one corpus pass to (type, user) moments, map-side
     // combined; the ICC folds the per-type frame.
     "q324_icc_users" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
-      // see q327: Spark's DIV wraps past 2^63, so integer division
-      // runs in DECIMAL space as (a − a mod b)/b — exact and
-      // overflow-safe to 10³² (the grand term t²·100/N passes 2^63
-      // well inside a real corpus).
-      def idiv(a: Column, b: Column): Column =
-        ((dec(a) - pmod(dec(a), dec(b))) / dec(b)).cast("decimal(38,0)")
+      // integer division runs in DECIMAL space (Parity.idiv): the
+      // grand term t²·100/N passes 2^63 well inside a real corpus.
       val perUser = Tables.events(s, d)
         .select(col("event_type"), col("user_id"),
           floor(col("value") * 100 + 0.5).cast("long").as("cents"))
@@ -1427,8 +1393,6 @@ object Aggregates extends QueryModule {
     }),
 
     "q308_basket_rules" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val od = Tables.lineitem(s, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .distinct()
@@ -1479,8 +1443,6 @@ object Aggregates extends QueryModule {
     // the first aggregation runs on the bounded distinct-value grid
     // (2-decimal money domain — the q231 argument) × |types|².
     "q310_wasserstein" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val tysArr = Tables.events(s, d)
         .agg(sort_array(collect_set(col("event_type"))).as("tys"))
       val pv = Tables.events(s, d)
@@ -1533,9 +1495,9 @@ object Aggregates extends QueryModule {
           element_at(col("cm"), col("pr.t_b")).as("b"))
         .withColumn("gap", abs(dec(col("a.cum")) * dec(col("b.nt"))
           - dec(col("b.cum")) * dec(col("a.nt"))))
-        .withColumn("term6", floor(col("gap").cast("double")
+        .withColumn("term6", fix6(col("gap").cast("double")
           / (dec(col("a.nt")) * dec(col("b.nt"))).cast("double")
-          * col("dv") * 1e6 + 0.5).cast("long"))
+          * col("dv")))
         .groupBy(col("t").as("type_a"), col("t_b").as("type_b"))
         .agg(count(lit(1)).as("n_grid"),
           (sum(col("term6")).cast("double") / 1e6).as("w1_raw"))
@@ -1559,8 +1521,6 @@ object Aggregates extends QueryModule {
     // only (≈|distinct prices|), range-partitioned prefix-sum
     // windows, no row² anywhere.
     "q331_cliffs_delta" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val ords = Tables.orders(s, d)
         .select(col("o_orderpriority").as("prio"),
           col("o_totalprice").as("v"))
@@ -1625,8 +1585,6 @@ object Aggregates extends QueryModule {
     // per-(user, type) counts; the grid is |users| × |bounded type
     // set| via broadcast cross join; readout folds are counters.
     "q333_cronbach_alpha" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val ev = Tables.events(s, d)
       val users = ev.select(col("user_id")).distinct()
       val types = ev.select(col("event_type")).distinct()
@@ -1686,8 +1644,6 @@ object Aggregates extends QueryModule {
     // sums on the user frame, column sums on the bounded type frame;
     // output is one row.
     "q339_cochrans_q" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val ev = Tables.events(s, d)
       val pairs = ev
         .filter(to_date(col("ts")) === lit("2024-01-05").cast("date"))
@@ -1726,8 +1682,6 @@ object Aggregates extends QueryModule {
     // one corpus pass to per-user probe flags (map-side combined),
     // a 4-cell fold, one row out.
     "q340_mcnemar" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       Tables.events(s, d)
         .groupBy(col("user_id"))
         .agg(max(when(col("event_type") === "purchase"
@@ -1770,8 +1724,6 @@ object Aggregates extends QueryModule {
     // Scale shape: value-level grid ≈ |distinct prices|×|groups|;
     // the pair join carries bounded group fan-out, never rows².
     "q341_jonckheere" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val o = Tables.orders(s, d)
         .select(col("o_orderpriority").as("g"), col("o_totalprice").as("v"))
       val pv = o.groupBy(col("g"), col("v")).agg(count(lit(1)).as("np"))
@@ -1860,8 +1812,6 @@ object Aggregates extends QueryModule {
     // Scale shape: one corpus pass to per-user (pre, post) counters
     // (map-side combined), a 6-counter fold, one row out.
     "q345_cuped" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       Tables.events(s, d)
         .groupBy(col("user_id"))
         .agg(sum(when(to_date(col("ts"))
@@ -1917,14 +1867,12 @@ object Aggregates extends QueryModule {
     // rank-style sort (TakeOrdered-sized: only the top max-k+1
     // ranks survive the filter), a 3-rung ladder over it.
     "q351_hill_tail" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val ranked = Tables.orders(s, d)
         .select(col("o_totalprice").as("x"), col("o_orderkey"))
         .withColumn("rn", row_number().over(
           Window.orderBy(col("x").desc, col("o_orderkey"))).cast("long"))
         .filter(col("rn") <= 201L)
-        .withColumn("l6", floor(log(col("x")) * 1e6 + 0.5).cast("long"))
+        .withColumn("l6", ln6(col("x")))
       val ks = ranked.sparkSession.range(0, 3)
         .select((lit(50L) * pow(lit(2.0), col("id")).cast("long"))
           .as("k"))
@@ -1958,8 +1906,6 @@ object Aggregates extends QueryModule {
     // (the r13 form funneled every part through ONE task), a 3-row
     // fold.
     "q355_abc_analysis" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val rev = Tables.lineitem(s, d)
         .select(col("l_partkey"),
           floor(col("l_extendedprice") * 100 + 0.5).cast("long")
@@ -2000,8 +1946,6 @@ object Aggregates extends QueryModule {
     // moment counters (map-side combined), a bounded group frame ×
     // broadcast pooled row.
     "q358_simpsons_check" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val li = Tables.lineitem(s, d)
         .select(col("l_returnflag").as("g"),
           floor(col("l_discount") * 100 + 0.5).cast("long").as("x"),
@@ -2051,8 +1995,6 @@ object Aggregates extends QueryModule {
     // (each r² expressed as num²/(den_a·den_b) of exact DECIMAL
     // casts). Scale shape: one corpus pass, one row out.
     "q359_partial_corr" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       Tables.lineitem(s, d)
         .select(col("l_quantity").cast("long").as("x"),
           floor(col("l_extendedprice")).cast("long").as("y"),
@@ -2105,8 +2047,6 @@ object Aggregates extends QueryModule {
     // support of 5 line items. Scale shape: one corpus pass to
     // per-part moment counters (map-side combined), TakeOrdered.
     "q360_price_dispersion" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       Tables.lineitem(s, d)
         .filter(col("l_quantity") > 0)
         .select(col("l_partkey"),
@@ -2141,8 +2081,6 @@ object Aggregates extends QueryModule {
     // through ONE task), and the argmax is a TakeOrdered heap — each
     // partition forwards one row, never a second global window.
     "q364_pareto_knee" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val rev = Tables.lineitem(s, d)
         .select(col("l_partkey"),
           floor(col("l_extendedprice") * 100 + 0.5).cast("long")
@@ -2186,7 +2124,6 @@ object Aggregates extends QueryModule {
     // one is sublinear), broadcast back as 1-row frames; one
     // counting pass, one row out.
     "q374_tail_dependence" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val li = Tables.lineitem(s, d)
         .select(col("l_quantity").cast("long").as("x"),
           floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("y"))
@@ -2231,7 +2168,6 @@ object Aggregates extends QueryModule {
     // through ONE task), one corpus pass for the counts, a 9-row
     // readout.
     "q378_decision_stump" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val o = Tables.orders(s, d)
         .select(col("o_orderkey"),
           floor(col("o_totalprice") * 100 + 0.5).cast("long").as("pc"),
@@ -2296,8 +2232,6 @@ object Aggregates extends QueryModule {
     // ONE task), a 10-row readout (whose own cum/tot windows ride
     // the bounded decile frame).
     "q380_lorenz_curve" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val spend = Tables.customer(s, d).select(col("c_custkey"))
         .join(Tables.orders(s, d)
           .groupBy(col("o_custkey"))

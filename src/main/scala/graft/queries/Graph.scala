@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.{QueryModule, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.ops.Parity.{dec, snap6}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -220,12 +221,12 @@ object Graph extends QueryModule {
           col("az.v") === col("bz.v") && col("az.u") < col("bz.u"))
         .select(col("az.u").as("a"), col("bz.u").as("b"),
           col("az.v").as("z"))
-      val ln6 = floor(log(col("deg").cast("double")) * 1e6 + 0.5) / 1e6
+      val lnDeg = snap6(log(col("deg").cast("double")))
       val unit = floor(lit(1e9) / col("ln6") + 0.5).cast("long")
       val scoredPairs = common
         .join(deg.select(col("node").as("z"), col("deg")), "z")
         .filter(col("deg") >= 2)
-        .withColumn("ln6", ln6)
+        .withColumn("ln6", lnDeg)
         .withColumn("t", unit)
         .groupBy(col("a"), col("b"))
         .agg(count(lit(1)).as("n_common"), sum(col("t")).as("aa_u"))
@@ -252,8 +253,6 @@ object Graph extends QueryModule {
     // rows, no join-back, no second corpus scan); the final moment
     // aggregate is map-side combined.
     "q298_degree_assortativity" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val edges = Tables.orders(s, d)
         .join(Tables.lineitem(s, d),
           col("o_orderkey") === col("l_orderkey"))
@@ -296,7 +295,6 @@ object Graph extends QueryModule {
     // the bounded edge list once (the q166 aggregate-first shape);
     // the sweep is |ladder| scans of that dimension frame.
     "q342_rich_club" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val e = thresholdedUndirected(s, d)
       val deg = e.select(col("u").as("node"))
         .union(e.select(col("v").as("node")))
@@ -338,8 +336,6 @@ object Graph extends QueryModule {
     // bounded edge list once; community joins ride the ≤|nations|
     // map broadcast; output is |regions| rows.
     "q350_modularity" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val nmap = Tables.nation(s, d)
         .select(col("n_nationkey").as("node"),
           col("n_regionkey").as("reg"))
@@ -444,7 +440,7 @@ object Graph extends QueryModule {
           h6 += frontier.size.toLong * (1000000L / depth)
           reached += frontier.size
         }
-        (src, reached, math.floor(h6.toDouble / 1e6 * 1e6 + 0.5) / 1e6)
+        (src, reached, snap6(h6.toDouble / 1e6))
       }
       import s.implicits._
       rows.toDF("node", "n_reached", "harmonic_4hop")
@@ -533,8 +529,7 @@ object Graph extends QueryModule {
       }
       import s.implicits._
       nodes.toSeq.map(n => (n,
-          math.floor(hub(n).toDouble / 1e6 * 1e6 + 0.5) / 1e6,
-          math.floor(auth(n).toDouble / 1e6 * 1e6 + 0.5) / 1e6))
+          snap6(hub(n).toDouble / 1e6), snap6(auth(n).toDouble / 1e6)))
         .toDF("node", "hub_score", "authority_score")
         .orderBy(col("node"))
     })

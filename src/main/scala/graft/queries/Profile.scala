@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryModule, Tables}
+import graft.ops.Parity.{dec, dec19, idiv, ln6, snap6}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -577,8 +578,7 @@ object Profile extends QueryModule {
           .cast("int").as("digit"))
         .groupBy(col("digit")).agg(count(lit(1)).as("n"))
       val tot = digits.agg(sum(col("n")).as("tot"))
-      val benford =
-        floor(log10(lit(1.0) + lit(1.0) / col("digit")) * 1e6 + 0.5) / 1e6
+      val benford = snap6(log10(lit(1.0) + lit(1.0) / col("digit")))
       digits.crossJoin(broadcast(tot))
         .select(col("digit"), col("n"),
           (col("n").cast("double") / col("tot").cast("double")).as("share"),
@@ -679,8 +679,6 @@ object Profile extends QueryModule {
     // pass to the ≤|classes|² confusion frame; the column-total join
     // is on the ≤|classes| frame (broadcast); output is one row.
     "q238_cohens_kappa" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(19,0)")
       val pred = when(col("value") < 80.0, "view")
         .when(col("value") < 160.0, "click")
         .when(col("value") < 240.0, "signup")
@@ -693,7 +691,7 @@ object Profile extends QueryModule {
       val cols = cells.groupBy(col("pred").as("cls"))
         .agg(sum(col("n")).as("col_n"))
       val rc = cells.join(broadcast(cols), col("gold") === col("cls"))
-        .agg(sum(dec(col("n")) * dec(col("col_n"))).as("rc"))
+        .agg(sum(dec19(col("n")) * dec19(col("col_n"))).as("rc"))
       val base = cells.agg(sum(col("n")).as("n_total"),
         sum(when(col("gold") === col("pred"), col("n")).otherwise(0L))
           .as("n_agree"))
@@ -702,11 +700,11 @@ object Profile extends QueryModule {
           (col("n_agree").cast("double") / col("n_total").cast("double"))
             .as("po"),
           snap6(col("rc").cast("double")
-            / (dec(col("n_total")) * dec(col("n_total"))).cast("double"))
+            / (dec19(col("n_total")) * dec19(col("n_total"))).cast("double"))
             .as("pe"),
-          snap6((dec(col("n_total")) * dec(col("n_agree")) - col("rc"))
+          snap6((dec19(col("n_total")) * dec19(col("n_agree")) - col("rc"))
             .cast("double")
-            / (dec(col("n_total")) * dec(col("n_total")) - col("rc"))
+            / (dec19(col("n_total")) * dec19(col("n_total")) - col("rc"))
             .cast("double")).as("kappa"))
     }),
 
@@ -905,8 +903,6 @@ object Profile extends QueryModule {
     // H(lang), H(source), H(joint), MI, and the normalized
     // MI/min(H) coefficient — each a single double division.
     "q262_mutual_info" -> ((s, d) => {
-      def lm(c: Column): Column =
-        floor(log(c.cast("double")) * 1e6 + 0.5)
       val cells = Tables.documents(s, d)
         .groupBy(col("lang"), col("source"))
         .agg(count(lit(1)).as("c"))
@@ -922,16 +918,16 @@ object Profile extends QueryModule {
         countDistinct(col("lang")).as("n_langs"),
         countDistinct(col("source")).as("n_sources"),
         sum(col("c").cast("decimal(14,0)")
-          * (lm(col("c")) + lm(col("n")) - lm(col("cl")) - lm(col("cs")))
+          * (ln6(col("c")) + ln6(col("n")) - ln6(col("cl")) - ln6(col("cs")))
             .cast("decimal(9,0)")).as("mi_num"),
         sum(col("c").cast("decimal(14,0)")
-          * (lm(col("n")) - lm(col("c"))).cast("decimal(9,0)"))
+          * (ln6(col("n")) - ln6(col("c"))).cast("decimal(9,0)"))
           .as("hj_num"))
       def marginal(key: String, out: String) = cells
         .groupBy(col(key)).agg(sum(col("c")).as("ck"))
         .withColumn("n", sum(col("ck")).over(wAll))
         .agg(sum(col("ck").cast("decimal(14,0)")
-          * (lm(col("n")) - lm(col("ck"))).cast("decimal(9,0)"))
+          * (ln6(col("n")) - ln6(col("ck"))).cast("decimal(9,0)"))
           .as(out))
       joint.crossJoin(marginal("lang", "hl_num"))
         .crossJoin(marginal("source", "hs_num"))
@@ -1117,8 +1113,6 @@ object Profile extends QueryModule {
     // (map-side combined), a 1-row moment frame broadcast back,
     // per-row posterior means, TakeOrdered top-20.
     "q332_eb_shrinkage" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val per = Tables.events(s, d)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"),
@@ -1173,8 +1167,6 @@ object Profile extends QueryModule {
     // shape: the ntile is a rank-style global sort (range-partition
     // at scale); everything after lives on ≤|classes|×10 frames.
     "q335_t_closeness" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val cust = Tables.customer(s, d)
         .withColumn("dec10", ntile(10).over(
           Window.orderBy(col("c_acctbal"), col("c_custkey")))
@@ -1224,10 +1216,6 @@ object Profile extends QueryModule {
     // (map-side combined into the ≤Σ|domains|×2 count frame); the
     // label-entropy 1-row frame broadcasts back; output is 3 rows.
     "q337_info_gain" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
-      def ln6(c: Column): Column =
-        floor(log(c.cast("double")) * 1e6 + 0.5).cast("long")
       val o = Tables.orders(s, d).select(
         floor(col("o_totalprice") * 100 + 0.5).cast("long").as("pc"),
         col("o_orderpriority"), col("o_orderstatus"),
@@ -1281,10 +1269,6 @@ object Profile extends QueryModule {
     // pass to per-user counters; the decomposition runs on the
     // ≤11-bin frame; one row out.
     "q348_brier_decomposition" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
-      def idiv(a: Column, b: Column): Column =
-        ((dec(a) - pmod(dec(a), dec(b))) / dec(b)).cast("decimal(38,0)")
       val per = Tables.events(s, d)
         .groupBy(col("user_id"))
         .agg(sum(when(to_date(col("ts"))
@@ -1346,8 +1330,6 @@ object Profile extends QueryModule {
     // shape: one corpus pass to per-user counters, a rank-style
     // global sort, ≤10-row readout.
     "q349_cumulative_gains" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val per = Tables.events(s, d)
         .groupBy(col("user_id"))
         .agg(sum(when(to_date(col("ts"))
@@ -1393,7 +1375,6 @@ object Profile extends QueryModule {
     // corpus pass with an 11× bounded fan-out, grid-keyed map-side
     // combine, 11 rows out.
     "q353_kde" -> ((s, d) => {
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       Tables.customer(s, d)
         .select(col("c_acctbal").as("x"),
           explode(sequence(lit(0L), lit(10L))).as("gi"))
@@ -1428,8 +1409,6 @@ object Profile extends QueryModule {
     // top-k. Degenerate covariance (det ≤ 0) yields no rows
     // identically.
     "q357_mahalanobis" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val li = Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_linenumber"),
           col("l_quantity").cast("long").as("x"),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryModule, Tables}
+import graft.ops.Parity.snap6
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,9 +16,10 @@ import org.apache.spark.sql.functions._
   * Exact ops (abs/ceil/floor/arithmetic/bitwise) are emitted raw —
   * bit-identical across engines. Transcendentals (libm differs in the
   * last ulp between JVM and DuckDB) are snapped to 6 decimals on both
-  * sides via [[r6]] — floor(x·1e6 + 0.5)/1e6 in pure double ops —
-  * rather than `round(_, 6)`: Spark's Round on DoubleType goes through
-  * BigDecimal per row (~6 s over 600 k rows × 15 columns at sf0.1),
+  * sides via [[graft.ops.Parity.snap6]] — floor(x·1e6 + 0.5)/1e6 in
+  * pure double ops — rather than `round(_, 6)`: Spark's Round on
+  * DoubleType goes through BigDecimal per row (~6 s over 600 k rows ×
+  * 15 columns at sf0.1),
   * while the floor form stays inside whole-stage codegen and both
   * engines execute the identical IEEE-754 multiply/add/floor sequence.
   * The transcendental INPUT itself (exp/sin/…) can differ by a last
@@ -28,15 +30,6 @@ import org.apache.spark.sql.functions._
   * whole-stage-codegen-friendly: pure `functions._` columns, no UDFs.
   */
 object ScalarMath extends QueryModule {
-
-  /** Cheap 6-decimal snap: pure-double floor(x·1e6 + 0.5)/1e6 (HALF_UP
-    * toward +∞ on ties; ties never arise from transcendental outputs).
-    * The DuckDB oracle spells the identical expression, so both engines
-    * run the same IEEE-754 ops and compare bit-exact without paying
-    * Spark's BigDecimal Round path.
-    */
-  private def r6(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    floor(c * 1e6 + 0.5) / 1e6
 
   /** Round-14 shape shared by the whole scalar-expression family:
     * sort the NARROW input first, derive the wide expression payload
@@ -70,15 +63,15 @@ object ScalarMath extends QueryModule {
           ceil(col("l_extendedprice") / 100).as("f_ceil"),
           floor(col("l_extendedprice") / 100).as("f_floor"),
           sqrt(col("l_quantity")).as("f_sqrt"),
-          r6(exp(col("l_discount"))).as("f_exp"),
-          r6(expm1(col("l_discount"))).as("f_expm1"),
-          r6(log(col("l_extendedprice"))).as("f_ln"),
-          r6(log10(col("l_extendedprice"))).as("f_log10"),
-          r6(log2(col("l_quantity"))).as("f_log2"),
-          r6(log(2.0, col("l_quantity"))).as("f_logb"),
-          r6(cbrt(col("l_quantity"))).as("f_cbrt"),
-          r6(hypot(col("l_quantity"), col("l_linenumber"))).as("f_hypot"),
-          r6(pow(col("l_quantity"), lit(1.5))).as("f_pow"),
+          snap6(exp(col("l_discount"))).as("f_exp"),
+          snap6(expm1(col("l_discount"))).as("f_expm1"),
+          snap6(log(col("l_extendedprice"))).as("f_ln"),
+          snap6(log10(col("l_extendedprice"))).as("f_log10"),
+          snap6(log2(col("l_quantity"))).as("f_log2"),
+          snap6(log(2.0, col("l_quantity"))).as("f_logb"),
+          snap6(cbrt(col("l_quantity"))).as("f_cbrt"),
+          snap6(hypot(col("l_quantity"), col("l_linenumber"))).as("f_hypot"),
+          snap6(pow(col("l_quantity"), lit(1.5))).as("f_pow"),
           signum(col("l_discount") - lit(0.05)).as("f_sign"),
           factorial(col("l_linenumber")).as("f_factorial"),
           greatest(col("l_quantity"), col("l_linenumber") * 10).as("f_greatest"),
@@ -94,23 +87,23 @@ object ScalarMath extends QueryModule {
         .withColumn("y", col("l_quantity") / 50) // 0.02..1
         .select(
           col("l_orderkey"), col("l_linenumber"),
-          r6(sin(col("x"))).as("f_sin"),
-          r6(cos(col("x"))).as("f_cos"),
-          r6(tan(col("x"))).as("f_tan"),
-          r6(asin(col("y"))).as("f_asin"),
-          r6(acos(col("y"))).as("f_acos"),
-          r6(atan(col("x"))).as("f_atan"),
-          r6(atan2(col("y"), col("x") + 1)).as("f_atan2"),
-          r6(sinh(col("x"))).as("f_sinh"),
-          r6(cosh(col("x"))).as("f_cosh"),
-          r6(tanh(col("x"))).as("f_tanh"),
-          r6(degrees(col("x"))).as("f_degrees"),
-          r6(radians(col("l_quantity"))).as("f_radians"),
+          snap6(sin(col("x"))).as("f_sin"),
+          snap6(cos(col("x"))).as("f_cos"),
+          snap6(tan(col("x"))).as("f_tan"),
+          snap6(asin(col("y"))).as("f_asin"),
+          snap6(acos(col("y"))).as("f_acos"),
+          snap6(atan(col("x"))).as("f_atan"),
+          snap6(atan2(col("y"), col("x") + 1)).as("f_atan2"),
+          snap6(sinh(col("x"))).as("f_sinh"),
+          snap6(cosh(col("x"))).as("f_cosh"),
+          snap6(tanh(col("x"))).as("f_tanh"),
+          snap6(degrees(col("x"))).as("f_degrees"),
+          snap6(radians(col("l_quantity"))).as("f_radians"),
           // cot/sec/csc: reference plan IR names with no Spark builtin —
           // compositions (SURVEY.md §2.9).
-          r6(lit(1.0) / tan(col("x") + 1)).as("f_cot"),
-          r6(lit(1.0) / cos(col("x"))).as("f_sec"),
-          r6(lit(1.0) / sin(col("x") + 1)).as("f_csc"))),
+          snap6(lit(1.0) / tan(col("x") + 1)).as("f_cot"),
+          snap6(lit(1.0) / cos(col("x"))).as("f_sec"),
+          snap6(lit(1.0) / sin(col("x") + 1)).as("f_csc"))),
 
     // rounding-mode catalogue on ties constructed to be exact in binary
     // (n + 0.5 is exactly representable): round is HALF_UP (ties away

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryModule, Tables}
+import graft.ops.Parity.{dec, dec19, fix6, ln6, snap6}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -669,7 +670,6 @@ object Temporal extends QueryModule {
     // zero and the term is excluded — log-space cannot express S=0;
     // censoring at the corpus edge makes that unreachable here.)
     "q232_kaplan_meier" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val users = Tables.events(s, d)
         .groupBy(col("user_id"))
         .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
@@ -750,7 +750,6 @@ object Temporal extends QueryModule {
     // pass map-side-combines to the ≤|days| daily frame; every window
     // runs over that bounded frame (q237's shape exactly).
     "q312_page_hinkley" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val daily = Tables.events(s, d)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("n"))
@@ -794,8 +793,6 @@ object Temporal extends QueryModule {
     // after the daily aggregation lives on the bounded |days|·|types|
     // grid.
     "q326_kendall_w" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val daily = Tables.events(s, d)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("n"))
@@ -856,8 +853,6 @@ object Temporal extends QueryModule {
     // divisions of exact operands. Scale shape: one corpus pass to
     // the ≤|days| frame, one bounded fold.
     "q328_poisson_dispersion" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       Tables.events(s, d)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("n"))
@@ -894,8 +889,6 @@ object Temporal extends QueryModule {
     // and D ≤ 1. Scale shape: one corpus pass to the ≤|days| daily
     // frame, a lag window over it, a bounded fold.
     "q322_runs_test" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val daily = Tables.events(s, d)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("n"))
@@ -947,7 +940,6 @@ object Temporal extends QueryModule {
     // Scale shape: one corpus pass to per-user rows, re-group to the
     // ≤|days| lifetime frame, windows over that frame.
     "q313_nelson_aalen" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val users = Tables.events(s, d)
         .groupBy(col("user_id"))
         .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
@@ -994,7 +986,6 @@ object Temporal extends QueryModule {
     // one corpus pass to per-user rows, a map-side-combined re-group
     // to the ≤|days| lifetime frame, windows over THAT (q231 shape).
     "q239_logrank" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val users = Tables.events(s, d)
         .groupBy(col("user_id"))
         .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
@@ -1051,7 +1042,6 @@ object Temporal extends QueryModule {
     // (both middles averaged on even counts, the same interpolation
     // DuckDB's quantile does, spelled identically in the oracle).
     "q240_theilsen" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val daily = Tables.events(s, d)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("n"))
@@ -1093,17 +1083,15 @@ object Temporal extends QueryModule {
     // combines to the ≤|days| frame; everything else is per-type
     // arithmetic on that frame.
     "q244_fano" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(19,0)")
       val daily = Tables.events(s, d)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("n"))
       daily.groupBy(col("event_type"))
         .agg(count(lit(1)).as("dd"), sum(col("n")).as("s"),
-          sum(dec(col("n")) * dec(col("n"))).as("sq"))
-        .withColumn("num", dec(col("dd")) * col("sq")
-          - dec(col("s")) * dec(col("s")))
-        .withColumn("den", dec(col("dd")) * dec(col("s")))
+          sum(dec19(col("n")) * dec19(col("n"))).as("sq"))
+        .withColumn("num", dec19(col("dd")) * col("sq")
+          - dec19(col("s")) * dec19(col("s")))
+        .withColumn("den", dec19(col("dd")) * dec19(col("s")))
         .select(col("event_type"), col("dd").as("n_days"),
           (col("s").cast("double") / col("dd").cast("double"))
             .as("daily_mean"),
@@ -1338,7 +1326,6 @@ object Temporal extends QueryModule {
     // per type over the CALENDAR-bounded daily frame (the q288
     // argument — |days| grows with collection time, not corpus rows).
     "q295_changepoint" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val wT = Window.partitionBy(col("event_type"))
       val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
       val daily = Tables.events(s, d)
@@ -1426,10 +1413,6 @@ object Temporal extends QueryModule {
     // (user-keyed lead window, map-side-combined bigram counts);
     // everything after runs on the ≤|types|² frame.
     "q304_entropy_rate" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
-      def ln6(c: Column): Column =
-        floor(log(c.cast("double")) * 1e6 + 0.5).cast("long")
       val wU = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       Tables.events(s, d)
@@ -1468,10 +1451,6 @@ object Temporal extends QueryModule {
     // corpus pass to the calendar-bounded daily frame; the 3-scale
     // fan-out and block windows all run on that dimension frame.
     "q306_hurst_rs" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
-      def ln6d(c: Column): Column =
-        floor(log(c) * 1e6 + 0.5).cast("long")
       val daily = Tables.events(s, d)
         .groupBy(col("event_type"),
           datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))
@@ -1499,14 +1478,13 @@ object Temporal extends QueryModule {
         .withColumn("s2", dec(col("w")) * col("syy")
           - dec(col("sw")) * dec(col("sw")))
         .filter(col("s2") > 0)
-        .withColumn("rs6", floor(
-          (col("zmax") - col("zmin")).cast("double")
-            / sqrt(col("s2").cast("double")) * 1e6 + 0.5).cast("long"))
+        .withColumn("rs6", fix6((col("zmax") - col("zmin")).cast("double")
+          / sqrt(col("s2").cast("double"))))
       val wT = Window.partitionBy(col("event_type"))
       val perW = blocks.groupBy(col("event_type"), col("w"))
         .agg(count(lit(1)).as("n_blocks"), sum(col("rs6")).as("srs"))
-        .withColumn("x6", ln6d(col("w").cast("double")))
-        .withColumn("y6", ln6d(col("srs").cast("double")
+        .withColumn("x6", ln6(col("w")))
+        .withColumn("y6", ln6(col("srs").cast("double")
           / col("n_blocks").cast("double") / 1e6))
         .withColumn("np", count(lit(1)).over(wT))
         .withColumn("sx", sum(col("x6")).over(wT))
@@ -1539,8 +1517,6 @@ object Temporal extends QueryModule {
     // to the (brand, month) cell frame; the base month attaches as a
     // brand-window max — never a self-join or second scan.
     "q307_price_index" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val baseMonth = lit("1995-01-01").cast("date")
       val cells = Tables.lineitem(s, d)
         .join(Tables.part(s, d), col("l_partkey") === col("p_partkey"))
@@ -1586,8 +1562,6 @@ object Temporal extends QueryModule {
     // pass map-side combines to the calendar-bounded daily frame;
     // the walk is a window over it.
     "q309_sprt_monitor" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val wOrd = Window.orderBy(col("day"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       Tables.events(s, d)
@@ -1620,8 +1594,6 @@ object Temporal extends QueryModule {
     // 6-snapped divisions. Scale shape: one corpus pass to the
     // calendar-bounded daily frame; MA/dow windows run on it.
     "q311_seasonal_decompose" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val wMa = Window.partitionBy(col("event_type")).orderBy(col("idx"))
         .rowsBetween(-3, 3)
       val daily = Tables.events(s, d)
@@ -1678,8 +1650,6 @@ object Temporal extends QueryModule {
     // frame; every window runs on that dimension frame with a
     // 62-bounded array per row.
     "q330_ewma_chart" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val wT = Window.partitionBy(col("event_type"))
       val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
       val wTrail = wOrd.rowsBetween(-61, 0)
@@ -1739,8 +1709,6 @@ object Temporal extends QueryModule {
     // micro-units first). Scale shape: one corpus pass to the
     // calendar-bounded daily frame; windows on the dimension frame.
     "q334_durbin_watson" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val wT = Window.partitionBy(col("event_type"))
       val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
       Tables.events(s, d)
@@ -1794,8 +1762,6 @@ object Temporal extends QueryModule {
     // NULL identically. Scale shape: one corpus pass to the daily
     // frame, two lag windows on it, a bounded fold.
     "q336_mase_backtest" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
       Tables.events(s, d)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
@@ -1839,7 +1805,6 @@ object Temporal extends QueryModule {
     // and the per-(type, word) count run on dimension frames;
     // top-1 via one rank window.
     "q338_sax_motifs" -> ((s, d) => {
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val wT = Window.partitionBy(col("event_type"))
       val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
       val sym = Tables.events(s, d)
@@ -1892,8 +1857,6 @@ object Temporal extends QueryModule {
     // pass to the calendar-bounded daily frame; the k-ladder is a
     // 7× fan-out of that dimension frame.
     "q346_periodogram" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
       val wT = Window.partitionBy(col("event_type"))
       val daily = Tables.events(s, d)
@@ -1907,8 +1870,8 @@ object Temporal extends QueryModule {
         .withColumn("ang", lit(6.283185307179586)
           * col("k").cast("double") * col("t").cast("double")
           / col("dd").cast("double"))
-        .withColumn("c6", floor(cos(col("ang")) * 1e6 + 0.5).cast("long"))
-        .withColumn("s6", floor(sin(col("ang")) * 1e6 + 0.5).cast("long"))
+        .withColumn("c6", fix6(cos(col("ang"))))
+        .withColumn("s6", fix6(sin(col("ang"))))
         .groupBy(col("event_type"), col("k"))
         .agg(max(col("dd")).as("dd"),
           sum(dec(col("n")) * dec(col("c6"))).as("sc"),
@@ -1943,7 +1906,6 @@ object Temporal extends QueryModule {
     // shape: one corpus pass to (day, part) sums (map-side
     // combined); everything after lives on ≤10·|days| frames.
     "q352_topk_churn" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val daily = Tables.lineitem(s, d)
         .groupBy(to_date(col("l_shipdate")).as("day"), col("l_partkey"))
         .agg(sum(col("l_quantity").cast("long")).as("qty"))
@@ -1990,8 +1952,6 @@ object Temporal extends QueryModule {
     // form) — one division of exact DECIMALs. Scale shape: one
     // corpus pass to the daily frame, one lag window, bounded folds.
     "q356_ar1_backtest" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
       val prs = Tables.events(s, d)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
@@ -2042,7 +2002,6 @@ object Temporal extends QueryModule {
     // distinct user-weeks (map-side combined); joins are
     // user-week-keyed equi-joins; readout is ≤|weeks| rows.
     "q361_growth_accounting" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val uw = Tables.events(s, d)
         .select(col("user_id"),
           floor(datediff(to_date(col("ts")),
@@ -2094,7 +2053,6 @@ object Temporal extends QueryModule {
     // user-days (map-side combined), 7× bounded fan-out, per-day
     // counts; ≤|days| rows out.
     "q362_dau_wau" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val ud = Tables.events(s, d)
         .select(col("user_id"), to_date(col("ts")).as("day"))
         .distinct()
@@ -2127,7 +2085,6 @@ object Temporal extends QueryModule {
     // exact longs. Scale shape: one corpus pass to the calendar-
     // bounded daily frame, ordered windows on it, one row out.
     "q369_max_drawdown" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val wOrd = Window.orderBy(col("day"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       Tables.orders(s, d)
@@ -2159,8 +2116,6 @@ object Temporal extends QueryModule {
     // sum. Scale shape: one corpus pass to the daily frame, a lag,
     // one rank-style sort of the ≤|days| frame, one row out.
     "q370_var_cvar" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val deltas = Tables.orders(s, d)
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("long"))
@@ -2202,8 +2157,6 @@ object Temporal extends QueryModule {
     // per-order durations (map-side max), a 3-counter fold, one row
     // out.
     "q376_weibull_fit" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       Tables.orders(s, d)
         .join(Tables.lineitem(s, d)
           .groupBy(col("l_orderkey"))
@@ -2212,8 +2165,7 @@ object Temporal extends QueryModule {
         .select((datediff(col("last_ship"), to_date(col("o_orderdate")))
           + 1).cast("long").as("dur"))
         .filter(col("dur") >= 1L)
-        .withColumn("l6",
-          floor(log(col("dur").cast("double")) * 1e6 + 0.5).cast("long"))
+        .withColumn("l6", ln6(col("dur")))
         .agg(count(lit(1)).as("n"), sum(dec(col("l6"))).as("s1"),
           sum(dec(col("l6")) * dec(col("l6"))).as("s2"))
         .withColumn("mu",
@@ -2245,8 +2197,6 @@ object Temporal extends QueryModule {
     // (order-month, lag) cents frame (map-side combined); everything
     // after runs on that ≤|months|×|lags| dimension frame.
     "q377_chain_ladder" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
       val cells = Tables.orders(s, d)
         .join(Tables.lineitem(s, d),
           col("o_orderkey") === col("l_orderkey"))
@@ -2309,7 +2259,6 @@ object Temporal extends QueryModule {
     // shape: one corpus pass to the calendar-bounded daily frame,
     // one ordered window, a bounded fold per type.
     "q379_record_days" -> ((s, d) => {
-      def snap6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
       val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
         .rowsBetween(Window.unboundedPreceding, -1)
       Tables.events(s, d)
@@ -2375,12 +2324,9 @@ object Temporal extends QueryModule {
   /** q309 SPRT µnat constants — computed ONCE here and interpolated
     * into both engines (p₀=0.19, p₁=0.21, α=β=0.05; boundary ln 19).
     */
-  private val SprtL1: Long =
-    math.floor(math.log(0.21 / 0.19) * 1e6 + 0.5).toLong
-  private val SprtL0: Long =
-    math.floor(math.log(0.79 / 0.81) * 1e6 + 0.5).toLong
-  private val SprtBound: Long =
-    math.floor(math.log(19.0) * 1e6 + 0.5).toLong
+  private val SprtL1: Long = fix6(math.log(0.21 / 0.19))
+  private val SprtL0: Long = fix6(math.log(0.79 / 0.81))
+  private val SprtBound: Long = fix6(math.log(19.0))
 
   def oracle: Map[String, String] = Map(
     "q289_order_concurrency" ->

@@ -313,6 +313,64 @@ class DegenerateInputSpec extends AnyFunSuite {
     assert(rows(Some("en")).getAs[Double]("p50_fertility") == 0.4)
   }
 
+  // ROADMAP item 2: q39, q132 and q223 join exactPercentiles output
+  // back to their groups on a nullable key. Each is compared with its
+  // DuckDB oracle on a corpus with a NULL-key group; the expected rows
+  // are the oracle's on these files.
+  private def writeTable(dir: String, name: String,
+      df: org.apache.spark.sql.DataFrame): Unit =
+    df.select(Tables.schemas(name).fields.toSeq.map { f =>
+      (if (df.columns.contains(f.name)) col(f.name) else lit(null))
+        .cast(f.dataType).as(f.name)
+    }: _*).write.mode("overwrite").parquet(Tables.path(dir, name))
+
+  private lazy val nullFlagDir: String = {
+    import spark.implicits._
+    val d = Paths.get("target/tmp/degenerate_null_flag")
+      .toAbsolutePath.toString
+    writeTable(d, "lineitem", Seq[(Long, Option[String], Double)](
+      (1L, Some("A"), 10.0), (2L, Some("A"), 20.0), (3L, Some("A"), 30.0),
+      (1L, None, 15.0), (2L, None, 25.0), (5L, None, 35.0),
+      (4L, Some("N"), 5.0))
+      .toDF("l_partkey", "l_returnflag", "l_extendedprice"))
+    d
+  }
+
+  test("q39: a NULL-flag group keeps its row, as the oracle's GROUP BY does") {
+    val rows = SparkEntry.queries("q39_approx_sketch")(spark, nullFlagDir)
+      .collect().map(r => Option(r.getAs[String]("l_returnflag")) ->
+        (r.getAs[Long]("exact_parts"), r.getAs[Boolean]("acd_within_5pct"),
+          r.getAs[Boolean]("p50_within_5pct"))).toMap
+    assert(rows == Map(Some("A") -> (3L, true, true),
+      Some("N") -> (1L, true, true), None -> (3L, true, true)))
+  }
+
+  test("q132: a NULL-flag group is dropped, as the oracle's USING join does") {
+    val rows = SparkEntry.queries("q132_winsorize")(spark, nullFlagDir)
+      .collect().map(r => Option(r.getAs[String]("l_returnflag")) ->
+        (r.getAs[Double]("lo"), r.getAs[Double]("hi"), r.getAs[Long]("n")))
+      .toMap
+    assert(rows == Map(Some("A") -> (11.0, 29.0, 3L),
+      Some("N") -> (5.0, 5.0, 1L)))
+  }
+
+  test("q223: a NULL-label group keeps its row, as the oracle's GROUP BY does") {
+    import spark.implicits._
+    val d = Paths.get("target/tmp/degenerate_null_label")
+      .toAbsolutePath.toString
+    writeTable(d, "embeddings", Seq[(Long, Seq[Float], Option[Int])](
+      (1L, Seq(1f, 0f), Some(0)), (2L, Seq(0f, 2f), Some(0)),
+      (3L, Seq(1f, 1f), None), (4L, Seq(3f, 0f), None))
+      .toDF("vec_id", "embedding", "label"))
+    val rows = SparkEntry.queries("q223_norm_audit")(spark, d)
+      .collect().map(r => Option(r.get(r.fieldIndex("label"))) ->
+        (r.getAs[Long]("n_vecs"), r.getAs[Double]("min_norm2"),
+          r.getAs[Double]("max_norm2"), r.getAs[Double]("p50_norm2")))
+      .toMap
+    assert(rows == Map(Some(0) -> (2L, 1.0, 4.0, 2.5),
+      None -> (2L, 2.0, 9.0, 5.5)))
+  }
+
   test("q177: an all-equal-price brand medians at the tie, full weight") {
     // total ties: the cumulative weight crosses tot/2 inside the one
     // tie group, so the median is the tied price with the full weight

@@ -1,5 +1,7 @@
 package graft
 
+import graft.ops.Materialize
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan shape guards for the scale properties that correctness
@@ -634,6 +636,26 @@ class PlanShapeSpec extends AnyFunSuite {
         .split("== Initial Plan ==").head
       assert("FileScan parquet".r.findAllIn(finalPlan).length == scans,
         s"$q must plan exactly $scans corpus scan(s):\n$finalPlan")
+    }
+  }
+
+  test("each checkpointed subtree reads each base table once (lazy build)") {
+    // The eager checkpoints hide their corpus scans behind a `Scan
+    // ExistingRDD`, which is why q236/q271/q279/q300 pin 0 scans above.
+    // Built under Materialize.withLazyPlans, the subtrees a normal build
+    // would checkpoint come back unexecuted: count the parquet relations
+    // in each one. q154 covers Tables.nationEdges (lineitem, orders,
+    // customer, supplier).
+    val expect = Seq(
+      "q236_spearman" -> Seq(2), "q271_lsh_tuning" -> Seq(1),
+      "q279_bloom_fpr" -> Seq(1), "q300_greedy_coverage" -> Seq(1),
+      "q154_pagerank" -> Seq(4))
+    for ((q, scans) <- expect) {
+      val (_, subtrees) =
+        Materialize.withLazyPlans(SparkEntry.queries(q)(spark, sf))
+      val got = subtrees.map(_.queryExecution.optimizedPlan.collectLeaves()
+        .count(_.isInstanceOf[LogicalRelation]))
+      assert(got == scans, s"$q checkpointed subtree scans")
     }
   }
 
