@@ -190,8 +190,11 @@ final class Frame private (val df: DataFrame) {
     Frame(graft.ops.Dedup.dedupExact(df, idCol, textCol))
 
   /** MinHash+LSH near-dup pairs verified at exact Jaccard ≥
-    * `minJaccardPct`/100 — candidates meet only inside shared LSH
-    * band buckets, never corpus × corpus (q61). Needs doc_id + text.
+    * `minJaccardPct`/100: md5 shingle hashes, the shared 16-permutation
+    * md5 signature ([[graft.ops.MinHash]]) in 8 bands of 2 rows.
+    * Candidates meet only inside shared band buckets, never corpus ×
+    * corpus (q61, whose DuckDB oracle replays every stage). Needs
+    * doc_id + text.
     */
   def dedupMinhashLsh(minJaccardPct: Int = 80): Frame =
     Frame(graft.ops.Dedup.minhashPairs(df, minJaccardPct))

@@ -13,25 +13,16 @@ import org.apache.spark.sql.functions._
   * Scale design — nothing here is O(n²) over the corpus:
   *   - exact dedup shuffles once on the content hash (map-side partial
   *     count), never compares texts pairwise;
-  *   - MinHash/LSH generates candidates only within (band_id, band_hash)
-  *     buckets — expected bucket size is tiny and AQE skew-split handles
-  *     pathological buckets; the exact-Jaccard verify touches candidate
-  *     pairs only;
+  *   - MinHash/LSH ([[MinHash]]) generates candidates only within
+  *     (band, key) buckets — expected bucket size is tiny and AQE
+  *     skew-split handles pathological buckets; the exact-Jaccard
+  *     verify touches candidate pairs only;
   *   - the n-gram variant blocks on (lang, length-bucket ±1) before any
   *     pairwise work;
   *   - SimHash blocks on exact 16-bit signature chunks (pigeonhole: any
   *     pair with Hamming distance ≤ 3 shares at least one of 4 chunks).
   */
 object Dedup extends QueryModule {
-
-  /** MinHash parameters: 16 permutations in 4 bands of 4 rows. For
-    * Jaccard 0.95 the band-collision probability is 1-(1-0.95⁴)⁴ ≈ 0.999;
-    * at 0.5 it is ≈ 0.23 — survivors are re-checked with exact Jaccard,
-    * so false candidates cost time, never correctness.
-    */
-  private val NumPerm = 16
-  private val Bands = 4
-  private val Rows = NumPerm / Bands
 
   /** doc_id + distinct 3-word shingle set, pre-hashed to longs: all
     * pairwise set work (intersect/union) runs over 8-byte hashes, not
@@ -55,17 +46,16 @@ object Dedup extends QueryModule {
   }
 
   /** Exact prefix-filter candidate pairs for the q62/q91 blocked
-    * near-dup family (round 13 — found by the 100× scale rung): the
-    * old candidate stage was a self-join on (lang, 32-char length
-    * bucket) alone, and length buckets do NOT scale — a growing corpus
-    * adds docs to the SAME buckets, so per-block pairwise work grows
-    * quadratically (the 100× run spilled > 76 GB of shuffle from a
-    * 2 GB corpus and died on disk). Candidates now meet in per-shingle
-    * posting lists restricted to each doc's PREFIX (its ⌊m/2⌋+1
-    * lowest-hash shingles): for Jaccard ≥ 1/2, two sets must share at
-    * least ⌈m/2⌉ shingles, so by pigeonhole their prefixes intersect —
-    * EXACT recall, unlike MinHash bands (q61), which is why q62/q91
-    * can keep their oracle-pinned pair sets bit-identical. The
+    * near-dup family. A self-join on (lang, 32-char length bucket)
+    * alone does NOT scale — a growing corpus adds docs to the SAME
+    * buckets, so per-block pairwise work grows quadratically (at 100×
+    * it spilled > 76 GB of shuffle from a 2 GB corpus and died on
+    * disk). Candidates meet in per-shingle posting lists restricted
+    * to each doc's PREFIX (its ⌊m/2⌋+1 lowest-hash shingles): for
+    * Jaccard ≥ 1/2, two sets must share at least ⌈m/2⌉ shingles, so
+    * by pigeonhole their prefixes intersect — EXACT recall, unlike
+    * MinHash bands (q61), so q62/q91's oracles can be the exact
+    * blocked pair sets. The
     * lang/±1-bucket block condition is part of the pair DEFINITION and
     * is applied as a filter on the posting-list expansion; posting
     * lists ride the q216 explode-first shape (one corpus scan, one
@@ -91,7 +81,7 @@ object Dedup extends QueryModule {
         .as("ds"))
       // drop singleton posting lists before the double explode — the
       // overwhelming majority (prefix shingles are rare by
-      // construction), and they can't pair (ADVICE r13, q216 shape)
+      // construction), and they can't pair (the q216 shape)
       .filter(size(col("ds")) >= 2)
       .select(explode(col("ds")).as("a"), col("ds"))
       .select(col("a"), explode(col("ds")).as("b"))
@@ -123,42 +113,49 @@ object Dedup extends QueryModule {
   }
 
   /** MinHash+LSH near-dup pairs as a reusable library op (the facade's
-    * `dedupMinhashLsh`): 16-perm signatures, 4-band bucketing, exact
-    * Jaccard verification at `minJaccardPct` — candidates only ever
-    * meet inside a shared (band, hash) bucket, never pairwise over the
-    * corpus. Input contract: `doc_id` + `textCol`. q61 is this op on
-    * the documents table plus an output sort.
+    * `dedupMinhashLsh`): [[MinHash]] signatures over md5-hashed
+    * 3-word shingles, 8 bands of 2 rows, exact-Jaccard verification at
+    * `minJaccardPct`. Candidates only ever meet inside a shared (band,
+    * key) bucket, never pairwise over the corpus. 8×2 puts the S-curve
+    * threshold at (1/8)^(1/2) ≈ 0.35, so a pair at Jaccard 0.8 is
+    * missed with probability (1 − 0.8²)⁸ ≈ 3·10⁻⁴ (4×4: ≈ 0.12);
+    * false candidates cost time, never correctness. Input contract:
+    * `doc_id` + `textCol`. q61 is this op on the documents table plus
+    * an output sort, and its oracle replays every stage.
     */
   private[graft] def minhashPairs(docs: DataFrame, minJaccardPct: Int = 80,
                                   textCol: String = "text"): DataFrame = {
-    val sh = docs
-      .select(col("doc_id"), Text.words(col(textCol)).as("words"))
-      .filter(size(col("words")) >= 3)
-      .select(col("doc_id"),
-        array_sort(transform(Text.shingles3(col("words")), x => xxhash64(x)))
-          .as("sh"))
-    val sig = sh.select(col("doc_id"), signature(col("sh")).as("sig"))
-    val bands = sig.select(col("doc_id"), posexplode(
-      array((0 until Bands).map { bnd =>
-        xxhash64(slice(col("sig"), bnd * Rows + 1, Rows))
-      }: _*)).as(Seq("band_id", "band_hash")))
-    val cand = bands.as("x").join(bands.as("y"),
-        col("x.band_id") === col("y.band_id") &&
-          col("x.band_hash") === col("y.band_hash") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-    verifyPairs(cand, sh, minJaccardPct)
+    // the verify kernel's input and, exploded back, the signature's:
+    // one scan feeds both
+    val sets = hashSets(shingleHashes(docs, textCol))
+    val sig = MinHash.sigRows(
+      sets.select(col("doc_id"), explode(col("sh")).as("h")),
+      Seq("doc_id"), "h")
+    val cand = MinHash.candidates(MinHash.bandKeys(sig, Seq((8, 2))))
+      .select(col("doc_a"), col("doc_b"))
+    verifyPairs(cand, sets, minJaccardPct)
   }
 
-  /** 16-slot MinHash signature: sig[j] = min over hashed shingles of
-    * xxhash64(h, j) — the seed column makes 16 independent hash families
-    * from one codegen'd hash function over the pre-hashed shingles.
+  /** (doc_id, h): one row per 3-word shingle of each document with
+    * at least 3 words, h = its 15-nibble md5 prefix — the MinHash
+    * element of q61 and q271 (`sh` in the oracle's `minhashCte`).
+    * Shingles explode BEFORE hashing, so md5 and the signature stay
+    * codegen'd per row; an in-row HOF signature runs interpreted
+    * (q271 measured 10-11 s at sf0.1 that way vs ~2 s).
     */
-  private def signature(sh: Column): Column =
-    array((0 until NumPerm).map { j =>
-      array_min(transform(sh, h => xxhash64(h, lit(j))))
-    }: _*)
+  private def shingleHashes(docs: DataFrame,
+                            textCol: String = "text"): DataFrame =
+    docs.select(col("doc_id"), Text.words(col(textCol)).as("words"))
+      .filter(size(col("words")) >= 3)
+      .select(col("doc_id"), explode(Text.shingles3(col("words"))).as("g"))
+      .select(col("doc_id"), Text.md5Long(col("g"), 15).as("h"))
+
+  /** (doc_id, sh): each document's sorted distinct `h` values, the
+    * input [[verifyPairs]]' sorted-intersect kernel needs.
+    */
+  private def hashSets(rows: DataFrame): DataFrame =
+    rows.groupBy(col("doc_id"))
+      .agg(array_sort(array_distinct(collect_list(col("h")))).as("sh"))
 
   /** Exact-Jaccard verification of candidate id pairs: joins the shingle
     * sets back (shuffle on doc_id, candidate-sized input) and keeps pairs
@@ -341,7 +338,7 @@ object Dedup extends QueryModule {
     // its window's min; cross-doc sharing counted on the fingerprint
     // frame (corpus/(w/2)-sized, never raw grams). All exact integer;
     // the one division is density, NULL-guarded for docs too short to
-    // fill a window (the r12 degenerate rule). Scale shape: a per-doc
+    // fill a window (never divide by zero). Scale shape: a per-doc
     // pos window (doc-partitioned exchange), a distinct on (doc, h),
     // one count-distinct join back — no pairwise anything.
     "q316_winnowing" -> ((s, d) => {
@@ -391,7 +388,7 @@ object Dedup extends QueryModule {
         .orderBy(col("doc_id"))),
 
     // Bloom-filter FPR tuning curve — the fourth member of the
-    // round-11 sketch-tuning family (q263 SimHash precision, q271 LSH
+    // sketch-tuning family (q263 SimHash precision, q271 LSH
     // banding, q275 IVF nprobe): before a 100 TB decontamination /
     // delta-dedup pass ships a Bloom pre-filter (the q117 layout), it
     // sweeps (k hashes × m bits) on a sample and MEASURES the
@@ -415,18 +412,17 @@ object Dedup extends QueryModule {
         .select(col("bkt"),
           Text.md5Long(col("g"), 15).as("h"))
         // train (×3 consumers) and held both re-derive this frame —
-        // the r13 plan ran the scan+shingle+md5 pipeline 4×. One
+        // unmaterialized, the scan+shingle+md5 pipeline plans 4×. One
         // per-invocation localCheckpoint (the q300 rationale; never a
         // cross-run cache) leaves the train/held distincts reading
         // materialized (bkt, h) rows, and their identical subtrees
         // collapse to ReusedExchange in the final plan.
         //
-        // Round 15: repartition by h BEFORE the checkpoint — the r14
-        // checkpoint inherited the scan's single local split, so both
-        // distincts' map-side partial dedup ran in ONE task at any
-        // core count. Partitioning on h makes both distincts (filters
-        // preserve partitioning) exchange-free and parallel; the one
-        // narrow (bkt, h) exchange replaces the two the distincts paid.
+        // The repartition by h before the checkpoint spreads it over
+        // every core (the scan of a small local file is one split),
+        // and makes both distincts (filters preserve partitioning)
+        // exchange-free and parallel: one narrow (bkt, h) exchange
+        // instead of one per distinct.
         .repartition(col("h"))
         .transform(graft.ops.Materialize.frame)
       val train = sh.filter(col("bkt") < 80L).select(col("h")).distinct()
@@ -491,19 +487,14 @@ object Dedup extends QueryModule {
     // verified pair. All joins are on the BOUNDED verified-pair
     // frame, never the corpus; counts exact, one division.
     "q276_transitivity" -> ((s, d) => {
-      // Round 15: the pair graph comes from [[blockedPrefixPairs]] —
-      // the same pair DEFINITION this query always verified (same
-      // lang, 32-char length buckets within ±1, exact Jaccard ≥ 1/2)
-      // but through the q62/q91 prefix-filtered candidate stage
-      // instead of a raw (lang, bkt)-grid self-join whose per-block
-      // pairwise work grows quadratically with the corpus (the r13
-      // q62 finding; prefix filtering has exact recall at J ≥ 1/2, so
-      // the verified pair set is bit-identical — oracle-pinned). The
-      // persist() (no unpersist — the r14 verdict's warmup-poisoning
-      // flag) is now a per-invocation eager localCheckpoint: the four
-      // consumers (edges ×2, n_pairs, wedge closure probe) iterate
-      // the materialized bounded pair frame, recomputed from parquet
-      // on every invocation.
+      // The pair graph comes from [[blockedPrefixPairs]]: pairs in
+      // the same lang, 32-char length buckets within ±1, exact
+      // Jaccard ≥ 1/2, through the q62/q91 prefix-filtered candidate
+      // stage, whose work stays linear in the corpus (prefix
+      // filtering has exact recall at J ≥ 1/2). A per-invocation
+      // eager localCheckpoint serves the four consumers (edges ×2,
+      // n_pairs, wedge closure probe) from the materialized bounded
+      // pair frame, recomputed from parquet on every invocation.
       val pairs = blockedPrefixPairs(s, d)
         .select(col("doc_a"), col("doc_b")).transform(graft.ops.Materialize.frame)
       val edges = pairs
@@ -594,26 +585,25 @@ object Dedup extends QueryModule {
         .orderBy(col("csize"))
     }),
 
-    // MinHash + LSH near-dup pairs, exact-Jaccard-verified at ≥ 0.8.
-    // The oracle is the exact ≥ 0.8 pair set (O(n²) only in DuckDB at
-    // sf0.01): a green row proves the LSH stage had 100% recall on this
-    // corpus — the data's planted near-dups sit at J ≥ 0.95 where band
-    // recall is ≈ 0.999. Delegates to the library op [[minhashPairs]]
-    // (the Frame facade's `dedupMinhashLsh`).
+    // MinHash + LSH near-dup pairs, exact-Jaccard-verified at ≥ 0.8:
+    // the library op [[minhashPairs]] (the Frame facade's
+    // `dedupMinhashLsh`). The oracle replays the whole pipeline —
+    // md5 shingle hashes, signatures, 8×2 band keys, candidate pairs,
+    // the exact verify — so a green row pins every stage on any
+    // corpus. The exact ≥ 0.8 pair set is q158's oracle.
     "q61_dedup_minhash" -> ((s, d) =>
       minhashPairs(Tables.documents(s, d), 80)
         .orderBy(col("doc_a"), col("doc_b"))),
 
     // exact n-gram Jaccard near-dup with deterministic blocking: a pair
     // is compared iff same lang and 32-char length buckets within ±1,
-    // AND (round 13) their lowest-hash shingle PREFIXES intersect —
-    // the pigeonhole-exact filter that keeps candidate volume linear
-    // in the corpus (length buckets alone stop discriminating as the
-    // corpus grows: every new doc lands in an existing bucket, so
-    // per-block pairwise work grew quadratically — the 100× scale rung
-    // measured > 76 GB of shuffle before the rewrite). The verified
-    // output pair set is IDENTICAL (prefix filtering has exact recall
-    // at Jaccard ≥ 1/2); see [[blockedPrefixPairs]].
+    // AND their lowest-hash shingle PREFIXES intersect — the
+    // pigeonhole-exact filter that keeps candidate volume linear in
+    // the corpus (length buckets alone stop discriminating as the
+    // corpus grows: every new doc lands in an existing bucket). The
+    // verified pair set is the blocked all-pairs set (prefix
+    // filtering has exact recall at Jaccard ≥ 1/2); see
+    // [[blockedPrefixPairs]].
     "q62_dedup_ngram" -> ((s, d) =>
       blockedPrefixPairs(s, d).orderBy(col("doc_a"), col("doc_b"))),
 
@@ -660,10 +650,9 @@ object Dedup extends QueryModule {
     "q91_dedup_clusters" -> ((s, d) => {
       val pairs = blockedPrefixPairs(s, d)
         .select(col("doc_a"), col("doc_b"))
-      // Round 15: persist() → per-invocation eager localCheckpoint.
-      // The final labels frame used to leak persisted across
-      // invocations, and a CacheManager hit from the warmup pass could
-      // serve the timed run (the r14 verdict's warmup-poisoning flag);
+      // Per-invocation eager localCheckpoints, never persist(): a
+      // persisted frame would outlive the invocation, and a
+      // CacheManager hit from a warm-up pass could serve a timed one;
       // a localCheckpoint LogicalRDD can never match a previous
       // invocation's plan, and stale checkpoint blocks are dropped by
       // the ContextCleaner once the loop releases the reference.
@@ -754,108 +743,35 @@ object Dedup extends QueryModule {
     // MinHash side: sweep the three (bands × rows) factorizations of
     // a 16-perm signature (8×2, 4×4, 2×8 — S-curve thresholds ≈
     // (1/b)^(1/r) = 0.35 / 0.71 / 0.92) and measure candidate yield
-    // and verified precision (exact Jaccard ≥ 0.8 via the native
-    // sorted-intersect kernel, decided by the integer
-    // cross-multiplication 9·I ≥ 4·(|A|+|B|)). This is the sweep a
-    // team runs ONCE on a sample before committing a banding to the
-    // 100 TB pass. Signatures from the shared-md5 family (sig[j] =
-    // min over shingles of md5(j:h) — oracle-replicable, unlike the
-    // xxhash64 family the q61 serving path uses); min is commutative
-    // so the signature stays shard-mergeable. Shingle sets ride the
-    // band rows through the self-join (the q263 carry — 14 band rows
-    // per doc), verdicts per candidate row, dedup on the compact
-    // (scheme, ids, ok) projection, ONE scheme-keyed readout.
+    // and verified precision (exact Jaccard ≥ 0.8 by [[verifyPairs]]).
+    // This is the sweep a team runs ONCE on a sample before committing
+    // a banding to the 100 TB pass; q61 serves the 8×2 row. Signatures, band keys and
+    // candidates are the shared [[MinHash]] op. Shingle sets attach
+    // only to the distinct pairs across all three schemes — the
+    // verdict is a function of the pair alone — so the exact-Jaccard
+    // kernel runs once per pair, and the verified pairs left-join back
+    // to the per-scheme candidate sets. ONE scheme-keyed readout.
     "q271_lsh_tuning" -> ((s, d) => {
-      val schemes = Seq((8, 2), (4, 4), (2, 8))
-      // explode raw shingle strings FIRST and hash per exploded row
-      // (the q216 lesson — and per-row md5 stays codegen'd, where the
-      // in-row transform(sequence(0,15), j -> array_min(transform(sh,
-      // ...))) formulation runs 16 interpreted HOF passes per doc and
-      // re-inlines through the band explode: measured 10-11 s at
-      // sf0.1 vs ~2 s for this relational shape)
-      val shex = Tables.documents(s, d)
-        .withColumn("ws", Text.words(col("text")))
-        .filter(size(col("ws")) >= 3)
-        .select(col("doc_id"), explode(Text.shingles3(col("ws"))).as("g"))
-        .select(col("doc_id"),
-          Text.md5Long(col("g"), 15).as("h"))
-        // sets AND sigRows consume shex — without this per-invocation
-        // localCheckpoint each planned its own full scan+shingle+md5
-        // pipeline (2 corpus scans, r13 pin). The checkpoint runs the
-        // pipeline once at construction (timed/verified — recomputed
-        // from parquet on every invocation, the q300 rationale) and
-        // both consumers iterate the materialized (doc_id, h) rows.
-        //
-        // Round 15: repartition by doc_id BEFORE the checkpoint. The
-        // r14 checkpoint inherited the SCAN's partitioning — one split
-        // for the sub-128 MB local file — so the 16-permutation md5
-        // stage below (the query's dominant compute, 16 hashes per
-        // shingle) ran in ONE task at any core count (BENCH_r14's
-        // 8-vs-32-core ratio: 0.98). The exchange is net-zero at any
-        // scale: it moves the narrow (doc_id, h) rows ONCE and both
-        // consumers' groupBys (doc_id) / (doc_id, p) are then
-        // exchange-free (HashPartitioning(doc_id) satisfies both), so
-        // this replaces two downstream exchanges with one earlier.
+      val shex = shingleHashes(Tables.documents(s, d))
+        // sets AND the signature consume shex: one per-invocation
+        // checkpoint runs the scan+shingle+md5 pipeline once instead
+        // of once per consumer. The doc_id repartition before it
+        // spreads the 16-hash signature stage over every core (the
+        // scan of a sub-128 MB file is one split), and both
+        // consumers' (doc_id)- and (doc_id, p)-keyed aggregates are
+        // then exchange-free.
         .repartition(col("doc_id"))
         .transform(graft.ops.Materialize.frame)
-      val sets = shex.groupBy(col("doc_id"))
-        .agg(array_sort(array_distinct(collect_list(col("h"))))
-          .as("sh"))
-      // 16-slot signature as ROWS (the q258 shape): one map-side-
-      // combined (doc, p) exchange; min is commutative — the
-      // signature stays shard-mergeable
-      val sigRows = shex
-        .select(col("doc_id"), col("h"),
-          explode(sequence(lit(0), lit(15))).as("p"))
-        .select(col("doc_id"), col("p"),
-          Text.md5Long(concat(col("p").cast("string"), lit(":"),
-            col("h").cast("string")), 12).as("hv"))
-        .groupBy(col("doc_id"), col("p"))
-        .agg(min(col("hv")).as("sig"))
-      val banded = sigRows
-        .select(col("doc_id"), col("p"), col("sig"), explode(array(
-          schemes.map { case (b, r) =>
-            struct(lit(b).as("bands"),
-              (col("p") / r).cast("int").as("band"))
-          }: _*)).as("sc"))
-        .groupBy(col("doc_id"), col("sc.bands").as("bands"),
-          col("sc.band").as("band"))
-        .agg(concat_ws("|", transform(array_sort(collect_list(
-          struct(col("p"), col("sig")))), x =>
-          x.getField("sig").cast("string"))).as("key"))
-      // Round 15 (guide §8: decide with small rows, attach payloads
-      // once). The r14 shape joined the shingle SETS onto every band
-      // row before the self-join, so the band-key exchange carried
-      // each doc's whole shingle array 14× (once per band row, both
-      // sides) and the exact-Jaccard kernel ran once per (scheme,
-      // band) candidate OCCURRENCE. Now the self-join moves only the
-      // narrow (doc_id, bands, band, key) rows, candidates dedup to
-      // (bands, doc_a, doc_b) BEFORE any array is attached — `ok` is a
-      // function of the pair alone, so distinct-then-verify groups
-      // identically to verify-then-distinct — and the kernel runs once
-      // per DISTINCT pair across all three schemes, with the verdict
-      // hash-joined back to the per-scheme candidate sets.
-      val cand = banded.as("x").join(banded.as("y"),
-          col("x.bands") === col("y.bands") &&
-            col("x.band") === col("y.band") &&
-            col("x.key") === col("y.key") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.bands").as("bands"),
-          col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-        .distinct()
-      val verd = cand.select(col("doc_a"), col("doc_b")).distinct()
-        .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")),
-          "doc_a")
-        .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")),
-          "doc_b")
-        .select(col("doc_a"), col("doc_b"),
-          (expr("graft_sorted_intersect(sh_a, sh_b)").cast("long") * 9L
-            >= (size(col("sh_a")) + size(col("sh_b"))).cast("long") * 4L)
-            .as("ok"))
-      cand.join(verd, Seq("doc_a", "doc_b"))
+      val sets = hashSets(shex)
+      val cand = MinHash.candidates(MinHash.bandKeys(
+        MinHash.sigRows(shex, Seq("doc_id"), "h"),
+        Seq((8, 2), (4, 4), (2, 8))))
+      val verified = verifyPairs(
+        cand.select(col("doc_a"), col("doc_b")).distinct(), sets, 80)
+      cand.join(verified, Seq("doc_a", "doc_b"), "left")
         .groupBy(col("bands"))
         .agg(count(lit(1)).as("n_candidates"),
-          sum(when(col("ok"), 1L).otherwise(0L)).as("n_verified"))
+          count(col("jaccard")).as("n_verified"))
         .select(col("bands").cast("long").as("bands"),
           expr("CAST(16 DIV bands AS BIGINT)").as("rows_per_band"),
           when(col("bands") === 8, 0.353553)
@@ -889,12 +805,11 @@ object Dedup extends QueryModule {
       // pair dedup happens on the COMPACT (ids, pred, act) projection,
       // never on the arrays.
       //
-      // Occupancy cap (round 14, replacing round 13's count-derived
-      // doc_id-stride sample, whose gmod aggregate cost a THIRD corpus
-      // scan): the chunk-block candidate space is 4 × 2¹⁶ keys, which
+      // Occupancy cap (structural, so no count-derived sample and
+      // no third corpus scan): the chunk-block candidate space is 4 × 2¹⁶ keys, which
       // SATURATES past ~10⁵ docs — per-key occupancy and hence pair
       // count then grow quadratically with the corpus (measured 38×
-      // wall for 10× data uncapped). The cap is now STRUCTURAL: keep
+      // wall for 10× data uncapped). The cap keeps
       // the 8 lowest doc_ids per (chunk_id, chunk_val) posting list —
       // a rank-filtered partitioned window, so WindowGroupLimit bounds
       // each map task at 8 rows per key BEFORE the shuffle and the
@@ -1027,7 +942,7 @@ object Dedup extends QueryModule {
     // + per-doc row_number window (three extra shuffles and ~8 s of
     // extra lineage recompute at sf0.1; hash order costs ~2× the
     // candidates, 82k vs 43k, which the verify stage absorbs at ~µs
-    // each — 1.4 s total, faster than q61's LSH path). The prefix
+    // each — 1.4 s total). The prefix
     // bound is exact integer arithmetic ((8·sz+9) DIV 10 — a float
     // 0.8·sz could round the prefix SHORT and silently lose recall);
     // the size-ratio prune (min/max ≥ 0.8, implied by the threshold)
@@ -1036,10 +951,10 @@ object Dedup extends QueryModule {
     // word-level Jaccard ≥ 0.7 matches ~everything (51k pairs at
     // sf0.01 — measured, a runaway), while 3-word shingles
     // discriminate (25 true pairs at sf0.01). Verification is the
-    // shared native sorted-intersect kernel; same pair set as q61 by
-    // design — the oracle (the independent quadratic exact-Jaccard
-    // pair set) green proves this candidate scheme ALSO has 100%
-    // recall, via entirely different mathematics than LSH banding.
+    // shared native sorted-intersect kernel. The oracle (the
+    // independent quadratic exact-Jaccard pair set) green proves this
+    // candidate scheme has 100% recall, via entirely different
+    // mathematics than q61's LSH banding.
     "q158_ppjoin" -> ((s, d) => {
       val sh = shingled(s, d).select(col("doc_id"), col("sh"))
       val pref = sh.select(col("doc_id"), size(col("sh")).as("sz"),
@@ -1288,7 +1203,7 @@ object Dedup extends QueryModule {
       // ~7× (round 1 once, rounds 2-3 twice each through covered +
       // remaining, plus the final union) — and ReuseExchange can only
       // collapse some of those into shared exchanges, leaving 5 full
-      // scan+shingle+md5+distinct pipelines in the r13 plan. A
+      // scan+shingle+md5+distinct pipelines in the lazy plan. A
       // localCheckpoint materializes the element frame ONCE per
       // invocation (eagerly, inside the timed/verified construction —
       // NOT a cross-run cache: every bench warmup/timed/retry pass and
@@ -1372,6 +1287,26 @@ object Dedup extends QueryModule {
       |    list_distinct(list_transform(range(1, len(words) - 1),
       |      i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2])) AS sh
       |  FROM w WHERE len(words) >= 3)""".stripMargin
+
+  // DuckDB twin of the [[MinHash]] pipeline up to the signature:
+  // md5-hashed sorted distinct shingle sets (sh) and the 16-slot
+  // signature list (sg). q61 and q271 band and verify from here.
+  private val minhashCte =
+    """WITH w AS (SELECT doc_id, string_split(lower(trim(
+      |      regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS words
+      |  FROM documents),
+      |sh AS (SELECT doc_id,
+      |    list_sort(list_distinct(list_transform(
+      |      list_transform(range(1, len(words) - 1),
+      |        i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]),
+      |      x -> ('0x' || substr(md5(x), 1, 15))::BIGINT))) AS sh
+      |  FROM w WHERE len(words) >= 3),
+      |sg AS (SELECT doc_id, sh,
+      |    list_transform(range(0, 16), j ->
+      |      list_min(list_transform(sh, h ->
+      |        ('0x' || substr(md5(CAST(j AS VARCHAR) || ':'
+      |          || CAST(h AS VARCHAR)), 1, 12))::BIGINT))) AS sig
+      |  FROM sh),""".stripMargin
 
   def oracle: Map[String, String] = Map(
     "q316_winnowing" ->
@@ -1595,16 +1530,23 @@ object Dedup extends QueryModule {
         |    FROM documents))
         |WHERE rn = 1 ORDER BY doc_id""".stripMargin,
 
-    // exact ≥0.8-Jaccard pair set — O(n²) is fine for the oracle engine
-    // at sf0.01; the Spark side must reproduce it through LSH.
-    "q61_dedup_minhash" -> (shingleCte +
+    // replay of minhashPairs: 8×2 band keys over the shared signature,
+    // distinct candidates, exact Jaccard ≥ 0.8 on the hashed sets
+    "q61_dedup_minhash" -> (minhashCte +
       """
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |  len(list_intersect(a.sh, b.sh)) * 1.0
-        |    / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS jaccard
-        |FROM s a JOIN s b ON a.doc_id < b.doc_id
-        |WHERE len(list_intersect(a.sh, b.sh)) * 100
-        |  >= (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) * 80
+        |bd AS (SELECT doc_id, unnest(range(0, 8)) AS band, sig FROM sg),
+        |keyed AS (SELECT doc_id, band,
+        |    array_to_string(sig[band * 2 + 1 : band * 2 + 2], '|') AS key
+        |  FROM bd),
+        |cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
+        |  FROM keyed x JOIN keyed y ON x.band = y.band AND x.key = y.key
+        |    AND x.doc_id < y.doc_id),
+        |iu AS (SELECT doc_a, doc_b, len(list_intersect(a.sh, b.sh)) AS i,
+        |    len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS u
+        |  FROM cand JOIN sg a ON a.doc_id = doc_a
+        |    JOIN sg b ON b.doc_id = doc_b)
+        |SELECT doc_a, doc_b, CAST(i AS DOUBLE) / CAST(u AS DOUBLE) AS jaccard
+        |FROM iu WHERE i * 100 >= u * 80
         |ORDER BY doc_a, doc_b""".stripMargin),
 
     // full bit-exact replica of the SimHash pipeline: md5-prefix word
@@ -1750,22 +1692,8 @@ object Dedup extends QueryModule {
         |    - count(*)) > count(*) AS skewed
         |FROM bb GROUP BY bit ORDER BY bit""".stripMargin,
 
-    "q271_lsh_tuning" ->
-      """WITH w AS (SELECT doc_id, string_split(lower(trim(
-        |      regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS words
-        |  FROM documents),
-        |sh AS (SELECT doc_id,
-        |    list_sort(list_distinct(list_transform(
-        |      list_transform(range(1, len(words) - 1),
-        |        i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]),
-        |      x -> ('0x' || substr(md5(x), 1, 15))::BIGINT))) AS sh
-        |  FROM w WHERE len(words) >= 3),
-        |sg AS (SELECT doc_id, sh,
-        |    list_transform(range(0, 16), j ->
-        |      list_min(list_transform(sh, h ->
-        |        ('0x' || substr(md5(CAST(j AS VARCHAR) || ':'
-        |          || CAST(h AS VARCHAR)), 1, 12))::BIGINT))) AS sig
-        |  FROM sh),
+    "q271_lsh_tuning" -> (minhashCte +
+      """
         |sch AS (SELECT * FROM (VALUES (8, 2), (4, 4), (2, 8))
         |  s(b, r)),
         |bd AS (SELECT doc_id, sh, b,
@@ -1791,7 +1719,7 @@ object Dedup extends QueryModule {
         |    AS n_verified,
         |  CAST(sum(CASE WHEN ok THEN 1 ELSE 0 END) AS DOUBLE)
         |    / CAST(count(*) AS DOUBLE) AS precision
-        |FROM cand GROUP BY bands ORDER BY bands""".stripMargin,
+        |FROM cand GROUP BY bands ORDER BY bands""".stripMargin),
 
     "q263_simhash_eval" ->
       """WITH w AS (SELECT doc_id,
@@ -1934,11 +1862,10 @@ object Dedup extends QueryModule {
         |WHERE jw >= CAST(0.94 AS DOUBLE)
         |ORDER BY name_a, name_b""".stripMargin,
 
-    // the independent quadratic truth over raw shingle STRINGS (q61
-    // precedent: O(n²) is fine for the oracle engine at sf0.01) — by
-    // design the same pair set as q61's oracle, because the oracle's
-    // job here is to prove the prefix-filter candidate scheme loses no
-    // pair the exact computation finds.
+    // the independent quadratic truth over raw shingle STRINGS (O(n²)
+    // is fine for the oracle engine at sf0.01): the oracle's job here
+    // is to prove the prefix-filter candidate scheme loses no pair the
+    // exact computation finds.
     "q158_ppjoin" -> (shingleCte +
       """
         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -1950,7 +1877,7 @@ object Dedup extends QueryModule {
         |ORDER BY doc_a, doc_b""".stripMargin),
 
     // independent quadratic delta×base truth for the near stage; the
-    // same * 1.0 / spelling q61/q158 pinned bit-exact.
+    // same * 1.0 / spelling q158 pins bit-exact.
     "q181_delta_dedup" -> (shingleCte + """,
         |nn AS (SELECT count(*) AS n FROM documents),
         |fl AS (SELECT doc_id, (doc_id * 10 < n * 8) AS is_base

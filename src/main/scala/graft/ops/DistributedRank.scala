@@ -116,14 +116,17 @@ object DistributedRank {
     * group of its own, as in SQL `GROUP BY`.
     *
     * Returns one row per group: (partCols…, `out` array<double>) with
-    * the array in the given percentage order.
+    * the array in the given percentage order. With `bounds`, each
+    * element is instead array(v_lo, v_hi): the order statistics at
+    * ranks floor(pos) and ceil(pos) that the percentile lies between.
     */
   def exactPercentiles(
       df: DataFrame,
       value: Column,
       ps: Seq[Double],
       partCols: Seq[String] = Nil,
-      out: String = "ps"): DataFrame = {
+      out: String = "ps",
+      bounds: Boolean = false): DataFrame = {
     val pc = partCols.map(col)
     val vt = withRank(
         df.filter(value.isNotNull)
@@ -156,10 +159,11 @@ object DistributedRank {
         min(when(col("run_c") >= col("_ep_hi") + 1L, col("_ep_x")))
           .as("_ep_vhi"))
       .select((pc ++ Seq(col("_ep_i"),
-        when(col("_ep_lo") === col("_ep_hi")
+        (if (bounds) array(vlo, vhi)
+        else when(col("_ep_lo") === col("_ep_hi")
             || col("_ep_vlo") === col("_ep_vhi"), vlo)
           .otherwise((col("_ep_hi").cast("double") - col("_ep_pos")) * vlo
-            + (col("_ep_pos") - col("_ep_lo").cast("double")) * vhi)
+            + (col("_ep_pos") - col("_ep_lo").cast("double")) * vhi))
           .as("_ep_b"))): _*)
       .groupBy(pc: _*)
       .agg(sort_array(collect_list(struct(col("_ep_i"), col("_ep_b"))))

@@ -52,6 +52,42 @@ object Profile extends QueryModule {
       ((a * 1000000).toLong, table)
     }
 
+  /** q258/q281's shared frames over the distinct (event_type,
+    * user_id) audience rows. Returns the [[graft.ops.MinHash]]
+    * signature rows paired across types (type_a, type_b, p, sig_a,
+    * sig_b; type_a < type_b), and a function that attaches the exact
+    * Jaccard (n_inter, n_a, n_b, exact_jaccard) to a (type_a,
+    * type_b)-keyed estimate. Signature, intersection and set sizes all
+    * read the one distinct exchange.
+    */
+  private def audiencePairs(s: SparkSession, d: String)
+      : (DataFrame, DataFrame => DataFrame) = {
+    val tu = Tables.events(s, d)
+      .select(col("event_type"), col("user_id")).distinct()
+    val sigs = graft.ops.MinHash.sigRows(tu, Seq("event_type"), "user_id")
+    val pairs = sigs.select(col("event_type").as("type_a"), col("p"),
+        col("sig").as("sig_a"))
+      .join(sigs.select(col("event_type").as("type_b"), col("p"),
+        col("sig").as("sig_b")), Seq("p"))
+      .filter(col("type_a") < col("type_b"))
+    val sizes = tu.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_users"))
+    val inter = tu.select(col("event_type").as("type_a"),
+        col("user_id"))
+      .join(tu.select(col("event_type").as("type_b"), col("user_id")),
+        Seq("user_id"))
+      .filter(col("type_a") < col("type_b"))
+      .groupBy(col("type_a"), col("type_b"))
+      .agg(count(lit(1)).as("n_inter"))
+    (pairs, est => est.join(inter, Seq("type_a", "type_b"))
+      .join(sizes.select(col("event_type").as("type_a"),
+        col("n_users").as("n_a")), Seq("type_a"))
+      .join(sizes.select(col("event_type").as("type_b"),
+        col("n_users").as("n_b")), Seq("type_b"))
+      .withColumn("exact_jaccard", col("n_inter").cast("double")
+        / (col("n_a") + col("n_b") - col("n_inter")).cast("double")))
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // describe/summary: single-pass stats for all columns, stacked long.
     "q92_describe" -> ((s, d) => {
@@ -321,19 +357,18 @@ object Profile extends QueryModule {
       // bound snapped to 6 decimals: the two engines arrange the
       // interpolation arithmetic differently, and an unsnapped bound a
       // 1-ulp shy of a data value would flip that value's bucket.
-      // Round 14: computed by DistributedRank.exactPercentiles
-      // (bit-identical to the Percentile aggregate, helper doc) so no
-      // task holds a customer-scale value map; rfm is checkpointed
-      // once per invocation for its four consumers (q300 rationale).
-      // Round 15 (VERDICT r14 #3): the three per-metric
-      // exactPercentiles pipelines fold into ONE — the customer frame
-      // melts to a metric-tagged (m, v) frame (each metric cast to
+      // Computed by DistributedRank.exactPercentiles (bit-identical
+      // to the Percentile aggregate, helper doc) so no task holds a
+      // customer-scale value map; rfm is checkpointed once per
+      // invocation for its four consumers (q300 rationale). The three
+      // metrics share ONE exactPercentiles pipeline — the customer
+      // frame melts to a metric-tagged (m, v) frame (each metric cast to
       // double BEFORE the dedup; int days / count longs / 2-decimal
       // money all map injectively and monotonically into double at
       // these magnitudes, so dedup counts, rank order and the
       // interpolation inputs are bit-identical to the per-metric native
-      // grouping) and one partCols=metric call replaces three range
-      // exchanges + three checkpoint/probe chains with one of each.
+      // grouping), so one partCols=metric call plans one range
+      // exchange and one checkpoint/probe chain, not three.
       val rfmC = rfm.transform(graft.ops.Materialize.frame)
       val qs = Seq(0.2, 0.4, 0.6, 0.8)
       val melted = rfmC.select(explode(array(
@@ -844,47 +879,15 @@ object Profile extends QueryModule {
     // ≤|types|²-sized. A production sketch pipeline persists the
     // signatures and never rebuilds the exact side at all.
     "q258_minhash_overlap" -> ((s, d) => {
-      val tu = Tables.events(s, d)
-        .select(col("event_type"), col("user_id")).distinct()
-      val sigs = tu
-        .select(col("event_type"), col("user_id"),
-          explode(sequence(lit(0), lit(15))).as("p"))
-        .withColumn("hv", graft.ops.Text.md5Long(concat(
-          col("p").cast("string"), lit(":"),
-          col("user_id").cast("string")), 12))
-        .groupBy(col("event_type"), col("p"))
-        .agg(min(col("hv")).as("sig"))
-      val est = sigs.select(col("event_type").as("type_a"), col("p"),
-          col("sig").as("sig_a"))
-        .join(sigs.select(col("event_type").as("type_b"), col("p"),
-          col("sig").as("sig_b")), Seq("p"))
-        .filter(col("type_a") < col("type_b"))
-        .groupBy(col("type_a"), col("type_b"))
-        .agg(sum(when(col("sig_a") === col("sig_b"), 1L).otherwise(0L))
-          .as("matches"))
-      val sizes = tu.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_users"))
-      val inter = tu.select(col("event_type").as("type_a"),
-          col("user_id"))
-        .join(tu.select(col("event_type").as("type_b"), col("user_id")),
-          Seq("user_id"))
-        .filter(col("type_a") < col("type_b"))
-        .groupBy(col("type_a"), col("type_b"))
-        .agg(count(lit(1)).as("n_inter"))
-      est.join(inter, Seq("type_a", "type_b"))
-        .join(sizes.select(col("event_type").as("type_a"),
-          col("n_users").as("n_a")), Seq("type_a"))
-        .join(sizes.select(col("event_type").as("type_b"),
-          col("n_users").as("n_b")), Seq("type_b"))
+      val (pairs, withExact) = audiencePairs(s, d)
+      withExact(pairs.groupBy(col("type_a"), col("type_b"))
+          .agg(sum(when(col("sig_a") === col("sig_b"), 1L).otherwise(0L))
+            .as("matches")))
         .select(col("type_a"), col("type_b"), col("matches"),
           (col("matches").cast("double") / 16.0).as("est_jaccard"),
-          (col("n_inter").cast("double")
-            / (col("n_a") + col("n_b") - col("n_inter")).cast("double"))
-            .as("exact_jaccard"),
+          col("exact_jaccard"),
           abs(col("matches").cast("double") / 16.0
-            - col("n_inter").cast("double")
-            / (col("n_a") + col("n_b") - col("n_inter")).cast("double"))
-            .as("abs_err"))
+            - col("exact_jaccard")).as("abs_err"))
         .orderBy(col("type_a"), col("type_b"))
     }),
 
@@ -1003,52 +1006,21 @@ object Profile extends QueryModule {
     // k > p via a bounded explode, never a re-hash; estimates and the
     // exact Jaccard baseline are single divisions of exact longs.
     "q281_minhash_k_curve" -> ((s, d) => {
-      val tu = Tables.events(s, d)
-        .select(col("event_type"), col("user_id")).distinct()
-      val sigs = tu
-        .select(col("event_type"), col("user_id"),
-          explode(sequence(lit(0), lit(15))).as("p"))
-        .withColumn("hv", graft.ops.Text.md5Long(concat(
-          col("p").cast("string"), lit(":"),
-          col("user_id").cast("string")), 12))
-        .groupBy(col("event_type"), col("p"))
-        .agg(min(col("hv")).as("sig"))
-      val matches = sigs.select(col("event_type").as("type_a"),
-          col("p"), col("sig").as("sig_a"))
-        .join(sigs.select(col("event_type").as("type_b"), col("p"),
-          col("sig").as("sig_b")), Seq("p"))
-        .filter(col("type_a") < col("type_b"))
-        .select(col("type_a"), col("type_b"),
-          when(col("sig_a") === col("sig_b"), 1L).otherwise(0L)
-            .as("m"),
-          explode(expr("filter(array(4, 8, 16), k -> k > p)")).as("k"))
-        .groupBy(col("k"), col("type_a"), col("type_b"))
-        .agg(sum(col("m")).as("matches"))
-      val sizes = tu.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_users"))
-      val inter = tu.select(col("event_type").as("type_a"),
-          col("user_id"))
-        .join(tu.select(col("event_type").as("type_b"), col("user_id")),
-          Seq("user_id"))
-        .filter(col("type_a") < col("type_b"))
-        .groupBy(col("type_a"), col("type_b"))
-        .agg(count(lit(1)).as("n_inter"))
-      matches.join(inter, Seq("type_a", "type_b"))
-        .join(sizes.select(col("event_type").as("type_a"),
-          col("n_users").as("n_a")), Seq("type_a"))
-        .join(sizes.select(col("event_type").as("type_b"),
-          col("n_users").as("n_b")), Seq("type_b"))
+      val (pairs, withExact) = audiencePairs(s, d)
+      withExact(pairs
+          .select(col("type_a"), col("type_b"),
+            when(col("sig_a") === col("sig_b"), 1L).otherwise(0L)
+              .as("m"),
+            explode(expr("filter(array(4, 8, 16), k -> k > p)")).as("k"))
+          .groupBy(col("k"), col("type_a"), col("type_b"))
+          .agg(sum(col("m")).as("matches")))
         .select(col("k").cast("long").as("k"), col("type_a"),
           col("type_b"), col("matches"),
           (col("matches").cast("double") / col("k").cast("double"))
             .as("est_jaccard"),
-          (col("n_inter").cast("double")
-            / (col("n_a") + col("n_b") - col("n_inter")).cast("double"))
-            .as("exact_jaccard"),
+          col("exact_jaccard"),
           abs(col("matches").cast("double") / col("k").cast("double")
-            - col("n_inter").cast("double")
-            / (col("n_a") + col("n_b") - col("n_inter")).cast("double"))
-            .as("abs_err"))
+            - col("exact_jaccard")).as("abs_err"))
         .orderBy(col("k"), col("type_a"), col("type_b"))
     }),
 

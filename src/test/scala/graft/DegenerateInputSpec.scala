@@ -340,9 +340,26 @@ class DegenerateInputSpec extends AnyFunSuite {
     val rows = SparkEntry.queries("q39_approx_sketch")(spark, nullFlagDir)
       .collect().map(r => Option(r.getAs[String]("l_returnflag")) ->
         (r.getAs[Long]("exact_parts"), r.getAs[Boolean]("acd_within_5pct"),
-          r.getAs[Boolean]("p50_within_5pct"))).toMap
+          r.getAs[Boolean]("p50_in_rank_band"))).toMap
     assert(rows == Map(Some("A") -> (3L, true, true),
       Some("N") -> (1L, true, true), None -> (3L, true, true)))
+  }
+
+  test("q39: a two-row group's approx median stays in the oracle's TRUE band") {
+    // percentile_approx returns 15 on {15, 25} where the exact median
+    // is 20: 25% off by value, but the lower median by rank, and the
+    // oracle's answer for the flag is always TRUE.
+    val d = Paths.get("target/tmp/degenerate_two_row_median")
+      .toAbsolutePath.toString
+    import spark.implicits._
+    writeTable(d, "lineitem", Seq[(Long, String, Double)](
+      (1L, "A", 15.0), (2L, "A", 25.0))
+      .toDF("l_partkey", "l_returnflag", "l_extendedprice"))
+    val rows = SparkEntry.queries("q39_approx_sketch")(spark, d)
+      .collect().map(r => (r.getAs[String]("l_returnflag"),
+        r.getAs[Long]("exact_parts"), r.getAs[Boolean]("acd_within_5pct"),
+        r.getAs[Boolean]("p50_in_rank_band")))
+    assert(rows.toSeq == Seq(("A", 2L, true, true)))
   }
 
   test("q132: a NULL-flag group is dropped, as the oracle's USING join does") {

@@ -4,10 +4,12 @@ import graft.ops.{CorpusSignals, Dedup, Multimodal, Similarity}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Properties for the LLM-pipeline operators whose hash-based internals
-  * (xxhash64) have no DuckDB oracle: MinHash/LSH recall, SimHash
-  * consistency, ANN recall, and the multimodal decode stub. Exact-oracle
-  * coverage for the rest of graft.ops lives in the driver's DuckDB gate.
+/** Properties of the LLM-pipeline operators that a DuckDB oracle does
+  * not state: MinHash/LSH recall against the brute-force pair set (q61's
+  * oracle replays the LSH pipeline, so it pins the pairs LSH finds, not
+  * the ones it misses), SimHash consistency, ANN recall, and the
+  * multimodal decode stub. Exact-oracle coverage for the rest of
+  * graft.ops is the DuckDB oracle check (`tools/oracle_check.py`).
   */
 class OpsSpec extends AnyFunSuite {
   import SparkTestSession._

@@ -18,8 +18,9 @@ class PartitionInvarianceSpec extends AnyFunSuite {
 
   private val pinned = Seq(
     "q60_dedup_exact",     // sha256 keep-first
-    "q61_dedup_minhash",   // per-row minhash signatures + band joins +
-                           // native sorted-intersect verify: all exact
+    "q61_dedup_minhash",   // min-of-md5 signature rows (commutative),
+                           // band-key joins + native sorted-intersect
+                           // verify: all exact
     "q62_dedup_ngram",     // blocked exact-Jaccard integer percents
     "q63_dedup_simhash",   // md5-derived fingerprint bits + Hamming gate
     "q102_decontaminate",  // exact shingle-overlap counts, broadcast eval
