@@ -619,9 +619,7 @@ object Dedup extends QueryModule {
     // bit-exact vs the oracle (see Similarity's determinism note), so
     // the boundary comparison cannot flip between engines.
     "q68_dedup_embed" -> ((s, d) => {
-      val t = Similarity.withNorm(Tables.embeddings(s, d)
-        .select(col("vec_id"), Similarity.dvec(col("embedding")).as("emb"),
-          col("label")))
+      val t = Similarity.corpus(s, d)
       val a = t.select(col("label"), col("vec_id").as("vec_a"),
         col("emb").as("emb_a"), col("nrm").as("nrm_a"))
       val b = t.select(col("label"), col("vec_id").as("vec_b"),

@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   * math).
   *
   * Numeric determinism: both engines cast FLOAT[] → DOUBLE[] (exact) and
-  * fold products left-to-right — Spark `aggregate(zip_with(...))` and
-  * DuckDB `list_dot_product` are both sequential left-assoc sums
-  * (verified bit-exact over all sf0.01 pairs), so cosine values compare
+  * fold products left-to-right — Spark's `graft_dot` kernel and DuckDB's
+  * `list_dot_product` are both sequential left-assoc sums (verified
+  * bit-exact over all sf0.01 pairs), so cosine values compare
   * bit-for-bit with no rounding and ranking can never diverge.
   *
   * Scale: the query set is the small side — broadcast it; the corpus is
@@ -29,25 +29,16 @@ object Similarity extends QueryModule {
   private val TopK = 10
   private val NumQueries = 5
 
-  /** Left-assoc sequential dot product of two DOUBLE arrays: the native
-    * codegen kernel ([[graft.plans.DotProduct]], registered by
-    * GraftExtensions) when the session has it; an equivalent
-    * zip_with/aggregate fold otherwise. Both paths dot the common
-    * prefix of unequal-length inputs (the HOF path slices first —
-    * zip_with's null padding would otherwise poison the fold to NULL),
-    * so results are identical either way.
+  /** Left-assoc sequential dot product of two DOUBLE arrays over their
+    * common prefix: the native codegen kernel [[graft.plans.DotProduct]],
+    * which every [[graft.Session.builder]] session registers through
+    * GraftExtensions. [[PlansSpec]] checks it bit-exact against the
+    * `zip_with`/`aggregate` fold.
     */
   private[ops] def dot(a: Column, b: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) if s.catalog.functionExists("graft_dot") =>
-        call_function("graft_dot", a, b)
-      case _ =>
-        val n = least(size(a), size(b))
-        aggregate(zip_with(slice(a, lit(1), n), slice(b, lit(1), n),
-          (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-    }
+    call_function("graft_dot", a, b)
 
-  private[ops] def dvec(c: Column): Column = c.cast("array<double>")
+  private def dvec(c: Column): Column = c.cast("array<double>")
 
   /** Corpus and query frames carry a precomputed `nrm`/`q_nrm` column —
     * self-norms are per-vector, so computing them inside the pair loop
@@ -55,11 +46,103 @@ object Similarity extends QueryModule {
     * `dot/(nrm*q_nrm)` at the pair keep the exact IEEE op order of the
     * inline form, so scores stay bit-identical to the DuckDB oracle.
     */
-  private[ops] def withNorm(df: DataFrame): DataFrame =
+  private def withNorm(df: DataFrame): DataFrame =
     df.withColumn("nrm", sqrt(dot(col("emb"), col("emb"))))
 
   private def pairCosine: Column =
     dot(col("emb"), col("q_emb")) / (col("nrm") * col("q_nrm"))
+
+  /** The normed embedding corpus (vec_id, emb, label, nrm) that every
+    * cosine query scans. */
+  private[ops] def corpus(s: SparkSession, d: String): DataFrame =
+    withNorm(Tables.embeddings(s, d)
+      .select(col("vec_id"), dvec(col("embedding")).as("emb"), col("label")))
+
+  /** The probe set: the first `n` corpus vectors as queries (query_id,
+    * q_emb, q_nrm, q_label) — the small side of every pair join. */
+  private def probeSet(corpus: DataFrame, n: Int): DataFrame =
+    corpus.filter(col("vec_id") < n)
+      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"),
+        col("nrm").as("q_nrm"), col("label").as("q_label"))
+
+  /** Corpus rows joined to their probes → (keys…, query_id, vec_id,
+    * cos_sim), self-matches dropped. */
+  private def cosPairs(joined: DataFrame, keys: Column*): DataFrame =
+    joined.filter(col("vec_id") =!= col("query_id"))
+      .select(keys ++ Seq(col("query_id"), col("vec_id"),
+        pairCosine.as("cos_sim")): _*)
+
+  /** Brute force: every corpus vector against every (broadcast) probe. */
+  private def allPairs(corpus: DataFrame, probes: DataFrame,
+      keys: Column*): DataFrame =
+    cosPairs(corpus.crossJoin(broadcast(probes)), keys: _*)
+
+  /** IVF over the stored labels: each probe against its own label's
+    * vectors. */
+  private def sameLabelPairs(corpus: DataFrame, probes: DataFrame): DataFrame =
+    corpus.join(broadcast(probes),
+        col("label") === col("q_label") && col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"), pairCosine.as("cos_sim"))
+
+  /** A pair's exact cosine rank within its query (and the `by` keys):
+    * row_number over (cos_sim desc, vec_id asc), so the smaller vec_id
+    * wins a tie, as in every oracle. */
+  private def cosRank(by: String*): Column =
+    row_number().over(Window.partitionBy((by :+ "query_id").map(col): _*)
+      .orderBy(col("cos_sim").desc, col("vec_id").asc))
+
+  /** The exact cosine top-k of each query, ranked in `rank`. */
+  private def topK(pairs: DataFrame, k: Int): DataFrame =
+    pairs.withColumn("rank", cosRank()).filter(col("rank") <= k)
+
+  /** The top-k as a neighbor list (query_id, neighbor_id, rank, cos_sim). */
+  private def neighbors(pairs: DataFrame, k: Int): DataFrame =
+    topK(pairs, k).select(col("query_id"), col("vec_id").as("neighbor_id"),
+      col("rank"), col("cos_sim"))
+
+  /** IVF seeds (cell, c_emb, c_nrm): the min-vec_id vector of each label,
+    * a deterministic medoid — float centroid averages would be
+    * summation-order-noisy and break the oracle. */
+  private def ivfSeeds(corpus: DataFrame): DataFrame =
+    corpus
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("label")).orderBy(col("vec_id"))))
+      .filter(col("rn") === 1)
+      .select(col("label").as("cell"), col("emb").as("c_emb"),
+        col("nrm").as("c_nrm"))
+
+  /** The corpus with each vector's IVF cell: its nearest seed, the
+    * smaller cell on a cosine tie. The argmax is an aggregate, so its
+    * map-side partial folds the seed fan-out to one row per vector
+    * before any shuffle. */
+  private def ivfAssigned(corpus: DataFrame, seeds: DataFrame): DataFrame =
+    corpus.join(corpus.crossJoin(broadcast(seeds))
+      .select(col("vec_id"), col("cell"),
+        (dot(col("emb"), col("c_emb")) / (col("nrm") * col("c_nrm")))
+          .as("sim"))
+      .groupBy(col("vec_id"))
+      .agg(max_by(col("cell"), struct(col("sim"), -col("cell"))).as("cell")),
+      "vec_id")
+
+  /** Each probe's `nprobe` nearest cells (query_id, q_emb, q_nrm, cell,
+    * crank), `crank` ranking them by (sim desc, cell asc). */
+  private def probeCells(probes: DataFrame, seeds: DataFrame,
+      nprobe: Int): DataFrame =
+    probes.crossJoin(broadcast(seeds))
+      .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cell"),
+        (dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")))
+          .as("sim"))
+      .withColumn("crank", row_number().over(Window.partitionBy(
+        col("query_id")).orderBy(col("sim").desc, col("cell").asc)))
+      .filter(col("crank") <= nprobe)
+      .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cell"),
+        col("crank"))
+
+  /** IVF multi-probe top-5 (q76b, q123): the exact top-5 of each probe
+    * among the vectors of its probed `cells`. */
+  private def ivfTop5(cells: DataFrame, probes: DataFrame): DataFrame =
+    neighbors(cosPairs(cells.join(broadcast(probes), Seq("cell"))), 5)
+      .orderBy(col("query_id"), col("rank"))
 
   /** int8-quantized corpus: vec_id, the 6-decimal-snapped symmetric
     * scale 127/max|x| (identical IEEE-754 double in both engines), and
@@ -89,29 +172,23 @@ object Similarity extends QueryModule {
           greatest(lit(-127L), least(lit(127L),
             floor(v * col("scale6") + 0.5).cast("long")))).as("qs"))
 
-  /** Corpus × broadcast(queries) scored pairs (self-match excluded). */
+  /** Every corpus vector scored against the `NumQueries` probes. */
   private def scored(s: SparkSession, d: String): DataFrame = {
-    val corpus = withNorm(Tables.embeddings(s, d)
-      .select(col("vec_id"), dvec(col("embedding")).as("emb")))
-    val queries = corpus.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"),
-        col("nrm").as("q_nrm"))
-    corpus.crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), pairCosine.as("cos_sim"))
+    val c = corpus(s, d)
+    allPairs(c, probeSet(c, NumQueries))
   }
 
   /** ANN parameters: `NumTables` hash tables × `Bits` hyperplane sign
     * bits. Hyperplane component r(k,i) = ±1 from the parity of the first
     * hex nibble of md5("hp:k:i") (k = table*Bits + bit, i = dimension) —
-    * fully deterministic, no stored model, and — unlike the xxhash64
-    * derivation it replaced in round 9 — reproducible in DuckDB, which
-    * shares md5 but not xxhash64 (the q63 recipe), so bucket assignment,
-    * candidate generation, and the exact re-rank are all oracle-checked
-    * end-to-end. 8×3 favors recall (a vector pair at angle θ collides in
-    * a table with (1-θ/π)³, across 8 tables ≈ certain for same-cluster
-    * pairs; measured ≥0.8 per query at all three test scales); candidate
-    * cost is bounded by the exact re-rank touching only bucket-mates.
+    * fully deterministic, no stored model, and reproducible in DuckDB,
+    * which shares md5 but not xxhash64 (the q63 recipe), so bucket
+    * assignment, candidate generation, and the exact re-rank are all
+    * oracle-checked end-to-end. 8×3 favors recall (a vector pair at
+    * angle θ collides in a table with (1-θ/π)³, across 8 tables ≈
+    * certain for same-cluster pairs; measured ≥0.8 per query at all
+    * three test scales); candidate cost is bounded by the exact re-rank
+    * touching only bucket-mates.
     */
   private val NumTables = 8
   private val Bits = 3
@@ -161,8 +238,8 @@ object Similarity extends QueryModule {
     // int8 embedding quantization — the memory-compression step a
     // 100 TB ANN index needs (4x smaller vectors, SIMD-friendly):
     // per-vector symmetric scale 127/max|x|, snapped to 6 decimals so
-    // both engines compute the identical IEEE-754 double (the ScalarMath
-    // r6 recipe), then q_i = floor(x_i·scale + 0.5). Everything is
+    // both engines compute the identical IEEE-754 double
+    // (`Parity.snap6`), then q_i = floor(x_i·scale + 0.5). Everything is
     // per-row HOFs (zero shuffles before the contract sort) and every
     // emitted stat is an exact integer except the snapped scale itself;
     // zero-vectors (unquantizable: amax = 0) are shed by the guard
@@ -239,9 +316,9 @@ object Similarity extends QueryModule {
     // are order-free comparisons of identical doubles; the median goes
     // through the exact percentile with the q219 6-decimal snap.
     "q223_norm_audit" -> ((s, d) => {
-      // round 14: the median rides DistributedRank.exactPercentiles
-      // (bit-identical, helper doc) instead of the Percentile
-      // aggregate whose per-label value map holds an embedding-scale
+      // The median rides DistributedRank.exactPercentiles
+      // (bit-identical, helper doc), not the Percentile aggregate,
+      // whose per-label value map would hold an embedding-scale
       // distinct set in one task; the dot-product frame is
       // checkpointed once per invocation for its two consumers.
       val n2f = Tables.embeddings(s, d)
@@ -402,11 +479,10 @@ object Similarity extends QueryModule {
     // integer Jaccard parts), so ranks — and the fused doubles — are
     // oracle-identical.
     "q141_rrf_fusion" -> ((s, d) => {
-      val corpus = withNorm(Tables.embeddings(s, d)
-        .select(col("vec_id"), dvec(col("embedding")).as("emb")))
-      val qv = corpus.filter(col("vec_id") === 0)
+      val c = corpus(s, d)
+      val qv = c.filter(col("vec_id") === 0)
         .select(col("emb").as("q_emb"), col("nrm").as("q_nrm"))
-      val rankA = corpus.filter(col("vec_id") =!= 0)
+      val rankA = c.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(qv))
         .select(col("vec_id").as("id"), pairCosine.as("cos_sim"))
         .orderBy(col("cos_sim").desc, col("id").asc).limit(100)
@@ -513,7 +589,7 @@ object Similarity extends QueryModule {
           transform(col("embedding"), v => v.cast("double")).as("x"))
       // Row-based read, not Encoders.scalaDouble: a global max over an
       // EMPTY corpus is one NULL row, and the non-nullable double
-      // encoder asserts on it (empty-corpus probe, r14)
+      // encoder asserts on it (an empty corpus)
       val amaxG = x
         .agg(max(aggregate(col("x"), lit(0.0), (a, v) => greatest(a, abs(v)))))
         .collect().headOption
@@ -574,16 +650,8 @@ object Similarity extends QueryModule {
 
     // exact brute-force cosine top-k: the correctness baseline every ANN
     // variant is measured against.
-    "q70_cosine_topk" -> ((s, d) => {
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      scored(s, d)
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= TopK)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          col("rank"), col("cos_sim"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
+    "q70_cosine_topk" -> ((s, d) =>
+      neighbors(scored(s, d), TopK).orderBy(col("query_id"), col("rank"))),
 
     // NDCG@10 ranking-quality evaluation — the graded complement of
     // q71's recall@k: how close does the IVF-style within-cell ANN
@@ -600,21 +668,11 @@ object Similarity extends QueryModule {
     // query sets; the eval join touches ≤10·|queries| rows.
     "q169_ndcg" -> ((s, d) => {
       val K = 10
-      val wx = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      val exact = scored(s, d)
-        .withColumn("rank", row_number().over(wx)).filter(col("rank") <= K)
+      val exact = topK(scored(s, d), K)
         .select(col("query_id"), col("vec_id"),
           (lit(11) - col("rank")).cast("long").as("rel"), col("rank"))
-      val corpus = withNorm(Tables.embeddings(s, d)
-        .select(col("vec_id"), dvec(col("embedding")).as("emb"), col("label")))
-      val queries = corpus.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("query_id"), col("emb").as("q_emb"),
-          col("nrm").as("q_nrm"), col("label").as("q_label"))
-      val run = corpus.join(broadcast(queries),
-          col("label") === col("q_label") && col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"), pairCosine.as("cos_sim"))
-        .withColumn("rank", row_number().over(wx)).filter(col("rank") <= K)
+      val c = corpus(s, d)
+      val run = topK(sameLabelPairs(c, probeSet(c, NumQueries)), K)
         .select(col("query_id"), col("vec_id"), col("rank"))
       def units(rel: Column, rank: Column): Column = {
         val disc = snap6(log2(rank.cast("double") + 1.0))
@@ -649,16 +707,11 @@ object Similarity extends QueryModule {
     // shape: per-query top-5 is a bounded window off the broadcast
     // query set; the vote is a ≤5-row aggregate per query.
     "q174_knn_classify" -> ((s, d) => {
-      val wx = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos_sim").desc, col("vec_id").asc)
       val labels = Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"))
       val truth = labels.select(col("vec_id").as("query_id"),
         col("label").as("true_label"))
-      val nn5 = scored(s, d)
-        .withColumn("rank", row_number().over(wx))
-        .filter(col("rank") <= 5)
-        .join(labels, "vec_id")
+      val nn5 = topK(scored(s, d), 5).join(labels, "vec_id")
       val votes = nn5.groupBy(col("query_id"), col("label"))
         .agg(count(lit(1)).as("n_votes"))
       // vote key packs (votes, -label) into one long — votes ≤ 5 and
@@ -682,66 +735,22 @@ object Similarity extends QueryModule {
     // within the cell; bit-exact doubles make this fully oracle-able,
     // unlike the hash-based LSH variant below.
     "q76_ann_ivf" -> ((s, d) => {
-      val corpus = withNorm(Tables.embeddings(s, d)
-        .select(col("vec_id"), dvec(col("embedding")).as("emb"), col("label")))
-      val queries = corpus.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("query_id"), col("emb").as("q_emb"),
-          col("nrm").as("q_nrm"), col("label").as("q_label"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      corpus.join(broadcast(queries),
-          col("label") === col("q_label") && col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"), pairCosine.as("cos_sim"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          col("rank"), col("cos_sim"))
+      val c = corpus(s, d)
+      neighbors(sameLabelPairs(c, probeSet(c, NumQueries)), 5)
         .orderBy(col("query_id"), col("rank"))
     }),
 
-    // IVF with COMPUTED coarse cells + multi-probe: seeds are the
-    // min-vec_id vector per label (deterministic medoids — float
-    // centroid averages would be summation-order-noisy and break the
-    // oracle); every corpus vector is assigned to its nearest seed by
-    // an aggregated argmax (map-side partial: the 10× seed fan-out
-    // reduces to one row per vector before any shuffle), and a query
-    // probes its nprobe=2 nearest cells — the recall knob a real IVF
-    // index turns. Exact cosine reranks candidates; everything is
+    // IVF with COMPUTED coarse cells + multi-probe: each vector's cell
+    // is its nearest label medoid (`ivfSeeds`, `ivfAssigned`), and a
+    // query probes its nprobe=2 nearest cells — the recall knob a real
+    // IVF index turns. Exact cosine reranks candidates; everything is
     // bit-exact doubles, so the full index build + probe pipeline is
     // oracle-checked, not just recall-asserted.
     "q76b_ann_ivf_probe" -> ((s, d) => {
-      val corpus = withNorm(Tables.embeddings(s, d)
-        .select(col("vec_id"), dvec(col("embedding")).as("emb"), col("label")))
-      val seedW = Window.partitionBy(col("label")).orderBy(col("vec_id"))
-      val seeds = corpus
-        .withColumn("rn", row_number().over(seedW)).filter(col("rn") === 1)
-        .select(col("label").as("cell"), col("emb").as("c_emb"),
-          col("nrm").as("c_nrm"))
-      val seedSim = dot(col("emb"), col("c_emb")) / (col("nrm") * col("c_nrm"))
-      val cellOf = corpus.crossJoin(broadcast(seeds))
-        .select(col("vec_id"), col("cell"), seedSim.as("sim"))
-        .groupBy(col("vec_id"))
-        .agg(max_by(col("cell"), struct(col("sim"), -col("cell"))).as("cell"))
-      val assigned = corpus.join(cellOf, "vec_id")
-      val qw = Window.partitionBy(col("query_id"))
-        .orderBy(col("sim").desc, col("cell").asc)
-      val probes = corpus.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("query_id"), col("emb"), col("nrm"))
-        .crossJoin(broadcast(seeds))
-        .select(col("query_id"), col("emb").as("q_emb"), col("nrm").as("q_nrm"),
-          col("cell"), seedSim.as("sim"))
-        .withColumn("qrn", row_number().over(qw)).filter(col("qrn") <= 2)
-        .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cell"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      assigned.join(broadcast(probes), Seq("cell"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"), pairCosine.as("cos_sim"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          col("rank"), col("cos_sim"))
-        .orderBy(col("query_id"), col("rank"))
+      val c = corpus(s, d)
+      val seeds = ivfSeeds(c)
+      ivfTop5(ivfAssigned(c, seeds),
+        probeCells(probeSet(c, NumQueries), seeds, 2))
     }),
 
     // Embedding split-drift monitor — the dense-space companion of
@@ -800,48 +809,19 @@ object Similarity extends QueryModule {
     // queries-broadcast corpus scan as q70 — the measurement is run
     // on a sample; the INDEX path is what serves at 100 TB.
     "q275_ann_recall" -> ((s, d) => {
-      val corpus = withNorm(Tables.embeddings(s, d)
-        .select(col("vec_id"), dvec(col("embedding")).as("emb"), col("label")))
-      val seedW = Window.partitionBy(col("label")).orderBy(col("vec_id"))
-      val seeds = corpus
-        .withColumn("rn", row_number().over(seedW)).filter(col("rn") === 1)
-        .select(col("label").as("cell"), col("emb").as("c_emb"),
-          col("nrm").as("c_nrm"))
-      val seedSim = dot(col("emb"), col("c_emb")) / (col("nrm") * col("c_nrm"))
-      val cellOf = corpus.crossJoin(broadcast(seeds))
-        .select(col("vec_id"), col("cell"), seedSim.as("sim"))
-        .groupBy(col("vec_id"))
-        .agg(max_by(col("cell"), struct(col("sim"), -col("cell"))).as("cell"))
-      val assigned = corpus.join(cellOf, "vec_id")
-      val queries = corpus.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("query_id"), col("emb").as("q_emb"),
-          col("nrm").as("q_nrm"))
-      val exW = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      val exact = corpus.crossJoin(broadcast(queries))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"), pairCosine.as("cos_sim"))
-        .withColumn("rank", row_number().over(exW))
-        .filter(col("rank") <= 5)
+      val c = corpus(s, d)
+      val seeds = ivfSeeds(c)
+      val queries = probeSet(c, NumQueries)
+      val exact = topK(allPairs(c, queries), 5)
         .select(col("query_id"), col("vec_id"))
       val nExact = exact.agg(count(lit(1)).as("n_exact"))
-      val qw = Window.partitionBy(col("query_id"))
-        .orderBy(col("sim").desc, col("cell").asc)
-      val probes = queries.crossJoin(broadcast(seeds))
-        .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cell"),
-          (dot(col("q_emb"), col("c_emb"))
-            / (col("q_nrm") * col("c_nrm"))).as("sim"))
-        .withColumn("crank", row_number().over(qw))
-        .filter(col("crank") <= 3)
+      val probes = probeCells(queries, seeds, 3)
         .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cell"),
           explode(sequence(col("crank"), lit(3))).as("nprobe"))
-      val aw = Window.partitionBy(col("nprobe"), col("query_id"))
-        .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      val approx = assigned.join(broadcast(probes), Seq("cell"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("nprobe"), col("query_id"), col("vec_id"),
-          pairCosine.as("cos_sim"))
-        .withColumn("rank", row_number().over(aw))
+      val approx = cosPairs(
+          ivfAssigned(c, seeds).join(broadcast(probes), Seq("cell")),
+          col("nprobe"))
+        .withColumn("rank", cosRank("nprobe"))
       approx
         .withColumn("hit", when(col("rank") <= 5, 1L).otherwise(0L))
         .join(exact.withColumn("ex", lit(1)), Seq("query_id", "vec_id"),
@@ -875,46 +855,19 @@ object Similarity extends QueryModule {
     "q123_ann_partitioned" -> ((s, d) => {
       val dir =
         s"target/tmp/ann/${d.replaceAll("[^A-Za-z0-9.]", "_")}/ivf_cells"
-      val corpus = withNorm(Tables.embeddings(s, d)
-        .select(col("vec_id"), dvec(col("embedding")).as("emb"), col("label")))
-      val seedW = Window.partitionBy(col("label")).orderBy(col("vec_id"))
-      val seeds = corpus
-        .withColumn("rn", row_number().over(seedW)).filter(col("rn") === 1)
-        .select(col("label").as("cell"), col("emb").as("c_emb"),
-          col("nrm").as("c_nrm"))
-      val seedSim = dot(col("emb"), col("c_emb")) / (col("nrm") * col("c_nrm"))
-      val cellOf = corpus.crossJoin(broadcast(seeds))
-        .select(col("vec_id"), col("cell"), seedSim.as("sim"))
-        .groupBy(col("vec_id"))
-        .agg(max_by(col("cell"), struct(col("sim"), -col("cell"))).as("cell"))
-      val cellsOut = corpus.join(cellOf, "vec_id")
+      val c = corpus(s, d)
+      val seeds = ivfSeeds(c)
+      val cellsOut = ivfAssigned(c, seeds)
         .select(col("vec_id"), col("emb"), col("nrm"), col("cell"))
       cellsOut.write.mode("overwrite").partitionBy("cell").parquet(dir)
-      val qw = Window.partitionBy(col("query_id"))
-        .orderBy(col("sim").desc, col("cell").asc)
-      val probes = corpus.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("query_id"), col("emb"), col("nrm"))
-        .crossJoin(broadcast(seeds))
-        .select(col("query_id"), col("emb").as("q_emb"), col("nrm").as("q_nrm"),
-          col("cell"), seedSim.as("sim"))
-        .withColumn("qrn", row_number().over(qw)).filter(col("qrn") <= 2)
-        .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cell"))
+      val probes = probeCells(probeSet(c, NumQueries), seeds, 2)
       val probedCells = probes.select(col("cell")).distinct()
         .collect().map(_.getInt(0)).sorted
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos_sim").desc, col("vec_id").asc)
       // explicit read-back schema (q81 rationale): an empty corpus
       // writes no parquet footers and inference would fail the job
-      s.read.schema(cellsOut.schema).parquet(dir)
-        .filter(col("cell").isin(probedCells.map(Integer.valueOf): _*))
-        .join(broadcast(probes), Seq("cell"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"), pairCosine.as("cos_sim"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          col("rank"), col("cos_sim"))
-        .orderBy(col("query_id"), col("rank"))
+      ivfTop5(s.read.schema(cellsOut.schema).parquet(dir)
+        .filter(col("cell").isin(probedCells.map(Integer.valueOf): _*)),
+        probes)
     }),
 
     // LSH-bucketed ANN top-k: candidates = vectors sharing any of the 8
@@ -928,9 +881,7 @@ object Similarity extends QueryModule {
     // vector store would report, visible in the result rather than only
     // in OpsSpec (which still pins recall >= 0.5 on the column).
     "q71_ann_lsh" -> ((s, d) => {
-      val corpus = withNorm(Tables.embeddings(s, d)
-        .select(col("vec_id"), dvec(col("embedding")).as("emb")))
-      val bucketed = corpus.select(col("vec_id"), col("emb"), col("nrm"), posexplode(
+      val bucketed = corpus(s, d).select(col("vec_id"), col("emb"), col("nrm"), posexplode(
         array((0 until NumTables).map(t => bucket(col("emb"), t)): _*))
         .as(Seq("table_id", "bucket_id")))
       val qb = bucketed.filter(col("vec_id") < NumQueries)
@@ -943,20 +894,11 @@ object Similarity extends QueryModule {
       // embeddings — at cluster scale the shuffle, not the FLOPs, is
       // the bottleneck. cos_sim is a pure function of the pair, so
       // dedup keyed on (query_id, vec_id) is unaffected.
-      val cand = bucketed.join(broadcast(qb), Seq("table_id", "bucket_id"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"), pairCosine.as("cos_sim"))
+      val cand = cosPairs(
+          bucketed.join(broadcast(qb), Seq("table_id", "bucket_id")))
         .dropDuplicates("query_id", "vec_id")
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      val lshTop = cand
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= TopK)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          col("rank"), col("cos_sim"))
-      val exactTop = scored(s, d)
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= TopK)
+      val lshTop = neighbors(cand, TopK)
+      val exactTop = topK(scored(s, d), TopK)
         .select(col("query_id").as("e_qid"), col("vec_id").as("e_vid"))
       val perQuery = Window.partitionBy(col("query_id"))
       lshTop
@@ -1127,21 +1069,11 @@ object Similarity extends QueryModule {
     // per-label mean (q169 rule). Probes with no same-label neighbor
     // contribute rr = 0 (standard MRR).
     "q365_label_mrr" -> ((s, d) => {
-      val corpus = withNorm(Tables.embeddings(s, d)
-        .select(col("vec_id"), col("label"), dvec(col("embedding")).as("emb")))
-      val probes = corpus.filter(col("vec_id") < 50)
-        .select(col("vec_id").as("query_id"), col("label").as("q_label"),
-          col("emb").as("q_emb"), col("nrm").as("q_nrm"))
-      val ranked = corpus.crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("q_label"), col("label"),
-          pairCosine.as("cos_sim"), col("vec_id"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("cos_sim").desc, col("vec_id"))))
-      ranked
+      val c = corpus(s, d)
+      allPairs(c, probeSet(c, 50), col("q_label"), col("label"))
+        .withColumn("rank", cosRank())
         .groupBy(col("query_id"), col("q_label"))
-        .agg(min(when(col("label") === col("q_label"), col("rk")))
+        .agg(min(when(col("label") === col("q_label"), col("rank")))
           .as("first_hit"))
         .withColumn("rr6", coalesce(
           expr("1000000L DIV first_hit"), lit(0L)))
@@ -1162,19 +1094,9 @@ object Similarity extends QueryModule {
     // is a division of exact longs. Same bounded-probe scale shape
     // as q365.
     "q366_knn_accuracy" -> ((s, d) => {
-      val corpus = withNorm(Tables.embeddings(s, d)
-        .select(col("vec_id"), col("label"), dvec(col("embedding")).as("emb")))
-      val probes = corpus.filter(col("vec_id") < 50)
-        .select(col("vec_id").as("query_id"), col("label").as("q_label"),
-          col("emb").as("q_emb"), col("nrm").as("q_nrm"))
-      val top5 = corpus.crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("q_label"), col("label"),
-          pairCosine.as("cos_sim"), col("vec_id"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("cos_sim").desc, col("vec_id"))))
-        .filter(col("rk") <= 5)
+      val c = corpus(s, d)
+      val top5 = topK(
+        allPairs(c, probeSet(c, 50), col("q_label"), col("label")), 5)
       val pred = top5.groupBy(col("query_id"), col("q_label"), col("label"))
         .agg(count(lit(1)).as("votes"))
         .withColumn("vr", row_number().over(

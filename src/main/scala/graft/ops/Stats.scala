@@ -2,18 +2,18 @@ package graft.ops
 
 import graft.ops.Parity.{dec, fix6, snap6}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
-/** Library forms of the monitoring/stats tier (VERDICT r12 #5): the
-  * drift, survival, and capability operators as parameterized
-  * DataFrame→DataFrame functions. Each is THE implementation its
-  * oracle-pinned catalog query runs (q224/q225/q381/q382 delegate
-  * here), so the facade path and the verified path cannot drift —
-  * the q60/dedupExact pattern. Exposed to users via
+/** Library forms of the monitoring/stats tier: the drift, survival,
+  * and capability operators as parameterized DataFrame→DataFrame
+  * functions. Each is THE implementation its oracle-pinned catalog
+  * query runs (q224/q225/q381/q382 delegate here, and q232/q313 build
+  * on [[riskSet]]), so the facade path and the verified path cannot
+  * drift — the q60/dedupExact pattern. Exposed to users via
   * [[graft.api.Frame.stats]].
   *
-  * Scale shapes are unchanged from the catalog queries: every
+  * Scale shapes match the catalog queries: every
   * statistic folds a map-side-combined bounded frame (distinct values,
   * buckets, event times, one moment row) — no corpus-sized windows.
   */
@@ -43,8 +43,8 @@ object Stats {
       .withColumn("n_b", sum(col("cb")).over(wAll))
       // one-sample groups (n_a or n_b = 0) yield ks = NULL, never an
       // ANSI DIVIDE_BY_ZERO — the q333/q334 NULL-never-error pattern
-      // (ADVICE r13: a group can exist on one side only, e.g. an
-      // event_type first seen after the split date)
+      // (a group can exist on one side only, e.g. an event_type first
+      // seen after the split date)
       .withColumn("diff", when(col("n_a") > 0L && col("n_b") > 0L, abs(
         col("cum_a").cast("double") / col("n_a").cast("double")
           - col("cum_b").cast("double") / col("n_b").cast("double"))))
@@ -80,7 +80,6 @@ object Stats {
       .withColumn("used", col("ca") > 0 && col("cb") > 0)
       // the divisions live INSIDE the used guard: used ⇒ ca,cb ≥ 1 ⇒
       // n_a,n_b ≥ 1, so no ANSI DIVIDE_BY_ZERO for one-sample groups
-      // (ADVICE r13 — the old unconditional pa = ca/n_a threw)
       .withColumn("pa", when(col("used"),
         col("ca").cast("double") / col("n_a").cast("double")))
       .withColumn("pb", when(col("used"),
@@ -102,6 +101,30 @@ object Stats {
       .orderBy(col(groupCol))
   }
 
+  /** The running frame over event time `t`: every row up to this one. */
+  private[graft] val wCum: WindowSpec = Window.orderBy(col("t"))
+    .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+  /** The survival risk set over per-subject rows (`t` = integer
+    * event/censor time, `eventCol` = true ⟺ the event fired, false ⟺
+    * censored at t): one row per distinct t with d events, c
+    * censorings, n_users, the running total cum_all, and at_risk =
+    * the subjects still observed at t. The corpus work is one
+    * map-side-combined re-group to the ≤|distinct t| frame; the
+    * running sum windows over that frame. Shared by q232, q313 and
+    * [[kmRmst]].
+    */
+  private[graft] def riskSet(df: DataFrame, eventCol: String): DataFrame = {
+    val byT = df.groupBy(col("t"))
+      .agg(sum(when(col(eventCol), 1L).otherwise(0L)).as("d"),
+        sum(when(col(eventCol), 0L).otherwise(1L)).as("c"))
+    val tot = byT.agg(sum(col("d") + col("c")).as("n_users"))
+    byT.crossJoin(broadcast(tot))
+      .withColumn("cum_all", sum(col("d") + col("c")).over(wCum))
+      .withColumn("at_risk",
+        col("n_users") - col("cum_all") + col("d") + col("c"))
+  }
+
   /** Kaplan-Meier restricted mean survival time at horizon `tau` over
     * per-subject rows (`tCol` = integer event/censor time, `eventCol`
     * = true ⟺ the event fired, false ⟺ censored at t) — q381's
@@ -113,18 +136,9 @@ object Stats {
   private[graft] def kmRmst(df: DataFrame, tCol: String,
       eventCol: String, tau: Long): DataFrame = {
     require(tau > 0L, s"kmRmst horizon tau must be > 0, got $tau")
-    val byT = df
-      .select(col(tCol).cast("long").as("t"), col(eventCol).as("ev"))
-      .groupBy(col("t"))
-      .agg(sum(when(col("ev"), 1L).otherwise(0L)).as("d"),
-        sum(when(col("ev"), 0L).otherwise(1L)).as("c"))
-    val tot = byT.agg(sum(col("d") + col("c")).as("n_users"))
-    val wCum = Window.orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val steps = byT.crossJoin(broadcast(tot))
-      .withColumn("cum_all", sum(col("d") + col("c")).over(wCum))
-      .withColumn("at_risk",
-        col("n_users") - col("cum_all") + col("d") + col("c"))
+    val steps = riskSet(df
+        .select(col(tCol).cast("long").as("t"), col(eventCol).as("ev")),
+        "ev")
       .withColumn("term", when(col("d") > 0 && col("at_risk") > col("d"),
         snap6(log((col("at_risk") - col("d")).cast("double")
           / col("at_risk").cast("double")))).otherwise(lit(0.0)))

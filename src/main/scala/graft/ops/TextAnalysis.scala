@@ -27,6 +27,22 @@ object TextAnalysis extends QueryModule {
   private def inList(ws: Seq[String]): String =
     ws.map(w => s"'$w'").mkString("(", ", ", ")")
 
+  /** Each profile's stopword hit count over the `wrds` column, in
+    * `profiles` order. */
+  private def langHits: Seq[Column] = profiles.map { case (_, ws) =>
+    expr(s"CAST(size(filter(wrds, w -> w IN ${inList(ws)})) AS LONG)")
+  }
+
+  /** The language-ID argmax over `hits` with the fixed tie-break
+    * en > de > es > fr, and "und" when no profile word occurs. */
+  private def predLang(hits: Seq[Column] = langHits): Column = {
+    val Seq(en, de, es, fr) = hits
+    val best = greatest(en, de, es, fr)
+    when(best === 0, "und")
+      .when(en === best, "en").when(de === best, "de")
+      .when(es === best, "es").otherwise("fr")
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Calibration curve + expected calibration error for a cheap
     // quality classifier — the eval-side readout every learned data
@@ -194,7 +210,7 @@ object TextAnalysis extends QueryModule {
     // count r* = (r+1)·N_{r+1}/N_r for the low-r ladder (r ≤ 10, where
     // GT applies; higher r keeps raw counts). All exact integer ratios
     // with single divisions; a missing N_{r+1} rung yields NULL r*
-    // identically in both engines (the r12 degenerate rule). Scale
+    // identically in both engines (NULL, never an error). Scale
     // shape: tokenize → (lang, word) counts → (lang, r) ladder —
     // ≤|langs|·|distinct r| rows; the r+1 lookup is a self-join on
     // that bounded ladder, never on corpus rows.
@@ -300,19 +316,14 @@ object TextAnalysis extends QueryModule {
     // language ID: stopword-profile hit counts → argmax with a fixed
     // tie-break order (en > de > es > fr > und).
     "q66_langid" -> ((s, d) => {
-      val hits = profiles.map { case (l, ws) =>
-        l -> expr(s"CAST(size(filter(wrds, w -> w IN ${inList(ws)})) AS LONG)")
+      val hits = langHits
+      val hitCols = profiles.zip(hits).map { case ((l, _), h) =>
+        h.as(s"${l}_hits")
       }
-      val Seq(en, de, es, fr) = hits.map(_._2)
-      val best = greatest(en, de, es, fr)
       Tables.documents(s, d)
         .withColumn("wrds", Text.words(col("text")))
-        .select(
-          col("doc_id"), col("lang"),
-          en.as("en_hits"), de.as("de_hits"), es.as("es_hits"), fr.as("fr_hits"),
-          when(best === 0, "und")
-            .when(en === best, "en").when(de === best, "de")
-            .when(es === best, "es").otherwise("fr").as("pred_lang"))
+        .select(Seq(col("doc_id"), col("lang")) ++ hitCols
+          :+ predLang(hits).as("pred_lang"): _*)
         .withColumn("is_correct", col("pred_lang") === col("lang"))
         .orderBy(col("doc_id"))
     }),
@@ -324,19 +335,11 @@ object TextAnalysis extends QueryModule {
     // pass before the one dedup shuffle and the final aggregation —
     // the shape a 100 TB corpus clean actually runs.
     "q69_pipeline" -> ((s, d) => {
-      val hits = profiles.map { case (l, ws) =>
-        l -> expr(s"CAST(size(filter(wrds, w -> w IN ${inList(ws)})) AS LONG)")
-      }
-      val Seq(en, de, es, fr) = hits.map(_._2)
-      val best = greatest(en, de, es, fr)
       val staged = Tables.documents(s, d)
         .withColumn("wrds", Text.words(col("text")))
         .filter(size(col("wrds")) >= 10 && size(col("wrds")) <= 2000 &&
           size(array_distinct(col("wrds"))).cast("long") * 5 >= size(col("wrds")))
-        .withColumn("pred_lang",
-          when(best === 0, "und")
-            .when(en === best, "en").when(de === best, "de")
-            .when(es === best, "es").otherwise("fr"))
+        .withColumn("pred_lang", predLang())
         .withColumn("bag_fp",
           md5(concat_ws(" ", array_sort(array_distinct(col("wrds")))).cast("binary")))
       val keepFirst = Window.partitionBy(col("bag_fp")).orderBy(col("doc_id"))
@@ -389,10 +392,10 @@ object TextAnalysis extends QueryModule {
     // a 6-decimal floor snap to absorb the engines' 1-ulp interpolation
     // difference. One corpus-scale aggregation to a ≤|langs| frame.
     "q219_tokenizer_fertility" -> ((s, d) => {
-      // round 14: the per-doc ratio quantiles ride
-      // DistributedRank.exactPercentiles (bit-identical, helper doc)
-      // instead of the Percentile aggregate whose per-lang value map
-      // holds a doc-scale distinct set in one task; the regex-token
+      // The per-doc ratio quantiles ride
+      // DistributedRank.exactPercentiles (bit-identical, helper doc),
+      // not the Percentile aggregate, whose per-lang value map would
+      // hold a doc-scale distinct set in one task; the regex-token
       // frame is checkpointed once per invocation for its two
       // consumers (q300 rationale). exactPercentiles drops a lang whose
       // ratios are all NULL (e.g. every n_chars NULL); the left join
@@ -424,17 +427,9 @@ object TextAnalysis extends QueryModule {
     }),
 
     "q170_eval_metrics" -> ((s, d) => {
-      val hits = profiles.map { case (l, ws) =>
-        l -> expr(s"CAST(size(filter(wrds, w -> w IN ${inList(ws)})) AS LONG)")
-      }
-      val Seq(en, de, es, fr) = hits.map(_._2)
-      val best = greatest(en, de, es, fr)
       val pred = Tables.documents(s, d)
         .withColumn("wrds", Text.words(col("text")))
-        .select(col("lang"),
-          when(best === 0, "und")
-            .when(en === best, "en").when(de === best, "de")
-            .when(es === best, "es").otherwise("fr").as("pred_lang"))
+        .select(col("lang"), predLang().as("pred_lang"))
       val cells = pred.groupBy(col("lang"), col("pred_lang"))
         .agg(count(lit(1)).as("n"))
       val byTrue = cells.groupBy(col("lang").as("cls"))
@@ -527,8 +522,8 @@ object TextAnalysis extends QueryModule {
     // has thousands of feeds), and the alternative — rank-pairing via
     // a self-join — would shuffle the hashed arrays three times
     // instead of once; the single-exchange shape is the deliberate
-    // trade (adjudicated r13/r14). Recall, precision,
-    // and F1 are each a single division of exact ints (set-F1 = Dice
+    // trade. Recall, precision, and F1 are each a single division of
+    // exact ints (set-F1 = Dice
     // = 2I/(|A|+|B|), so no compound float chain).
     "q261_rouge_pairs" -> ((s, d) => {
       def h(c: Column): Column = Text.md5Long(c, 15)
@@ -658,11 +653,11 @@ object TextAnalysis extends QueryModule {
     // tie midpoints stay integers), centered by the integer mean rank
     // n+1, DECIMAL moment sums, one snapped division. TTR ranks order
     // by the EXACT long n_types·1e6 DIV n_words — no float ordering
-    // at rank boundaries. Scale shape (r14): the midpoint rank of a
+    // at rank boundaries. Scale shape: the midpoint rank of a
     // row depends only on its VALUE, so ranks are computed on the
     // per-(lang, value) marginal frames — DOMAIN-bounded (x ≤ max
     // words per doc, y ∈ [0, 1e6] by construction), corpus-
-    // independent — and hash-joined back; the old per-row windows
+    // independent — and hash-joined back; per-row windows would
     // put corpus/|langs| doc rows through one task per language
     // (|langs| is a bounded domain, the partitions grow with the
     // corpus). Three tokenize scans (main + two marginals) is the
@@ -762,17 +757,9 @@ object TextAnalysis extends QueryModule {
     // one corpus pass (the per-row classifier is a codegen'd filter
     // chain), map-side-combined cell counts, ≤|langs|² rows.
     "q368_langid_confusion" -> ((s, d) => {
-      val hits = profiles.map { case (l, ws) =>
-        l -> expr(s"CAST(size(filter(wrds, w -> w IN ${inList(ws)})) AS LONG)")
-      }
-      val Seq(en, de, es, fr) = hits.map(_._2)
-      val best = greatest(en, de, es, fr)
       Tables.documents(s, d)
         .withColumn("wrds", Text.words(col("text")))
-        .select(col("lang"),
-          when(best === 0, "und")
-            .when(en === best, "en").when(de === best, "de")
-            .when(es === best, "es").otherwise("fr").as("pred_lang"))
+        .select(col("lang"), predLang().as("pred_lang"))
         .groupBy(col("lang"), col("pred_lang"))
         .agg(count(lit(1)).as("n"))
         .withColumn("n_gold",

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryModule, Tables}
 import graft.ops.Parity.{dec, dec19, fix6, ln6, snap6}
+import graft.ops.Stats
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -669,32 +670,15 @@ object Temporal extends QueryModule {
     // (If every at-risk user churns at some t the curve hits exact
     // zero and the term is excluded — log-space cannot express S=0;
     // censoring at the corpus edge makes that unreachable here.)
-    "q232_kaplan_meier" -> ((s, d) => {
-      val users = Tables.events(s, d)
-        .groupBy(col("user_id"))
-        .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
-          .cast("long").as("t"),
-          max(to_date(col("ts"))).as("last_day"))
-        .withColumn("churned",
-          col("last_day") <= lit("2024-01-27").cast("date"))
-      val byT = users.groupBy(col("t"))
-        .agg(sum(when(col("churned"), 1L).otherwise(0L)).as("d"),
-          sum(when(col("churned"), 0L).otherwise(1L)).as("c"))
-      val tot = byT.agg(sum(col("d") + col("c")).as("n_users"))
-      val wCum = Window.orderBy(col("t"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      byT.crossJoin(broadcast(tot))
-        .withColumn("cum_all", sum(col("d") + col("c")).over(wCum))
-        .withColumn("at_risk",
-          col("n_users") - col("cum_all") + col("d") + col("c"))
+    "q232_kaplan_meier" -> ((s, d) =>
+      Stats.riskSet(userLifetimes(s, d), "churned")
         .withColumn("term", when(col("d") > 0 && col("at_risk") > col("d"),
           snap6(log((col("at_risk") - col("d")).cast("double")
             / col("at_risk").cast("double")))).otherwise(lit(0.0)))
-        .withColumn("ln_survival", sum(col("term")).over(wCum))
+        .withColumn("ln_survival", sum(col("term")).over(Stats.wCum))
         .select(col("t"), col("at_risk"), col("d").as("n_churned"),
           col("c").as("n_censored"), col("ln_survival"))
-        .orderBy(col("t"))
-    }),
+        .orderBy(col("t"))),
 
     // CUSUM changepoint detection per event stream — "did this feed's
     // daily volume shift level, and when?" (the pipeline-monitoring
@@ -939,37 +923,20 @@ object Temporal extends QueryModule {
     // the fixed t order — identical operand sequences both engines.
     // Scale shape: one corpus pass to per-user rows, re-group to the
     // ≤|days| lifetime frame, windows over that frame.
-    "q313_nelson_aalen" -> ((s, d) => {
-      val users = Tables.events(s, d)
-        .groupBy(col("user_id"))
-        .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
-          .cast("long").as("t"),
-          max(to_date(col("ts"))).as("last_day"))
-        .withColumn("churned",
-          col("last_day") <= lit("2024-01-27").cast("date"))
-      val byT = users.groupBy(col("t"))
-        .agg(sum(when(col("churned"), 1L).otherwise(0L)).as("d"),
-          sum(when(col("churned"), 0L).otherwise(1L)).as("c"))
-      val tot = byT.agg(sum(col("d") + col("c")).as("n_users"))
-      val wCum = Window.orderBy(col("t"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      byT.crossJoin(broadcast(tot))
-        .withColumn("cum_all", sum(col("d") + col("c")).over(wCum))
-        .withColumn("r",
-          col("n_users") - col("cum_all") + col("d") + col("c"))
+    "q313_nelson_aalen" -> ((s, d) =>
+      Stats.riskSet(userLifetimes(s, d), "churned")
         .withColumn("term", when(col("d") > 0,
-          snap6(col("d").cast("double") / col("r").cast("double")))
+          snap6(col("d").cast("double") / col("at_risk").cast("double")))
           .otherwise(lit(0.0)))
         .withColumn("vterm", when(col("d") > 0,
           snap6(col("d").cast("double")
-            / (col("r") * col("r")).cast("double")))
+            / (col("at_risk") * col("at_risk")).cast("double")))
           .otherwise(lit(0.0)))
-        .select(col("t"), col("r").as("at_risk"), col("d").as("n_churned"),
+        .select(col("t"), col("at_risk"), col("d").as("n_churned"),
           col("c").as("n_censored"),
-          sum(col("term")).over(wCum).as("cum_hazard"),
-          sum(col("vterm")).over(wCum).as("hazard_var"))
-        .orderBy(col("t"))
-    }),
+          sum(col("term")).over(Stats.wCum).as("cum_hazard"),
+          sum(col("vterm")).over(Stats.wCum).as("hazard_var"))
+        .orderBy(col("t"))),
 
     // Log-rank test — "do two user cohorts have the same survival
     // curve?", the hypothesis-test companion to q232's KM estimator
@@ -986,13 +953,7 @@ object Temporal extends QueryModule {
     // one corpus pass to per-user rows, a map-side-combined re-group
     // to the ≤|days| lifetime frame, windows over THAT (q231 shape).
     "q239_logrank" -> ((s, d) => {
-      val users = Tables.events(s, d)
-        .groupBy(col("user_id"))
-        .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
-          .cast("long").as("t"),
-          max(to_date(col("ts"))).as("last_day"))
-        .withColumn("churned",
-          col("last_day") <= lit("2024-01-27").cast("date"))
+      val users = userLifetimes(s, d)
         .withColumn("grp_a", pmod(col("user_id"), lit(2L)) === 0L)
       val byT = users.groupBy(col("t"))
         .agg(sum(when(col("churned"), 1L).otherwise(0L)).as("dt"),
@@ -1001,14 +962,12 @@ object Temporal extends QueryModule {
           count(lit(1)).as("all_t"),
           sum(when(col("grp_a"), 1L).otherwise(0L)).as("a_t"))
       val wAll = Window.partitionBy()
-      val wCum = Window.orderBy(col("t"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val dr = col("dt").cast("double") / col("r").cast("double")
       val terms = byT
         .withColumn("n_users", sum(col("all_t")).over(wAll))
         .withColumn("n_a", sum(col("a_t")).over(wAll))
-        .withColumn("cum_all", sum(col("all_t")).over(wCum))
-        .withColumn("cum_a", sum(col("a_t")).over(wCum))
+        .withColumn("cum_all", sum(col("all_t")).over(Stats.wCum))
+        .withColumn("cum_a", sum(col("a_t")).over(Stats.wCum))
         .withColumn("r", col("n_users") - col("cum_all") + col("all_t"))
         .withColumn("r1", col("n_a") - col("cum_a") + col("a_t"))
         .withColumn("e1", when(col("dt") > 0,
@@ -2299,7 +2258,7 @@ object Temporal extends QueryModule {
     // on the ≤|distinct t| frame.
     // KM/RMST core delegates to [[graft.ops.Stats.kmRmst]] (the
     // Frame.stats facade runs the same code path), including the
-    // ADVICE-r12 at_risk == d kill step: when every remaining at-risk
+    // at_risk == d kill step: when every remaining at-risk
     // user purchases at a time, survival steps to ZERO and stays
     // zero — carried as a cumulative kill flag because the log-term
     // recurrence can't express a 0 factor.
@@ -2316,7 +2275,7 @@ object Temporal extends QueryModule {
             .otherwise(datediff(col("last_day"), col("first_day")))
             .cast("long").as("t"),
           col("first_purchase").isNotNull.as("purchased"))
-      graft.ops.Stats.kmRmst(users, "t", "purchased", tau = 7L)
+      Stats.kmRmst(users, "t", "purchased", tau = 7L)
         .withColumnRenamed("rmst_days", "rmst_purchase_free_days")
     })
   )
@@ -2324,6 +2283,19 @@ object Temporal extends QueryModule {
   /** q309 SPRT µnat constants — computed ONCE here and interpolated
     * into both engines (p₀=0.19, p₁=0.21, α=β=0.05; boundary ln 19).
     */
+  /** Per-user lifetimes for the survival queries (q232, q313, q239):
+    * t = days between the user's first and last event; `churned` iff
+    * the last event falls before the final 3 days of the corpus, so a
+    * user still active at its edge is censored, not churned. */
+  private def userLifetimes(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .groupBy(col("user_id"))
+      .agg(datediff(max(to_date(col("ts"))), min(to_date(col("ts"))))
+        .cast("long").as("t"),
+        max(to_date(col("ts"))).as("last_day"))
+      .withColumn("churned",
+        col("last_day") <= lit("2024-01-27").cast("date"))
+
   private val SprtL1: Long = fix6(math.log(0.21 / 0.19))
   private val SprtL0: Long = fix6(math.log(0.79 / 0.81))
   private val SprtBound: Long = fix6(math.log(19.0))

@@ -7,9 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Properties of the LLM-pipeline operators that a DuckDB oracle does
   * not state: MinHash/LSH recall against the brute-force pair set (q61's
   * oracle replays the LSH pipeline, so it pins the pairs LSH finds, not
-  * the ones it misses), SimHash consistency, ANN recall, and the
-  * multimodal decode stub. Exact-oracle coverage for the rest of
-  * graft.ops is the DuckDB oracle check (`tools/oracle_check.py`).
+  * the ones it misses), SimHash consistency, ANN recall, two
+  * cross-query invariants (q123 answers as q76b does; q368 counts q66's
+  * predictions), and the multimodal decode stub. Exact-oracle coverage
+  * for the rest of graft.ops is the DuckDB oracle check
+  * (`tools/oracle_check.py`).
   */
 class OpsSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -88,6 +90,24 @@ class OpsSpec extends AnyFunSuite {
           s"query $qid self-reported recall ${r.getAs[Double]("recall")} != $expected")
       }
     }
+  }
+
+  test("q123 returns exactly q76b's rows: the partitioned layout keeps the answer") {
+    val rows = (q: String) => Similarity.queries(q)(spark, sf).collect().toSeq
+    val probe = rows("q76b_ann_ivf_probe")
+    assert(probe.nonEmpty)
+    assert(rows("q123_ann_partitioned") === probe)
+  }
+
+  test("q368's confusion cells are q66's (lang, pred_lang) counts") {
+    val cells = (df: org.apache.spark.sql.DataFrame) =>
+      df.collect().map(r => (Option(r.getString(0)), r.getString(1), r.getLong(2))).toSet
+    val fromQ66 = ops.TextAnalysis.queries("q66_langid")(spark, sf)
+      .groupBy("lang", "pred_lang").agg(count(lit(1)).as("n"))
+    val q368 = ops.TextAnalysis.queries("q368_langid_confusion")(spark, sf)
+      .select("lang", "pred_lang", "n")
+    assert(cells(fromQ66).nonEmpty)
+    assert(cells(q368) === cells(fromQ66))
   }
 
   test("CentroidAgg matches a single-threaded centroid within 1e-9") {
