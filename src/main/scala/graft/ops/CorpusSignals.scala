@@ -65,11 +65,9 @@ object CorpusSignals extends QueryModule {
       val stats = grid
         .withColumn("k", count(lit(1)).over(wWord))
         .withColumn("sf", sum(col("f")).over(wWord))
-        .withColumn("sf2", sum(col("f").cast("decimal(38,0)")
-          * col("f").cast("decimal(38,0)")).over(wWord))
-        .withColumn("dd", col("k").cast("decimal(38,0)") * col("sf2")
-          - col("sf").cast("decimal(38,0)")
-            * col("sf").cast("decimal(38,0)"))
+        .withColumn("sf2", sum(dec(col("f")) * dec(col("f"))).over(wWord))
+        .withColumn("dd",
+          dec(col("k")) * col("sf2") - dec(col("sf")) * dec(col("sf")))
       val b = stats.select(col("w").as("w_b"), col("source").as("source_b"),
         col("f").as("f_b"))
       stats.join(b,
@@ -313,8 +311,8 @@ object CorpusSignals extends QueryModule {
         .crossJoin(broadcast(tot))
         // positive association only: observed > expected as the exact
         // integer cross-multiplication c·N > c1·c2
-        .filter(col("c").cast("decimal(19,0)") * col("n").cast("decimal(19,0)")
-          > col("c1").cast("decimal(19,0)") * col("c2").cast("decimal(19,0)"))
+        .filter(dec19(col("c")) * dec19(col("n"))
+          > dec19(col("c1")) * dec19(col("c2")))
         .withColumn("g2_micros", lit(2).cast("decimal(2,0)") * (
           t(col("c")) + t(col("c1") - col("c"))
             + t(col("c2") - col("c"))
@@ -576,14 +574,12 @@ object CorpusSignals extends QueryModule {
         .agg(count(lit(1)).as("shared_types"),
           max(col("n")).as("na"), max(col("nb")).as("nbt"),
           sum(col("c")).as("sha"), sum(col("cb")).as("shb"),
-          sum(dec(col("c")) * (ln6(dec(col("c")) * 2L * dec(col("nb")))
+          sum(dec(col("c")) * dec(ln6(dec(col("c")) * 2L * dec(col("nb")))
             - ln6(dec(col("c")) * dec(col("nb"))
-              + dec(col("cb")) * dec(col("n")))).cast("decimal(38,0)"))
-            .as("s_a"),
-          sum(dec(col("cb")) * (ln6(dec(col("cb")) * 2L * dec(col("n")))
+              + dec(col("cb")) * dec(col("n"))))).as("s_a"),
+          sum(dec(col("cb")) * dec(ln6(dec(col("cb")) * 2L * dec(col("n")))
             - ln6(dec(col("c")) * dec(col("nb"))
-              + dec(col("cb")) * dec(col("n")))).cast("decimal(38,0)"))
-            .as("s_b"))
+              + dec(col("cb")) * dec(col("n"))))).as("s_b"))
         .select(col("source_a"), col("source_b"), col("shared_types"),
           snap6((col("s_a") + dec(col("na") - col("sha")) * muLn2)
               .cast("double") / (lit(2e6) * col("na").cast("double"))
@@ -661,11 +657,11 @@ object CorpusSignals extends QueryModule {
           (lit(2L) * (when(col("a") > 0L, dec(col("a"))
               * (ln6(dec(col("a")) * dec(col("na") + col("nb")))
                 - ln6(dec(col("na")) * dec(col("a") + col("b")))))
-              .otherwise(lit(0L).cast("decimal(38,0)"))
+              .otherwise(dec(lit(0L)))
             + when(col("b") > 0L, dec(col("b"))
               * (ln6(dec(col("b")) * dec(col("na") + col("nb")))
                 - ln6(dec(col("nb")) * dec(col("a") + col("b")))))
-              .otherwise(lit(0L).cast("decimal(38,0)"))))
+              .otherwise(dec(lit(0L)))))
             .cast("double") / 1e6)
       // A&S 26.2.17 upper-tail Φ̄(z) with t = 1/(1 + 0.2316419·z);
       // p(χ²₁ ≥ g2) = 2·Φ̄(√g2). Same literals spelled in the oracle.

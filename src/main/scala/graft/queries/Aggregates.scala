@@ -551,8 +551,7 @@ object Aggregates extends QueryModule {
       perSupp.groupBy(col("s_nationkey"))
         .agg(count(lit(1)).as("n_suppliers"),
           sum(col("cents")).as("sum_c"),
-          sum((col("cents") * col("cents")).cast("decimal(38,0)"))
-            .as("sum_c2"))
+          sum(dec(col("cents") * col("cents"))).as("sum_c2"))
         .select(col("s_nationkey"), col("n_suppliers"),
           snap6(col("sum_c2").cast("double")
             / (col("sum_c").cast("double") * col("sum_c").cast("double")))
@@ -698,12 +697,10 @@ object Aggregates extends QueryModule {
           lit(2L) * (col("cum") - col("cv")) + col("cv") + 1L)
         .groupBy(col("event_type"))
         .agg(sum(col("ca")).as("n_a"),
-          sum(col("ca").cast("decimal(38,0)")
-            * col("rank2").cast("decimal(38,0)")).as("r2a"))
+          sum(dec(col("ca")) * dec(col("rank2"))).as("r2a"))
         .withColumn("n_b", sum(col("n_a")).over(wAll) - col("n_a"))
-        .withColumn("u2", (col("r2a")
-          - col("n_a").cast("decimal(38,0)")
-            * (col("n_a") + 1L).cast("decimal(38,0)")).cast("double"))
+        .withColumn("u2",
+          (col("r2a") - dec(col("n_a")) * dec(col("n_a") + 1L)).cast("double"))
         .select(col("event_type"), col("n_a"), col("n_b"),
           snap6(col("u2") / lit(2.0)).as("u_stat"),
           // a lone event type has an empty "rest" side: AUC undefined
@@ -1153,20 +1150,17 @@ object Aggregates extends QueryModule {
         .withColumn("n_tot", count(lit(1)).over(wAll))
         .withColumn("x_tot", sum(col("cents")).over(wAll))
       val nat = base
-        .withColumn("term", (dec(col("cents"))
-          * (ln6(dec(col("cents")) * col("nn")) - ln6(col("xn"))))
-          .cast("decimal(38,0)"))
-        .withColumn("term_g", (dec(col("cents"))
-          * (ln6(dec(col("cents")) * col("n_tot")) - ln6(col("x_tot"))))
-          .cast("decimal(38,0)"))
+        .withColumn("term", dec(dec(col("cents"))
+          * (ln6(dec(col("cents")) * col("nn")) - ln6(col("xn")))))
+        .withColumn("term_g", dec(dec(col("cents"))
+          * (ln6(dec(col("cents")) * col("n_tot")) - ln6(col("x_tot")))))
         .groupBy(col("c_nationkey"))
         .agg(max(col("nn")).as("n_cust"), max(col("xn")).as("xn"),
           max(col("n_tot")).as("n_tot"), max(col("x_tot")).as("x_tot"),
           sum(col("term")).as("sterm"), sum(col("term_g")).as("sterm_g"))
-        .withColumn("bterm", (dec(col("xn"))
+        .withColumn("bterm", dec(dec(col("xn"))
           * (ln6(dec(col("xn")) * col("n_tot"))
-            - ln6(dec(col("x_tot")) * col("n_cust"))))
-          .cast("decimal(38,0)"))
+            - ln6(dec(col("x_tot")) * col("n_cust")))))
       nat
         .withColumn("sw", sum(col("sterm")).over(wAll))
         .withColumn("sb", sum(col("bterm")).over(wAll))
@@ -1754,8 +1748,7 @@ object Aggregates extends QueryModule {
       val jt = grid.join(b, col("v") === col("vb") && col("g") < col("gb"))
         .filter(col("npb") > 0)
         .agg(sum(dec(col("npb"))
-          * (lit(2L).cast("decimal(38,0)")
-              * (col("cumle") - col("np")).cast("decimal(38,0)")
+          * (dec(lit(2L)) * dec(col("cumle") - col("np"))
             + dec(col("np")))).as("jt2"))
       // group sizes and pooled tie groups for the exact null moments
       val gs = o.groupBy(col("g")).agg(count(lit(1)).as("ni"))

@@ -21,12 +21,11 @@ object Graph extends QueryModule {
   private val Iters = 10
 
   /** Undirected non-self pair counts from the shared
-    * [[graft.Tables.nationEdges]] frame (VERDICT r12 #3: one corpus
-    * derivation for the whole tier): summing the two directed cells of
-    * an unordered pair equals counting its undirected rows directly, so
-    * this is exactly the `least/greatest → count` frame the q166 family
-    * derived from the corpus before round 13 — now a dimension-frame
-    * fold over the persisted edge list.
+    * [[graft.Tables.nationEdges]] frame, the one corpus derivation of
+    * the whole tier: summing the two directed cells of an unordered
+    * pair equals counting its undirected rows directly, so this is the
+    * `least/greatest → count` frame of the q166 family (and of its
+    * oracles), folded from the persisted edge list.
     */
   private def undirectedPairs(s: SparkSession, d: String): DataFrame =
     Tables.nationEdges(s, d).filter(col("src") =!= col("dst"))
@@ -34,20 +33,32 @@ object Graph extends QueryModule {
         greatest(col("src"), col("dst")).as("v"))
       .agg(sum(col("cnt")).as("cnt"))
 
-  /** The q166 family's data-driven edge threshold: keep unordered pairs
-    * whose total trade count clears the graph's own 75th percentile
-    * (the raw graph is near-complete, and a fixed constant would stop
-    * discriminating as sf grows). Returns the thresholded (u, v) edge
-    * list — ≤|nations|² rows at any corpus size.
+  /** The graph tier's data-driven edge threshold: the pairs whose trade
+    * count `cnt` clears the frame's own 75th percentile (the raw graph
+    * is near-complete, and a fixed constant would stop discriminating
+    * as sf grows).
     */
-  private def thresholdedUndirected(s: SparkSession, d: String): DataFrame = {
-    val pairs = undirectedPairs(s, d)
+  private def aboveP75(pairs: DataFrame): DataFrame = {
     val bound = pairs.agg(
       round(percentile(col("cnt"), lit(0.75)), 6).as("thr"))
     pairs.crossJoin(broadcast(bound))
       .filter(col("cnt") >= col("thr"))
-      .select(col("u"), col("v"))
   }
+
+  /** The q166 family's thresholded undirected (u, v) edge list —
+    * ≤|nations|² rows at any corpus size. */
+  private def thresholdedUndirected(s: SparkSession, d: String): DataFrame =
+    aboveP75(undirectedPairs(s, d)).select(col("u"), col("v"))
+
+  /** [[thresholdedUndirected]] collected to the driver as (u, v) pairs. */
+  private def undirectedEdgeRows(s: SparkSession, d: String): Array[(Int, Int)] =
+    thresholdedUndirected(s, d).collect()
+      .map(r => (r.getAs[Number]("u").intValue, r.getAs[Number]("v").intValue))
+
+  /** Every node of the nation graph, edged or not, in key order. */
+  private def nodeIds(s: SparkSession, d: String): Array[Int] =
+    Tables.nation(s, d).select(col("n_nationkey"))
+      .collect().map(_.getAs[Number](0).intValue).sorted
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // PageRank over the nation-level trade graph: an edge src→dst for
@@ -415,20 +426,15 @@ object Graph extends QueryModule {
     // shape: the corpus collapses to the bounded edge list once;
     // every round is a dimension-frame self-join.
     "q372_harmonic_centrality" -> ((s, d) => {
-      val e = thresholdedUndirected(s, d)
       // ≤|nations|² edges — collect once and run the capped BFS
       // driver-side (the q154/q119 pattern: a 3-deep DataFrame
       // min-plus unroll re-analyzes the 4-table edge subtree 2³+
       // times and never finishes planning; the heavy stage is the
-      // edge aggregation above, the iteration object is bounded).
-      val edgeRows = e.collect()
-        .map(r => (r.getAs[Number]("u").intValue,
-          r.getAs[Number]("v").intValue))
+      // edge aggregation, the iteration object is bounded).
+      val edgeRows = undirectedEdgeRows(s, d)
       val adjMap = (edgeRows ++ edgeRows.map(_.swap))
         .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toSet }
-      val nodes = Tables.nation(s, d).select(col("n_nationkey"))
-        .collect().map(_.getAs[Number](0).intValue).sorted
-      val rows = nodes.toSeq.map { src =>
+      val rows = nodeIds(s, d).toSeq.map { src =>
         var frontier = Set(src)
         var seen = Set(src)
         var h6 = 0L
@@ -460,13 +466,10 @@ object Graph extends QueryModule {
     // bounded graph. Scale shape: corpus → edge list once; five
     // dimension-frame join rounds.
     "q373_kcore" -> ((s, d) => {
-      val e0 = thresholdedUndirected(s, d)
       // collect the bounded edge list and peel driver-side (q154
       // pattern — a 5-deep DataFrame unroll re-derives the 4-table
       // edge join 2⁵ times; measured as a planner hang)
-      val edgeRows = e0.collect()
-        .map(r => (r.getAs[Number]("u").intValue,
-          r.getAs[Number]("v").intValue))
+      val edgeRows = undirectedEdgeRows(s, d)
       def peel(nodes: Set[Int]): Set[Int] = {
         val live = edgeRows.filter(p =>
           nodes(p._1) && nodes(p._2))
@@ -477,10 +480,8 @@ object Graph extends QueryModule {
       val all = (edgeRows.map(_._1) ++ edgeRows.map(_._2)).toSet
       val r4 = peel(peel(peel(peel(all))))
       val r5 = peel(r4)
-      val nations = Tables.nation(s, d).select(col("n_nationkey"))
-        .collect().map(_.getAs[Number](0).intValue).sorted
       import s.implicits._
-      nations.toSeq
+      nodeIds(s, d).toSeq
         .map(n => (n, r5(n), r5.size.toLong, r4.size == r5.size))
         .toDF("node", "in_3core", "core_size", "converged")
         .orderBy(col("node"))
@@ -502,17 +503,12 @@ object Graph extends QueryModule {
       // directed variant: the shared frame filtered of self-loops,
       // thresholded on the DIRECTED pair counts (hub/authority need
       // edge direction, so no least/greatest fold here).
-      val pairs = Tables.nationEdges(s, d)
-        .filter(col("src") =!= col("dst"))
-      val bound = pairs.agg(
-        round(percentile(col("cnt"), lit(0.75)), 6).as("thr"))
-      val e = pairs.crossJoin(broadcast(bound))
-        .filter(col("cnt") >= col("thr"))
+      val edges = aboveP75(Tables.nationEdges(s, d)
+          .filter(col("src") =!= col("dst")))
         .select(col("src"), col("dst"))
-      val edges = e.collect().map(r =>
-        (r.getAs[Number]("src").intValue, r.getAs[Number]("dst").intValue))
-      val nodes = Tables.nation(s, d).select(col("n_nationkey"))
-        .collect().map(_.getAs[Number](0).intValue).sorted
+        .collect().map(r =>
+          (r.getAs[Number]("src").intValue, r.getAs[Number]("dst").intValue))
+      val nodes = nodeIds(s, d)
       var hub = nodes.map(_ -> 1000000L).toMap
       var auth = nodes.map(_ -> 1000000L).toMap
       for (_ <- 1 to 8) {
@@ -832,7 +828,8 @@ object Graph extends QueryModule {
     // five peel rounds unrolled; convergence is carried in the
     // output. CTEs are MATERIALIZED: inlined, each round re-expands
     // e0's 4-table scan 2× per reference and the unroll exhausts
-    // file handles (measured: "Too many open files" at round 5).
+    // file handles (measured: "Too many open files" at the fifth peel
+    // round).
     "q373_kcore" -> (
       """WITH p AS MATERIALIZED (
         |  SELECT least(c.c_nationkey, s.s_nationkey) AS u,

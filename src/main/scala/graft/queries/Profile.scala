@@ -841,10 +841,8 @@ object Profile extends QueryModule {
     // ONE map-side-combined corpus pass to the (type, day) frame;
     // noise is a per-cell expression over that bounded frame.
     "q254_dp_release" -> ((s, d) => {
-      Tables.events(s, d)
-        .select(col("event_type"), to_date(col("ts")).as("day"))
-        .groupBy(col("event_type"), col("day"))
-        .agg(count(lit(1)).as("true_n"))
+      Tables.dailyEvents(s, d)
+        .withColumnRenamed("n", "true_n")
         .withColumn("u", pmod(graft.ops.Text.md5Long(concat(
           col("event_type"), lit(":"), col("day").cast("string")), 8),
           lit(1000000L)))
@@ -960,10 +958,8 @@ object Profile extends QueryModule {
     // drift); noise stays pure integer arithmetic on the same
     // cell-key-seeded micro-uniform as q254.
     "q282_dp_epsilon_curve" -> ((s, d) => {
-      val cells = Tables.events(s, d)
-        .select(col("event_type"), to_date(col("ts")).as("day"))
-        .groupBy(col("event_type"), col("day"))
-        .agg(count(lit(1)).as("true_n"))
+      val cells = Tables.dailyEvents(s, d)
+        .withColumnRenamed("n", "true_n")
         .withColumn("u", pmod(graft.ops.Text.md5Long(concat(
           col("event_type"), lit(":"), col("day").cast("string")), 8),
           lit(1000000L)))

@@ -134,17 +134,14 @@ object Temporal extends QueryModule {
     // hash aggregation only — the shape that survives 100 TB of ticks.
     "q145_ohlc_downsample" -> ((s, d) => {
       val B = 6L * 3600 * 1000000
-      val ordKey = concat(
-        lpad(unix_micros(col("ts")).cast("string"), 20, "0"), lit(":"),
-        lpad(col("event_id").cast("string"), 12, "0"))
       Tables.events(s, d)
         .withColumn("bucket",
           expr(s"timestamp_micros((unix_micros(ts) DIV ${B}L) * ${B}L)"))
         .groupBy(col("event_type"), col("bucket"))
-        .agg(min_by(col("value"), ordKey).as("open"),
+        .agg(min_by(col("value"), eventOrder).as("open"),
           max(col("value")).as("high"),
           min(col("value")).as("low"),
-          max_by(col("value"), ordKey).as("close"),
+          max_by(col("value"), eventOrder).as("close"),
           count(lit(1)).as("n_events"))
         .orderBy(col("event_type"), col("bucket"))
     }),
@@ -236,13 +233,10 @@ object Temporal extends QueryModule {
     // that applies a 100 TB change log — Delta/Hudi snapshot
     // reconstruction is exactly this aggregation.
     "q146_cdc_apply" -> ((s, d) => {
-      val ordKey = concat(
-        lpad(unix_micros(col("ts")).cast("string"), 20, "0"), lit(":"),
-        lpad(col("event_id").cast("string"), 12, "0"))
       Tables.events(s, d)
         .groupBy(col("user_id"))
-        .agg(max_by(col("event_type"), ordKey).as("last_op"),
-          max_by(col("value"), ordKey).as("last_value"),
+        .agg(max_by(col("event_type"), eventOrder).as("last_op"),
+          max_by(col("value"), eventOrder).as("last_value"),
           max(col("ts")).as("last_ts"),
           count(lit(1)).as("n_changes"))
         .filter(col("last_op") =!= "error")
@@ -355,13 +349,10 @@ object Temporal extends QueryModule {
     // comparison. 100 TB shape: one hash exchange on user_id, window
     // evaluated streaming per partition.
     "q161_attribution" -> ((s, d) => {
-      val ordKey = concat(
-        lpad(unix_micros(col("ts")).cast("string"), 20, "0"), lit(":"),
-        lpad(col("event_id").cast("string"), 12, "0"))
       val ev = Tables.events(s, d)
         .filter(col("event_type").isin("view", "purchase"))
         .select(col("user_id"), col("event_id"), col("ts"),
-          col("event_type"), ordKey.as("ord_key"))
+          col("event_type"), eventOrder.as("ord_key"))
       val w = Window.partitionBy(col("user_id")).orderBy(col("ord_key"))
         .rowsBetween(1, Window.unboundedFollowing)
       ev.withColumn("npk",
@@ -593,15 +584,11 @@ object Temporal extends QueryModule {
     // windows, the 3× lag fan-out, and the self-join all run over
     // that bounded frame.
     "q256_acf" -> ((s, d) => {
-      val wT = Window.partitionBy(col("event_type"))
-      val base = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("y"))
-        .withColumn("n_all", count(lit(1)).over(wT))
-        .withColumn("s_all", sum(col("y")).over(wT))
-        .withColumn("dev",
-          (col("n_all") * col("y") - col("s_all")).cast("decimal(19,0)"))
-        .withColumn("den", sum(col("dev") * col("dev")).over(wT))
+      val base = Tables.dailyEvents(s, d)
+        .withColumn("n_all", count(lit(1)).over(byType))
+        .withColumn("s_all", sum(col("n")).over(byType))
+        .withColumn("dev", dec19(col("n_all") * col("n") - col("s_all")))
+        .withColumn("den", sum(col("dev") * col("dev")).over(byType))
       val a = base.select(col("event_type"), col("day"), col("dev"),
         col("den"), col("n_all"),
         explode(sequence(lit(1), lit(3))).as("lag"))
@@ -622,10 +609,8 @@ object Temporal extends QueryModule {
     }),
 
     "q204_lagged_xcorr" -> ((s, d) => {
-      val daily = Tables.events(s, d)
+      val daily = Tables.dailyEvents(s, d)
         .filter(col("event_type").isin("view", "purchase"))
-        .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
       val x = daily.filter(col("event_type") === "view")
         .select(col("day").as("dx"), col("n").as("x"))
         .select(col("dx"), col("x"),
@@ -636,14 +621,11 @@ object Temporal extends QueryModule {
         .groupBy(col("lag"))
         .agg(count(lit(1)).as("n_days"),
           sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-          sum(col("x").cast("decimal(19,0)") * col("y").cast("decimal(19,0)"))
-            .as("sxy"),
-          sum(col("x").cast("decimal(19,0)") * col("x").cast("decimal(19,0)"))
-            .as("sxx"),
-          sum(col("y").cast("decimal(19,0)") * col("y").cast("decimal(19,0)"))
-            .as("syy"))
-      val sxd = col("sx").cast("decimal(19,0)")
-      val syd = col("sy").cast("decimal(19,0)")
+          sum(dec19(col("x")) * dec19(col("y"))).as("sxy"),
+          sum(dec19(col("x")) * dec19(col("x"))).as("sxx"),
+          sum(dec19(col("y")) * dec19(col("y"))).as("syy"))
+      val sxd = dec19(col("sx"))
+      val syd = dec19(col("sy"))
       val vx = col("n_days") * col("sxx") - sxd * sxd
       val vy = col("n_days") * col("syy") - syd * syd
       g.select(col("lag"), col("n_days"),
@@ -693,22 +675,14 @@ object Temporal extends QueryModule {
     // Scale shape: ONE corpus pass map-side-combines to the ≤|days|
     // daily frame; every window runs over that frame.
     "q237_cusum" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-      val wT = Window.partitionBy(col("event_type"))
-      val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      val wCum = wOrd.rowsBetween(Window.unboundedPreceding,
-        Window.currentRow)
-      val scored = daily
-        .withColumn("n_days", count(lit(1)).over(wT))
-        .withColumn("s_total", sum(col("n")).over(wT))
-        .withColumn("k", row_number().over(wOrd).cast("long"))
-        .withColumn("cum", sum(col("n")).over(wCum))
+      val scored = Tables.dailyEvents(s, d)
+        .withColumn("n_days", count(lit(1)).over(byType))
+        .withColumn("s_total", sum(col("n")).over(byType))
+        .withColumn("k", row_number().over(byDay).cast("long"))
+        .withColumn("cum", sum(col("n")).over(upToDay))
         .withColumn("c_scaled",
           col("n_days") * col("cum") - col("k") * col("s_total"))
-      val wPick = Window.partitionBy(col("event_type"))
-        .orderBy(abs(col("c_scaled")).desc, col("day"))
+      val wPick = byType.orderBy(abs(col("c_scaled")).desc, col("day"))
       scored.withColumn("rn", row_number().over(wPick))
         .filter(col("rn") === 1)
         .select(col("event_type"), col("day").as("changepoint_day"),
@@ -734,26 +708,18 @@ object Temporal extends QueryModule {
     // pass map-side-combines to the ≤|days| daily frame; every window
     // runs over that bounded frame (q237's shape exactly).
     "q312_page_hinkley" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-      val wT = Window.partitionBy(col("event_type"))
-      val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      val wCum = wOrd.rowsBetween(Window.unboundedPreceding,
-        Window.currentRow)
-      val scored = daily
-        .withColumn("k", row_number().over(wOrd).cast("long"))
-        .withColumn("cum", sum(col("n")).over(wCum))
+      val scored = Tables.dailyEvents(s, d)
+        .withColumn("k", row_number().over(byDay).cast("long"))
+        .withColumn("cum", sum(col("n")).over(upToDay))
         .withColumn("dev", col("n").cast("double")
           - col("cum").cast("double") / col("k").cast("double"))
-        .withColumn("m", sum(col("dev")).over(wCum))
-        .withColumn("m_min", min(col("m")).over(wCum))
+        .withColumn("m", sum(col("dev")).over(upToDay))
+        .withColumn("m_min", min(col("m")).over(upToDay))
         .withColumn("exc", col("m") - col("m_min"))
-      val wPick = Window.partitionBy(col("event_type"))
-        .orderBy(col("exc").desc, col("day"))
+      val wPick = byType.orderBy(col("exc").desc, col("day"))
       scored
-        .withColumn("n_days", count(lit(1)).over(wT))
-        .withColumn("s_total", sum(col("n")).over(wT))
+        .withColumn("n_days", count(lit(1)).over(byType))
+        .withColumn("s_total", sum(col("n")).over(byType))
         .withColumn("rn", row_number().over(wPick))
         .filter(col("rn") === 1)
         .select(col("event_type"), col("n_days"),
@@ -777,9 +743,7 @@ object Temporal extends QueryModule {
     // after the daily aggregation lives on the bounded |days|·|types|
     // grid.
     "q326_kendall_w" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
+      val daily = Tables.dailyEvents(s, d)
       val days = daily.select(col("day")).distinct()
       val types = daily.select(col("event_type")).distinct()
       val grid = broadcast(days).crossJoin(broadcast(types))
@@ -788,7 +752,7 @@ object Temporal extends QueryModule {
           coalesce(col("n"), lit(0L)).as("n"))
       // tie-aware doubled ranks within each type, over the day grid
       val wVal = Window.partitionBy(col("event_type"), col("n"))
-      val wOrd = Window.partitionBy(col("event_type")).orderBy(col("n"))
+      val wOrd = byType.orderBy(col("n"))
         .rangeBetween(Window.unboundedPreceding, Window.currentRow)
       val ranked = grid
         .withColumn("cv", count(lit(1)).over(wVal))
@@ -796,7 +760,7 @@ object Temporal extends QueryModule {
         .withColumn("rank2",
           lit(2L) * (col("cum") - col("cv")) + col("cv") + 1L)
       val wAll = Window.partitionBy()
-      val byDay = ranked.groupBy(col("day"))
+      val perDay = ranked.groupBy(col("day"))
         .agg(sum(col("rank2")).as("r2d"), count(lit(1)).as("k"))
       // per-type tie mass Σ(t³−t), folded without a per-value regroup
       val ties = ranked.groupBy(col("event_type"), col("n"))
@@ -805,7 +769,7 @@ object Temporal extends QueryModule {
         .agg(sum(dec(col("t")) * (dec(col("t")) * dec(col("t")) - 1L))
           .as("tj"))
         .agg(sum(col("tj")).as("t_sum"), count(lit(1)).as("k2"))
-      byDay
+      perDay
         .withColumn("nn", count(lit(1)).over(wAll))
         .withColumn("s4", sum(
           (dec(col("r2d")) - dec(col("k")) * dec(col("nn") + 1L))
@@ -837,9 +801,7 @@ object Temporal extends QueryModule {
     // divisions of exact operands. Scale shape: one corpus pass to
     // the ≤|days| frame, one bounded fold.
     "q328_poisson_dispersion" -> ((s, d) => {
-      Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
+      Tables.dailyEvents(s, d)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("dd"), sum(col("n")).as("s_tot"),
           sum(dec(col("n")) * dec(col("n"))).as("sn2"))
@@ -873,17 +835,12 @@ object Temporal extends QueryModule {
     // and D ≤ 1. Scale shape: one corpus pass to the ≤|days| daily
     // frame, a lag window over it, a bounded fold.
     "q322_runs_test" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-      val wT = Window.partitionBy(col("event_type"))
-      val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      val marked = daily
-        .withColumn("dd", count(lit(1)).over(wT))
-        .withColumn("s_tot", sum(col("n")).over(wT))
+      val marked = Tables.dailyEvents(s, d)
+        .withColumn("dd", count(lit(1)).over(byType))
+        .withColumn("s_tot", sum(col("n")).over(byType))
         .withColumn("above", col("n") * col("dd") > col("s_tot"))
-        .withColumn("flip", when(lag(col("above"), 1).over(wOrd).isNull
-          || lag(col("above"), 1).over(wOrd) =!= col("above"), 1L)
+        .withColumn("flip", when(lag(col("above"), 1).over(byDay).isNull
+          || lag(col("above"), 1).over(byDay) =!= col("above"), 1L)
           .otherwise(0L))
       marked.groupBy(col("event_type"))
         .agg(max(col("dd")).as("n_days"),
@@ -895,7 +852,7 @@ object Temporal extends QueryModule {
         .withColumn("e_runs", snap6(lit(1.0)
           + col("p2").cast("double") / col("n_days").cast("double")))
         // p2 = D exactly (D = 2, one day each side) zeroes the
-        // variance — NULL, never ±inf (the r12 degenerate rule).
+        // variance — NULL, never ±inf, like every degenerate ratio.
         .withColumn("z2", when(
           col("n_above") > 0L && col("n_below") > 0L && col("n_days") > 1L
             && col("p2") > dec(col("n_days")),
@@ -1001,12 +958,8 @@ object Temporal extends QueryModule {
     // (both middles averaged on even counts, the same interpolation
     // DuckDB's quantile does, spelled identically in the oracle).
     "q240_theilsen" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("x",
-          datediff(col("day"), lit("2024-01-01").cast("date"))
-            .cast("long"))
+      val daily = Tables.dailyEvents(s, d)
+        .withColumn("x", dayIdx(col("day")))
       val a = daily.select(col("event_type").as("et"),
         col("x").as("xi"), col("n").as("ni"))
       val b = daily.select(col("event_type").as("et2"),
@@ -1042,10 +995,8 @@ object Temporal extends QueryModule {
     // combines to the ≤|days| frame; everything else is per-type
     // arithmetic on that frame.
     "q244_fano" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-      daily.groupBy(col("event_type"))
+      Tables.dailyEvents(s, d)
+        .groupBy(col("event_type"))
         .agg(count(lit(1)).as("dd"), sum(col("n")).as("s"),
           sum(dec19(col("n")) * dec19(col("n"))).as("sq"))
         .withColumn("num", dec19(col("dd")) * col("sq")
@@ -1102,7 +1053,7 @@ object Temporal extends QueryModule {
         .groupBy(u2("user_id"), col("t1"), col("t2"))
         .agg(min(col("p_ts")).as("t3"))
       def usDec(a: Column, b: Column): Column =
-        (unix_micros(a) - unix_micros(b)).cast("decimal(38,0)")
+        dec(unix_micros(a) - unix_micros(b))
       val n = ev.agg(countDistinct(col("user_id")).as("n0"))
         .crossJoin(u3.agg(count(col("t1")).as("n1"),
           count(col("t2")).as("n2"),
@@ -1191,11 +1142,11 @@ object Temporal extends QueryModule {
     // bounded |days| frame; the running sum is a window over that
     // calendar-bounded frame — same bounded-domain argument as q231's
     // value ranks (|days| grows with collection time, not corpus).
-    // Month-start seeding (round-12, ADVICE r11): the level is a step
-    // function that only changes at delta days, so a month whose
-    // carried-in level exceeds every value REACHED inside it (all
-    // deltas negative) would understate peak_open, and a month with no
-    // boundary events at all would vanish from the output. A zero-delta
+    // Month-start seeding: the level is a step function that only
+    // changes at delta days, so a month whose carried-in level exceeds
+    // every value REACHED inside it (all deltas negative) would
+    // understate peak_open, and a month with no boundary events at all
+    // would vanish from the output. A zero-delta
     // row at every month's first day (spine from the cheap column-pruned
     // min(o_orderdate)/max(l_shipdate)+1 scans — never a re-run of the
     // join) samples the carried level exactly where each month opens;
@@ -1285,16 +1236,11 @@ object Temporal extends QueryModule {
     // per type over the CALENDAR-bounded daily frame (the q288
     // argument — |days| grows with collection time, not corpus rows).
     "q295_changepoint" -> ((s, d) => {
-      val wT = Window.partitionBy(col("event_type"))
-      val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("y"))
-        .withColumn("i", row_number().over(wOrd).cast("long"))
-        .withColumn("s", sum(col("y")).over(
-          wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .withColumn("t_n", count(lit(1)).over(wT))
-        .withColumn("t_s", sum(col("y")).over(wT))
+      val daily = Tables.dailyEvents(s, d)
+        .withColumn("i", row_number().over(byDay).cast("long"))
+        .withColumn("s", sum(col("n")).over(upToDay))
+        .withColumn("t_n", count(lit(1)).over(byType))
+        .withColumn("t_s", sum(col("n")).over(byType))
         .filter(col("i") < col("t_n"))
         .withColumn("a", col("s") * (col("t_n") - col("i"))
           - (col("t_s") - col("s")) * col("i"))
@@ -1304,8 +1250,7 @@ object Temporal extends QueryModule {
             * col("t_n").cast("double")))
       daily
         .withColumn("rk", row_number().over(
-          Window.partitionBy(col("event_type"))
-            .orderBy(col("gain").desc, col("day"))))
+          byType.orderBy(col("gain").desc, col("day"))))
         .filter(col("rk") === 1)
         .select(col("event_type"), col("day").as("split_day"),
           col("i").as("n_left"), (col("t_n") - col("i")).as("n_right"),
@@ -1333,11 +1278,9 @@ object Temporal extends QueryModule {
     // that calendar-bounded frame (≤5·|days|·|types| rows), map-side
     // combined per (type, scale, block).
     "q299_haar_anomaly" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))
-            .cast("long").as("idx"))
-        .agg(count(lit(1)).as("y"))
+      val daily = Tables.dailyEvents(s, d)
+        .select(col("event_type"), dayIdx(col("day")).as("idx"),
+          col("n").as("y"))
         .filter(col("idx") >= 0L && col("idx") < 32L)
       val tall = daily.select(col("event_type"), col("idx"), col("y"),
           explode(array(lit(2L), lit(4L), lit(8L), lit(16L), lit(32L)))
@@ -1381,8 +1324,7 @@ object Temporal extends QueryModule {
         .filter(col("nxt").isNotNull)
         .groupBy(col("event_type"), col("nxt"))
         .agg(count(lit(1)).as("c"))
-        .withColumn("ct",
-          sum(col("c")).over(Window.partitionBy(col("event_type"))))
+        .withColumn("ct", sum(col("c")).over(byType))
         .groupBy(col("event_type"))
         .agg(max(col("ct")).as("n_next"),
           count(lit(1)).as("n_branches"),
@@ -1410,11 +1352,9 @@ object Temporal extends QueryModule {
     // corpus pass to the calendar-bounded daily frame; the 3-scale
     // fan-out and block windows all run on that dimension frame.
     "q306_hurst_rs" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))
-            .cast("long").as("idx"))
-        .agg(count(lit(1)).as("y"))
+      val daily = Tables.dailyEvents(s, d)
+        .select(col("event_type"), dayIdx(col("day")).as("idx"),
+          col("n").as("y"))
       val wB = Window.partitionBy(col("event_type"), col("w"), col("blk"))
       val scored = daily
         .select(col("event_type"), col("idx"), col("y"),
@@ -1439,17 +1379,16 @@ object Temporal extends QueryModule {
         .filter(col("s2") > 0)
         .withColumn("rs6", fix6((col("zmax") - col("zmin")).cast("double")
           / sqrt(col("s2").cast("double"))))
-      val wT = Window.partitionBy(col("event_type"))
       val perW = blocks.groupBy(col("event_type"), col("w"))
         .agg(count(lit(1)).as("n_blocks"), sum(col("rs6")).as("srs"))
         .withColumn("x6", ln6(col("w")))
         .withColumn("y6", ln6(col("srs").cast("double")
           / col("n_blocks").cast("double") / 1e6))
-        .withColumn("np", count(lit(1)).over(wT))
-        .withColumn("sx", sum(col("x6")).over(wT))
-        .withColumn("sy", sum(col("y6")).over(wT))
-        .withColumn("sxx", sum(dec(col("x6")) * dec(col("x6"))).over(wT))
-        .withColumn("sxy", sum(dec(col("x6")) * dec(col("y6"))).over(wT))
+        .withColumn("np", count(lit(1)).over(byType))
+        .withColumn("sx", sum(col("x6")).over(byType))
+        .withColumn("sy", sum(col("y6")).over(byType))
+        .withColumn("sxx", sum(dec(col("x6")) * dec(col("x6"))).over(byType))
+        .withColumn("sxy", sum(dec(col("x6")) * dec(col("y6"))).over(byType))
       perW.select(col("event_type"), col("w").as("window_days"),
           col("n_blocks"),
           snap6(col("srs").cast("double")
@@ -1553,13 +1492,10 @@ object Temporal extends QueryModule {
     // 6-snapped divisions. Scale shape: one corpus pass to the
     // calendar-bounded daily frame; MA/dow windows run on it.
     "q311_seasonal_decompose" -> ((s, d) => {
-      val wMa = Window.partitionBy(col("event_type")).orderBy(col("idx"))
-        .rowsBetween(-3, 3)
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"),
-          datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))
-            .cast("long").as("idx"))
-        .agg(count(lit(1)).as("y"))
+      val wMa = byType.orderBy(col("idx")).rowsBetween(-3, 3)
+      val daily = Tables.dailyEvents(s, d)
+        .select(col("event_type"), col("day"), dayIdx(col("day")).as("idx"),
+          col("n").as("y"))
       val wDow = Window.partitionBy(col("event_type"), col("dow"))
       daily
         .withColumn("cnt7", count(lit(1)).over(wMa))
@@ -1596,29 +1532,24 @@ object Temporal extends QueryModule {
     // |EWMA_t − μ₀| > limit3s_t — evaluated on the 1e-6-SNAPPED chart
     // values (the numbers a chart reader actually compares), which are
     // hash-verified identical across engines, so the flag is
-    // order-free and deterministic by construction. Horizon guard
-    // (ADVICE r12): the dyadic weights are computed over a TRAILING
-    // 62-observation window (k = min(t, 62)) instead of the full
-    // history — 2^61 is the last long-exact weight, and the truncated
-    // pre-window mass is ≤ max_n·2^{−61}, far below the 1e-6 snap for
-    // any per-day count under ~2^40; the earlier full-history exact-
-    // integer flag overflowed decimal(38)/HUGEINT around t ≈ 50-55
-    // days (Spark → NULL, DuckDB → error: divergent failure modes)
-    // and was safe only because the events corpus spans ~1 month.
+    // order-free and deterministic by construction. Horizon guard:
+    // the dyadic weights are computed over a TRAILING 62-observation
+    // window (k = min(t, 62)) instead of the full history — 2^61 is
+    // the last long-exact weight, and the truncated pre-window mass is
+    // ≤ max_n·2^{−61}, far below the 1e-6 snap for any per-day count
+    // under ~2^40. A full-history exact-integer fold would overflow
+    // decimal(38)/HUGEINT around t ≈ 50-55 days (Spark → NULL,
+    // DuckDB → error: divergent failure modes).
     // Scale shape: one corpus pass to the ≤|days|·|types| daily
     // frame; every window runs on that dimension frame with a
     // 62-bounded array per row.
     "q330_ewma_chart" -> ((s, d) => {
-      val wT = Window.partitionBy(col("event_type"))
-      val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      val wTrail = wOrd.rowsBetween(-61, 0)
-      Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("dd", count(lit(1)).over(wT))
-        .withColumn("s_tot", sum(col("n")).over(wT))
-        .withColumn("sn2", sum(dec(col("n")) * dec(col("n"))).over(wT))
-        .withColumn("t", row_number().over(wOrd).cast("long"))
+      val wTrail = byDay.rowsBetween(-61, 0)
+      Tables.dailyEvents(s, d)
+        .withColumn("dd", count(lit(1)).over(byType))
+        .withColumn("s_tot", sum(col("n")).over(byType))
+        .withColumn("sn2", sum(dec(col("n")) * dec(col("n"))).over(byType))
+        .withColumn("t", row_number().over(byDay).cast("long"))
         .withColumn("k", least(col("t"), lit(62L)))
         .withColumn("arr", collect_list(col("n")).over(wTrail))
         // Σ_i arr[i]·2^i over the chronological trailing window
@@ -1635,7 +1566,7 @@ object Temporal extends QueryModule {
         .withColumn("nume", dec(col("dd")) * col("cumw")
           + when(col("t") <= 62L, dec(col("s_tot")))
             .otherwise(dec(lit(0L))))
-        .withColumn("vnum", lit(3L).cast("decimal(38,0)")
+        .withColumn("vnum", dec(lit(3L))
           * (dec(col("dd")) * col("sn2")
             - dec(col("s_tot")) * dec(col("s_tot"))))
         .withColumn("ewma", snap6(col("nume").cast("double")
@@ -1668,17 +1599,13 @@ object Temporal extends QueryModule {
     // micro-units first). Scale shape: one corpus pass to the
     // calendar-bounded daily frame; windows on the dimension frame.
     "q334_durbin_watson" -> ((s, d) => {
-      val wT = Window.partitionBy(col("event_type"))
-      val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("t", row_number().over(wOrd).cast("long"))
-        .withColumn("dd", count(lit(1)).over(wT))
-        .withColumn("st", sum(col("t")).over(wT))
-        .withColumn("st2", sum(col("t") * col("t")).over(wT))
-        .withColumn("sn", sum(col("n")).over(wT))
-        .withColumn("stn", sum(col("t") * col("n")).over(wT))
+      Tables.dailyEvents(s, d)
+        .withColumn("t", row_number().over(byDay).cast("long"))
+        .withColumn("dd", count(lit(1)).over(byType))
+        .withColumn("st", sum(col("t")).over(byType))
+        .withColumn("st2", sum(col("t") * col("t")).over(byType))
+        .withColumn("sn", sum(col("n")).over(byType))
+        .withColumn("stn", sum(col("t") * col("n")).over(byType))
         .withColumn("den",
           dec(col("dd")) * dec(col("st2")) - dec(col("st")) * dec(col("st")))
         .withColumn("bn",
@@ -1686,7 +1613,7 @@ object Temporal extends QueryModule {
         .withColumn("e", dec(col("n")) * dec(col("dd")) * col("den")
           - (dec(col("sn")) * col("den") - col("bn") * dec(col("st")))
           - dec(col("dd")) * col("bn") * dec(col("t")))
-        .withColumn("ep", lag(col("e"), 1).over(wOrd))
+        .withColumn("ep", lag(col("e"), 1).over(byDay))
         .groupBy(col("event_type"))
         .agg(max(col("dd")).as("n_days"),
           max(col("bn")).as("bnv"), max(col("den")).as("denv"),
@@ -1721,12 +1648,9 @@ object Temporal extends QueryModule {
     // NULL identically. Scale shape: one corpus pass to the daily
     // frame, two lag windows on it, a bounded fold.
     "q336_mase_backtest" -> ((s, d) => {
-      val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("l1", lag(col("n"), 1).over(wOrd))
-        .withColumn("l7", lag(col("n"), 7).over(wOrd))
+      Tables.dailyEvents(s, d)
+        .withColumn("l1", lag(col("n"), 1).over(byDay))
+        .withColumn("l7", lag(col("n"), 7).over(byDay))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_days"),
           sum(when(col("l1").isNotNull, abs(col("n") - col("l1"))))
@@ -1764,37 +1688,31 @@ object Temporal extends QueryModule {
     // and the per-(type, word) count run on dimension frames;
     // top-1 via one rank window.
     "q338_sax_motifs" -> ((s, d) => {
-      val wT = Window.partitionBy(col("event_type"))
-      val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      val sym = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("dd", count(lit(1)).over(wT))
-        .withColumn("s_tot", sum(col("n")).over(wT))
-        .withColumn("sn2", sum(dec(col("n")) * dec(col("n"))).over(wT))
+      val sym = Tables.dailyEvents(s, d)
+        .withColumn("dd", count(lit(1)).over(byType))
+        .withColumn("s_tot", sum(col("n")).over(byType))
+        .withColumn("sn2", sum(dec(col("n")) * dec(col("n"))).over(byType))
         .withColumn("zn", dec(col("dd")) * dec(col("n")) - dec(col("s_tot")))
         .withColumn("vnum", dec(col("dd")) * col("sn2")
           - dec(col("s_tot")) * dec(col("s_tot")))
-        .withColumn("outer", lit(100000000L).cast("decimal(38,0)")
-          * col("zn") * col("zn") > lit(45495025L).cast("decimal(38,0)")
-          * col("vnum"))
+        .withColumn("outer", dec(lit(100000000L)) * col("zn") * col("zn")
+          > dec(lit(45495025L)) * col("vnum"))
         .withColumn("sym",
           when(col("zn") < 0 && col("outer"), "a")
             .when(col("zn") < 0, "b")
             .when(!col("outer"), "c")
             .otherwise("d"))
       val words = sym
-        .withColumn("s2", lag(col("sym"), 2).over(wOrd))
-        .withColumn("s1", lag(col("sym"), 1).over(wOrd))
+        .withColumn("s2", lag(col("sym"), 2).over(byDay))
+        .withColumn("s1", lag(col("sym"), 1).over(byDay))
         .filter(col("s2").isNotNull)
         .select(col("event_type"),
           concat(col("s2"), col("s1"), col("sym")).as("word"))
         .groupBy(col("event_type"), col("word"))
         .agg(count(lit(1)).as("cnt"))
-        .withColumn("n_windows", sum(col("cnt")).over(wT))
+        .withColumn("n_windows", sum(col("cnt")).over(byType))
         .withColumn("rk", row_number().over(
-          Window.partitionBy(col("event_type"))
-            .orderBy(col("cnt").desc, col("word"))))
+          byType.orderBy(col("cnt").desc, col("word"))))
       words.filter(col("rk") === 1)
         .select(col("event_type"), col("word").as("top_motif"),
           col("cnt").as("motif_count"), col("n_windows"))
@@ -1816,13 +1734,9 @@ object Temporal extends QueryModule {
     // pass to the calendar-bounded daily frame; the k-ladder is a
     // 7× fan-out of that dimension frame.
     "q346_periodogram" -> ((s, d) => {
-      val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      val wT = Window.partitionBy(col("event_type"))
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("t", row_number().over(wOrd).cast("long"))
-        .withColumn("dd", count(lit(1)).over(wT))
+      val daily = Tables.dailyEvents(s, d)
+        .withColumn("t", row_number().over(byDay).cast("long"))
+        .withColumn("dd", count(lit(1)).over(byType))
       daily
         .select(col("event_type"), col("n"), col("t"), col("dd"),
           explode(sequence(lit(1L), lit(7L))).as("k"))
@@ -1836,11 +1750,9 @@ object Temporal extends QueryModule {
           sum(dec(col("n")) * dec(col("c6"))).as("sc"),
           sum(dec(col("n")) * dec(col("s6"))).as("ss"))
         .withColumn("p", col("sc") * col("sc") + col("ss") * col("ss"))
-        .withColumn("ptot", sum(col("p")).over(
-          Window.partitionBy(col("event_type"))))
+        .withColumn("ptot", sum(col("p")).over(byType))
         .withColumn("rk", row_number().over(
-          Window.partitionBy(col("event_type"))
-            .orderBy(col("p").desc, col("k"))))
+          byType.orderBy(col("p").desc, col("k"))))
         .select(col("event_type"), col("k").as("cycles"),
           snap6(col("p").cast("double")
             / (lit(1e12) * col("dd").cast("double"))).as("power"),
@@ -1911,19 +1823,15 @@ object Temporal extends QueryModule {
     // form) — one division of exact DECIMALs. Scale shape: one
     // corpus pass to the daily frame, one lag window, bounded folds.
     "q356_ar1_backtest" -> ((s, d) => {
-      val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      val prs = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("y"))
-        .withColumn("x", lag(col("y"), 1).over(wOrd))
+      Tables.dailyEvents(s, d)
+        .withColumnRenamed("n", "y")
+        .withColumn("x", lag(col("y"), 1).over(byDay))
         .filter(col("x").isNotNull)
-      val wT = Window.partitionBy(col("event_type"))
-      prs
-        .withColumn("n", count(lit(1)).over(wT))
-        .withColumn("sx", sum(col("x")).over(wT))
-        .withColumn("sy", sum(col("y")).over(wT))
-        .withColumn("sxx", sum(dec(col("x")) * dec(col("x"))).over(wT))
-        .withColumn("sxy", sum(dec(col("x")) * dec(col("y"))).over(wT))
+        .withColumn("n", count(lit(1)).over(byType))
+        .withColumn("sx", sum(col("x")).over(byType))
+        .withColumn("sy", sum(col("y")).over(byType))
+        .withColumn("sxx", sum(dec(col("x")) * dec(col("x"))).over(byType))
+        .withColumn("sxy", sum(dec(col("x")) * dec(col("y"))).over(byType))
         .withColumn("den",
           dec(col("n")) * col("sxx") - dec(col("sx")) * dec(col("sx")))
         .withColumn("phn",
@@ -2218,15 +2126,10 @@ object Temporal extends QueryModule {
     // shape: one corpus pass to the calendar-bounded daily frame,
     // one ordered window, a bounded fold per type.
     "q379_record_days" -> ((s, d) => {
-      val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("prior_max", max(col("n")).over(wOrd))
-        .withColumn("t", row_number().over(
-          Window.partitionBy(col("event_type")).orderBy(col("day")))
-          .cast("long"))
+      val priorDays = byDay.rowsBetween(Window.unboundedPreceding, -1)
+      Tables.dailyEvents(s, d)
+        .withColumn("prior_max", max(col("n")).over(priorDays))
+        .withColumn("t", row_number().over(byDay).cast("long"))
         .withColumn("is_rec",
           col("prior_max").isNull || col("n") > col("prior_max"))
         .groupBy(col("event_type"))
@@ -2280,9 +2183,26 @@ object Temporal extends QueryModule {
     })
   )
 
-  /** q309 SPRT µnat constants — computed ONCE here and interpolated
-    * into both engines (p₀=0.19, p₁=0.21, α=β=0.05; boundary ln 19).
-    */
+  /** Per-type windows over a daily series such as
+    * [[Tables.dailyEvents]]: the whole type, its days in order, and the
+    * running frame up to the current day. */
+  private val byType = Window.partitionBy(col("event_type"))
+  private val byDay = byType.orderBy(col("day"))
+  private val upToDay =
+    byDay.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+  /** Days since 2024-01-01, where the events corpus starts, as a LONG. */
+  private def dayIdx(day: Column): Column =
+    datediff(day, lit("2024-01-01").cast("date")).cast("long")
+
+  /** The total (ts, event_id) order of the events as one string key:
+    * zero-padded epoch µs, ":", zero-padded event_id. min_by/max_by on
+    * it pick a well-defined first/last event under duplicate
+    * timestamps, and the key compares identically in both engines. */
+  private val eventOrder: Column = concat(
+    lpad(unix_micros(col("ts")).cast("string"), 20, "0"), lit(":"),
+    lpad(col("event_id").cast("string"), 12, "0"))
+
   /** Per-user lifetimes for the survival queries (q232, q313, q239):
     * t = days between the user's first and last event; `churned` iff
     * the last event falls before the final 3 days of the corpus, so a
@@ -2296,6 +2216,9 @@ object Temporal extends QueryModule {
       .withColumn("churned",
         col("last_day") <= lit("2024-01-27").cast("date"))
 
+  /** q309 SPRT µnat constants — computed ONCE here and interpolated
+    * into both engines (p₀=0.19, p₁=0.21, α=β=0.05; boundary ln 19).
+    */
   private val SprtL1: Long = fix6(math.log(0.21 / 0.19))
   private val SprtL0: Long = fix6(math.log(0.79 / 0.81))
   private val SprtBound: Long = fix6(math.log(19.0))

@@ -2,13 +2,16 @@ package graft
 
 import java.nio.file.Paths
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructType, TimestampNTZType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The corpus schema contract of [[Tables]]: the declared schemas are
   * what the testdata corpora hold, and reading a table through them
-  * launches no Spark job while a query is built.
+  * launches no Spark job while a query is built. Also the shared
+  * (event_type, day, n) series [[Tables.dailyEvents]]: its counts, and
+  * that the queries built on it stay lazy.
   */
 class TablesSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -62,6 +65,37 @@ class TablesSpec extends AnyFunSuite {
   test("building the tpch_x10 queries launches no Spark job") {
     for (q <- Seq("q182_min_cost_supplier", "q191_supplier_counts",
         "q193_big_orders", "q195_waiting_suppliers"))
+      assert(constructionJobs(q) == 0, s"building $q launched Spark jobs")
+  }
+
+  test("dailyEvents has one row per (event_type, day), summing to the events per type") {
+    val daily = Tables.dailyEvents(spark, sf)
+    assert(daily.columns.toSeq === Seq("event_type", "day", "n"))
+    assert(daily.groupBy(col("event_type"), col("day")).count()
+      .filter(col("count") > 1).isEmpty, "duplicate (event_type, day) key")
+    def perType(df: DataFrame, n: Column) =
+      df.groupBy(col("event_type")).agg(n.as("n")).collect()
+        .map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
+    val expected = perType(Tables.events(spark, sf), count(lit(1)))
+    assert(expected.nonEmpty)
+    assert(perType(daily, sum(col("n"))) === expected)
+  }
+
+  /** The queries built on [[Tables.dailyEvents]]: the daily monitors of
+    * `Temporal` and the two `Profile` DP releases. */
+  private val dailySeriesQueries = Seq(
+    "q204_lagged_xcorr", "q237_cusum", "q240_theilsen", "q244_fano",
+    "q254_dp_release", "q256_acf", "q282_dp_epsilon_curve",
+    "q295_changepoint", "q299_haar_anomaly", "q306_hurst_rs",
+    "q311_seasonal_decompose", "q312_page_hinkley", "q322_runs_test",
+    "q326_kendall_w", "q328_poisson_dispersion", "q330_ewma_chart",
+    "q334_durbin_watson", "q336_mase_backtest", "q338_sax_motifs",
+    "q346_periodogram", "q356_ar1_backtest", "q379_record_days")
+
+  test("building the daily-series queries launches no Spark job") {
+    // the shared series stays a lazy aggregate: materializing it would
+    // start jobs here
+    for (q <- dailySeriesQueries)
       assert(constructionJobs(q) == 0, s"building $q launched Spark jobs")
   }
 
