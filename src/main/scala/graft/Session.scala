@@ -22,11 +22,12 @@ import org.apache.spark.sql.SparkSession
   *     INT96 reads tz-NAIVE on both comparator sides (pyarrow ns, DuckDB
   *     µs), matching the oracle's naive timestamps; TIMESTAMP_MICROS
   *     would be annotated isAdjustedToUTC=true and read tz-AWARE,
-  *     breaking every timestamp-emitting query's hash compare (measured
-  *     r11). The INT96→ns read means any emitted timestamp must stay
-  *     inside pandas datetime64[ns] range (1677-09-21..2262-04-11) —
-  *     values outside silently WRAP (the q120 r10 red row); sentinels use
-  *     2200-01-01 and tools/dtype_check.py enforces the range.
+  *     breaking every timestamp-emitting query's hash compare. The
+  *     INT96→ns read means any emitted timestamp must stay inside
+  *     pandas datetime64[ns] range (1677-09-21..2262-04-11) — a value
+  *     outside silently WRAPS to another date instead of failing;
+  *     sentinels use 2200-01-01 and tools/dtype_check.py enforces the
+  *     range.
   */
 object Session {
   def builder(cpus: String): SparkSession.Builder =

@@ -175,7 +175,7 @@ final class Frame private (val df: DataFrame) {
   def freqItems(columns: Seq[String], support: Double): Frame =
     Frame(df.stat.freqItems(columns.toArray, support))
 
-  // ——— LLM-data-pipeline tier (round 12, VERDICT r11 #5) ———
+  // ——— LLM-data-pipeline tier ———
   // The curation/dedup/analysis operators as library calls, each a
   // thin delegate to the op the oracle-pinned catalog query runs —
   // same plan, same scale shape, no facade-only code path to drift.
@@ -260,8 +260,8 @@ final class Frame private (val df: DataFrame) {
 
   /** Global 1-based rank over a TOTAL order (include a unique
     * tiebreaker) WITHOUT a single-partition sorted window — the
-    * distributed q101-style prefix-sum rank the r14 decile/cumsum
-    * rewrites run on ([[graft.ops.DistributedRank]]). Appends `rk`
+    * distributed q101-style prefix-sum rank the catalog's decile and
+    * cumsum queries run on ([[graft.ops.DistributedRank]]). Appends `rk`
     * and the frame count `n_all`.
     */
   def globalRank(sortCols: Column*): Frame =
@@ -277,10 +277,10 @@ final class Frame private (val df: DataFrame) {
       .withColumn("tile",
         graft.ops.DistributedRank.ntileOf("rk", "n_all", k)))
 
-  /** Monitoring / statistics tier (round 13, VERDICT r12 #5): drift,
-    * survival, and capability as library calls — each a thin delegate
-    * to the op its oracle-pinned catalog query runs (q224/q225/q381/
-    * q382), so the facade path and the verified path cannot drift.
+  /** Monitoring / statistics tier: drift, survival, and capability
+    * as library calls — each a thin delegate to the op its
+    * oracle-pinned catalog query runs (q224/q225/q381/q382), so the
+    * facade path and the verified path cannot drift.
     * Heavy-hitter curves are [[topFreq]] above (q287).
     */
   def stats: FrameStats = new FrameStats(df)

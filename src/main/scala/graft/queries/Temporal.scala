@@ -1039,18 +1039,18 @@ object Temporal extends QueryModule {
       val u1 = ev.filter(col("event_type") === "view")
         .groupBy(col("user_id")).agg(min(col("ts")).as("t1"))
       val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("c_ts"))
+        .select(col("user_id").as("c_uid"), col("ts").as("c_ts"))
       val u2 = u1.join(clicks,
-          u1("user_id") === clicks("user_id") && col("c_ts") > col("t1"),
+          col("user_id") === col("c_uid") && col("c_ts") > col("t1"),
           "left")
-        .groupBy(u1("user_id"), col("t1"))
+        .groupBy(col("user_id"), col("t1"))
         .agg(min(col("c_ts")).as("t2"))
       val buys = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("p_ts"))
+        .select(col("user_id").as("p_uid"), col("ts").as("p_ts"))
       val u3 = u2.join(buys,
-          u2("user_id") === buys("user_id") && col("p_ts") > col("t2"),
+          col("user_id") === col("p_uid") && col("p_ts") > col("t2"),
           "left")
-        .groupBy(u2("user_id"), col("t1"), col("t2"))
+        .groupBy(col("user_id"), col("t1"), col("t2"))
         .agg(min(col("p_ts")).as("t3"))
       def usDec(a: Column, b: Column): Column =
         dec(unix_micros(a) - unix_micros(b))

@@ -43,46 +43,70 @@ object Tpch extends QueryModule {
   private def late(days: Int): Column =
     col("l_shipdate") > col("o_orderdate") + expr(s"INTERVAL $days DAYS")
 
-  /** Suppliers of one region with their nation name — the Q2/Q11/Q20/Q21
-    * dimension leg. region (5 rows) and nation (25 rows) are
-    * fixed-cardinality at every scale factor, so both ride explicit
-    * broadcasts; supplier grows linearly and is left to stats + AQE.
+  /** The nations of one region, as one broadcast side. region (5 rows)
+    * and nation (25 rows) are fixed-cardinality at every scale factor,
+    * so both ride explicit broadcasts; supplier grows linearly and is
+    * left to stats + AQE.
+    */
+  private def regionNations(s: SparkSession, d: String, r: String): DataFrame =
+    broadcast(Tables.nation(s, d)
+      .join(broadcast(Tables.region(s, d).filter(col("r_name") === r)),
+        col("n_regionkey") === col("r_regionkey"))
+      .select(col("n_nationkey"), col("n_name")))
+
+  /** Suppliers of one region with their nation name — the Q2 dimension
+    * leg, for a caller that outputs `n_name` (q182). The inner join's
+    * size estimate is a product of its sides' sizes, so a consumer that
+    * joins it to a fact side cannot broadcast it by stats.
     */
   private def regionSuppliers(s: SparkSession, d: String, r: String): DataFrame =
     Tables.supplier(s, d)
-      .join(broadcast(Tables.nation(s, d)
-          .join(broadcast(Tables.region(s, d).filter(col("r_name") === r)),
-            col("n_regionkey") === col("r_regionkey"))
-          .select(col("n_nationkey"), col("n_name"))),
-        col("s_nationkey") === col("n_nationkey"))
+      .join(regionNations(s, d, r), col("s_nationkey") === col("n_nationkey"))
+
+  /** Suppliers of one region, supplier columns only — the Q11/Q20/Q21
+    * dimension leg (q187, q194, q195). A left-semi join to the broadcast
+    * nation keys, so Spark sizes it as supplier itself and a consumer
+    * can broadcast it by stats. Equal to [[regionSuppliers]]'s supplier
+    * rows because `n_nationkey` is nation's key (one row per key in
+    * `gen_corpus.py`, the testdata corpora and [[graft.DegenCorpus]]);
+    * a nation table with a repeated key would make the inner form
+    * repeat suppliers and this one not.
+    */
+  private def regionSupplierRows(s: SparkSession, d: String,
+      r: String): DataFrame =
+    Tables.supplier(s, d).join(regionNations(s, d, r),
+      col("s_nationkey") === col("n_nationkey"), "left_semi")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // TPC-H Q2 shape (minimum-cost supplier): for each part in a
     // type/size band, the EUROPE supplier with the lowest cost —
     // s_acctbal standing in for ps_supplycost (no partsupp table; the
     // part↔supplier relation is the distinct (l_partkey, l_suppkey)
-    // pair set from lineitem). The correlated-min subquery becomes the
-    // scalable two-phase form: group the candidate rows once for the
-    // per-part min, then equi-join back on (partkey, min) — both
-    // phases key on p_partkey and no per-part subquery ever
-    // re-scans the corpus. min() over doubles is
-    // order-free; the join-back equality compares the same stored
-    // bits. The part filter prunes the probe side BEFORE the join.
+    // pair set from lineitem). The part filter prunes lineitem by a
+    // left-semi join to the broadcast part side BEFORE the distinct, so
+    // only pairs of candidate parts cross the pair exchange. The
+    // correlated-min subquery becomes min(s_acctbal) over a p_partkey
+    // window and a filter — one exchange, one pass over the candidate
+    // rows (the q192 idiom); every supplier tied at a part's minimum
+    // stays, as in the oracle. min() over doubles is order-free, and
+    // the filter compares the same stored bits.
     "q182_min_cost_supplier" -> ((s, d) => {
-      val pairs = Tables.lineitem(s, d)
-        .select(col("l_partkey"), col("l_suppkey")).distinct()
-      val sup = regionSuppliers(s, d, "EUROPE")
-        .select(col("s_suppkey"), col("s_name"), col("s_acctbal"),
-          col("n_name"))
       val p = Tables.part(s, d)
         .filter(col("p_type") === "STANDARD" && col("p_size").between(10, 20))
         .select(col("p_partkey"), col("p_name"))
-      val cand = pairs.join(sup, col("l_suppkey") === col("s_suppkey"))
+      val pairs = Tables.lineitem(s, d)
+        .select(col("l_partkey"), col("l_suppkey"))
+        .join(p, col("l_partkey") === col("p_partkey"), "left_semi")
+        .distinct()
+      val sup = regionSuppliers(s, d, "EUROPE")
+        .select(col("s_suppkey"), col("s_name"), col("s_acctbal"),
+          col("n_name"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("p_partkey"))
+      pairs.join(sup, col("l_suppkey") === col("s_suppkey"))
         .join(p, col("l_partkey") === col("p_partkey"))
-      val minPer = cand.groupBy(col("p_partkey").as("mk"))
-        .agg(min(col("s_acctbal")).as("min_bal"))
-      cand.join(minPer,
-          col("p_partkey") === col("mk") && col("s_acctbal") === col("min_bal"))
+        .withColumn("min_bal", min(col("s_acctbal")).over(w))
+        .filter(col("s_acctbal") === col("min_bal"))
         .select(col("s_acctbal"), col("s_name"), col("n_name"),
           col("p_partkey"), col("p_name"))
         .orderBy(col("s_acctbal").desc, col("n_name"), col("s_name"),
@@ -217,7 +241,7 @@ object Tpch extends QueryModule {
     // re-aggregates that SAME ≤|parts| frame (not a second corpus
     // scan) and joins back as a 1-row broadcast.
     "q187_important_parts" -> ((s, d) => {
-      val supEur = regionSuppliers(s, d, "EUROPE").select(col("s_suppkey"))
+      val supEur = regionSupplierRows(s, d, "EUROPE").select(col("s_suppkey"))
       val perPart = Tables.lineitem(s, d)
         .select(col("l_partkey"), col("l_suppkey"),
           col("l_extendedprice"), col("l_discount"))
@@ -310,18 +334,20 @@ object Tpch extends QueryModule {
     // brand, one type, and "complained-about" suppliers (s_acctbal < 0
     // standing in for the comment LIKE '%Complaints%' — same NOT-IN
     // shape, realized as a LEFT ANTI join so the exclusion set never
-    // round-trips through the driver). The pair set is distinct-collapsed
-    // from lineitem BEFORE the count, and the part filter prunes first.
+    // round-trips through the driver). Both joins run on the lineitem
+    // scan against broadcast sides, before any shuffle; the
+    // countDistinct de-duplicates (bucket, supplier) in its own partial
+    // aggregate, so the oracle's distinct pair set needs no separate
+    // exchange — a part's repeated pair counts its supplier once.
     "q191_supplier_counts" -> ((s, d) => {
-      val pairs = Tables.lineitem(s, d)
-        .select(col("l_partkey"), col("l_suppkey")).distinct()
       val badSup = Tables.supplier(s, d).filter(col("s_acctbal") < 0)
         .select(col("s_suppkey"))
       val p = Tables.part(s, d)
         .filter(col("p_brand") =!= "Brand#5" && col("p_type") =!= "PROMO"
           && col("p_size").isin(1, 3, 9, 14, 19, 23, 36, 45))
         .select(col("p_partkey"), col("p_brand"), col("p_type"), col("p_size"))
-      pairs.join(badSup, col("l_suppkey") === col("s_suppkey"), "left_anti")
+      Tables.lineitem(s, d).select(col("l_partkey"), col("l_suppkey"))
+        .join(badSup, col("l_suppkey") === col("s_suppkey"), "left_anti")
         .join(p, col("l_partkey") === col("p_partkey"))
         .groupBy(col("p_brand"), col("p_type"), col("p_size"))
         .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
@@ -397,7 +423,7 @@ object Tpch extends QueryModule {
         .groupBy(col("l_suppkey"))
         .agg(sum(col("l_quantity")).as("red_qty"))
         .filter(col("red_qty") > 300)
-      regionSuppliers(s, d, "ASIA")
+      regionSupplierRows(s, d, "ASIA")
         .select(col("s_suppkey"), col("s_name"))
         .join(qty, col("s_suppkey") === col("l_suppkey"))
         .select(col("s_suppkey"), col("s_name"), col("red_qty"))
@@ -410,13 +436,16 @@ object Tpch extends QueryModule {
     // (two lineitem self-joins) is rewritten as ONE aggregation plus
     // ONE window: lineitem groups to (order, supplier, any-late), and
     // the per-order supplier/late counts come from an unbounded window
-    // over l_orderkey on that already-collapsed frame — a single
-    // corpus scan (PlanShapeSpec pins it), two keyed exchanges, and NO
-    // self-join ever multiplies raw lineitem rows. Window partitions
-    // are bounded by suppliers-per-order. The DuckDB oracle runs the
-    // textbook EXISTS form, proving the rewrite equivalent. Waiting =
-    // late on a 90-day standard (no receipt dates in this corpus);
-    // count is per (order, supplier), exact.
+    // over l_orderkey on that already-collapsed frame. The 0/1 late
+    // flag is computed on the scan side of the exchange, and ONE
+    // repartition on l_orderkey feeds both the (order, supplier)
+    // aggregate and the window — a single corpus scan (PlanShapeSpec
+    // pins it), one l_orderkey exchange, and NO self-join ever multiplies
+    // raw lineitem rows. Window partitions are bounded by
+    // suppliers-per-order. The DuckDB oracle runs the textbook EXISTS
+    // form, proving the rewrite equivalent. Waiting = late on a 90-day
+    // standard (no receipt dates in this corpus); count is per (order,
+    // supplier), exact.
     "q195_waiting_suppliers" -> ((s, d) => {
       val o = Tables.orders(s, d).filter(col("o_orderstatus") === "F")
         .select(col("o_orderkey"), col("o_orderdate"))
@@ -425,13 +454,16 @@ object Tpch extends QueryModule {
       Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
         .join(o, col("l_orderkey") === col("o_orderkey"))
+        .select(col("l_orderkey"), col("l_suppkey"),
+          when(late(90), 1L).otherwise(0L).as("late_row"))
+        .repartition(col("l_orderkey"))
         .groupBy(col("l_orderkey"), col("l_suppkey"))
-        .agg(max(when(late(90), 1L).otherwise(0L)).as("is_late"))
+        .agg(max(col("late_row")).as("is_late"))
         .withColumn("n_supp", count(lit(1)).over(w))
         .withColumn("n_late", sum(col("is_late")).over(w))
         .filter(col("is_late") === 1L && col("n_supp") >= 2
           && col("n_late") === 1L)
-        .join(regionSuppliers(s, d, "MIDDLE EAST")
+        .join(regionSupplierRows(s, d, "MIDDLE EAST")
             .select(col("s_suppkey"), col("s_name")),
           col("l_suppkey") === col("s_suppkey"))
         .groupBy(col("s_name"))

@@ -388,6 +388,74 @@ class DegenerateInputSpec extends AnyFunSuite {
       None -> (2L, 2.0, 9.0, 5.5)))
   }
 
+  // TPC-H edge cases the benchmark corpora rarely hit: ties at a
+  // minimum, repeated (part, supplier) lineitems, and an order whose
+  // every supplier was late. Expected rows are the DuckDB oracle's on
+  // these files.
+  private def tpchDir(name: String, region: String): String = {
+    import spark.implicits._
+    val d = Paths.get(s"target/tmp/degenerate_$name").toAbsolutePath.toString
+    writeTable(d, "region", Seq((0, region), (1, "OTHER"))
+      .toDF("r_regionkey", "r_name"))
+    writeTable(d, "nation", Seq((0, "N0", 0), (1, "N1", 0), (2, "N2", 1))
+      .toDF("n_nationkey", "n_name", "n_regionkey"))
+    writeTable(d, "supplier", Seq((1L, "S1", 0, 5.0), (2L, "S2", 1, 5.0),
+        (3L, "S3", 0, 9.0), (4L, "S4", 2, 1.0), (5L, "S5", 0, -1.0))
+      .toDF("s_suppkey", "s_name", "s_nationkey", "s_acctbal"))
+    d
+  }
+
+  test("q182: suppliers tied at a part's minimum cost all appear") {
+    import spark.implicits._
+    val d = tpchDir("q182_ties", "EUROPE")
+    writeTable(d, "part", Seq((10L, "p10", "STANDARD", 15))
+      .toDF("p_partkey", "p_name", "p_type", "p_size"))
+    // S1 and S2 tie at 5.0 (two nations), S3 costs more, S4 is cheaper
+    // but outside EUROPE; (10, 1) repeats
+    writeTable(d, "lineitem", Seq((10L, 1L), (10L, 1L), (10L, 2L), (10L, 3L),
+        (10L, 4L)).toDF("l_partkey", "l_suppkey"))
+    val rows = SparkEntry.queries("q182_min_cost_supplier")(spark, d)
+      .collect().map(r => (r.getAs[Double]("s_acctbal"),
+        r.getAs[String]("s_name"), r.getAs[String]("n_name"),
+        r.getAs[Long]("p_partkey")))
+    assert(rows.toSeq == Seq((5.0, "S1", "N0", 10L), (5.0, "S2", "N1", 10L)))
+  }
+
+  test("q191: repeated (part, supplier) lineitems count the supplier once") {
+    import spark.implicits._
+    val d = tpchDir("q191_dup_pairs", "EUROPE")
+    writeTable(d, "part", Seq((10L, "Brand#1", "STANDARD", 3),
+        (11L, "Brand#1", "STANDARD", 3))
+      .toDF("p_partkey", "p_brand", "p_type", "p_size"))
+    // S1 three times over two parts of one bucket; S5 is excluded
+    // (s_acctbal < 0)
+    writeTable(d, "lineitem", Seq((10L, 1L), (10L, 1L), (11L, 1L), (10L, 2L),
+        (11L, 5L)).toDF("l_partkey", "l_suppkey"))
+    val rows = SparkEntry.queries("q191_supplier_counts")(spark, d)
+      .collect().map(r => (r.getAs[String]("p_brand"),
+        r.getAs[String]("p_type"), r.getAs[Int]("p_size"),
+        r.getAs[Long]("supplier_cnt")))
+    assert(rows.toSeq == Seq(("Brand#1", "STANDARD", 3, 2L)))
+  }
+
+  test("q195: an order with two late suppliers yields no row") {
+    import spark.implicits._
+    import java.time.LocalDateTime
+    val d = tpchDir("q195_two_late", "MIDDLE EAST")
+    val day0 = LocalDateTime.of(2024, 1, 1, 0, 0)
+    writeTable(d, "orders", Seq((1L, "F", day0), (2L, "F", day0))
+      .toDF("o_orderkey", "o_orderstatus", "o_orderdate"))
+    // order 1: S1 and S2 both late; order 2: S1 late, S2 on time
+    writeTable(d, "lineitem", Seq((1L, 1L, day0.plusDays(100)),
+        (1L, 2L, day0.plusDays(100)), (2L, 1L, day0.plusDays(100)),
+        (2L, 2L, day0.plusDays(10)))
+      .toDF("l_orderkey", "l_suppkey", "l_shipdate"))
+    val rows = SparkEntry.queries("q195_waiting_suppliers")(spark, d)
+      .collect().map(r => (r.getAs[String]("s_name"),
+        r.getAs[Long]("numwait")))
+    assert(rows.toSeq == Seq(("S1", 1L)))
+  }
+
   test("q177: an all-equal-price brand medians at the tie, full weight") {
     // total ties: the cumulative weight crosses tot/2 inside the one
     // tie group, so the median is the tied price with the full weight

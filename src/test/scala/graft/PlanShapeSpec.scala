@@ -810,14 +810,16 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("TPC-H tier evaluates each shared corpus stage exactly once") {
-    // q182/q190: group-then-join-back twins stay canonically identical
+    // q190: the group-then-join-back twins stay canonically identical
     // (explicit isNotNull on the grouping key where a consumer-side
     // join would otherwise infer it one-sidedly) so AQE reuses the
-    // shuffle stage; q192/q195: the correlated subquery compiles to a
-    // window over one exchange. Either way lineitem is scanned ONCE —
+    // shuffle stage; q182/q192/q195: the correlated subquery compiles
+    // to a window over one exchange of the candidate rows; q191/q193
+    // aggregate the scan once. Either way lineitem is scanned ONCE —
     // the property that halves the corpus cost at 100 TB.
     for (q <- Seq("q182_min_cost_supplier", "q190_top_supplier",
-        "q192_small_qty_revenue", "q195_waiting_suppliers")) {
+        "q191_supplier_counts", "q192_small_qty_revenue", "q193_big_orders",
+        "q195_waiting_suppliers")) {
       val df = SparkEntry.queries(q)(spark, sf)
       df.collect()
       val finalPlan = df.queryExecution.executedPlan.toString
@@ -825,6 +827,27 @@ class PlanShapeSpec extends AnyFunSuite {
       val liScans = "FileScan parquet \\[l_".r.findAllIn(finalPlan).length
       assert(liScans == 1,
         s"$q must scan lineitem exactly once, found $liScans:\n$finalPlan")
+    }
+  }
+
+  test("tpch_x10 queries keep their hash exchange counts") {
+    // The benchmark's four TPC-H queries, pinned so a refactor cannot
+    // add a stage back: q182 prunes lineitem to candidate parts before
+    // the pair distinct and takes the per-part minimum with a window
+    // (pair distinct + window); q191 counts distinct suppliers in the
+    // aggregate (distinct key + bucket); q193 aggregates per order
+    // once; q195 shares one l_orderkey exchange between the (order,
+    // supplier) aggregate and the window (plus the s_name count).
+    for ((q, hashes) <- Seq(("q182_min_cost_supplier", 2),
+        ("q191_supplier_counts", 2), ("q193_big_orders", 1),
+        ("q195_waiting_suppliers", 2))) {
+      val df = SparkEntry.queries(q)(spark, sf)
+      df.collect()
+      val finalPlan = df.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==").head
+      val found = "Exchange hashpartitioning".r.findAllIn(finalPlan).length
+      assert(found == hashes,
+        s"$q must plan $hashes hash exchange(s), found $found:\n$finalPlan")
     }
   }
 
