@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   *     primitive a curation pipeline uses for topical filtering).
   *
   * All counts are exact integers; the one transcendental (idf's ln) is
-  * 6-decimal-snapped on both engines (the [[graft.queries.ScalarMath]]
-  * r6 recipe), so every query is hash-exact against its DuckDB oracle.
+  * 6-decimal-snapped on both engines ([[Parity.snap6]]), so every
+  * query is hash-exact against its DuckDB oracle.
   */
 object CorpusSignals extends QueryModule {
 
@@ -43,35 +43,31 @@ object CorpusSignals extends QueryModule {
     // (source, word) counts; the top-30 cut, the 30×|sources| dense
     // grid, and the pair frame are all dimension-sized.
     "q320_burrows_delta" -> ((s, d) => {
-      val cnt = Tables.documents(s, d)
-        .select(col("source"), explode(Text.words(col("text"))).as("w"))
-        .filter(col("w") =!= "")
-        .groupBy(col("source"), col("w"))
-        .agg(count(lit(1)).as("c"))
-      val top = cnt.groupBy(col("w"))
-        .agg(sum(col("c")).as("cw"))
+      val cnt = Text.termCounts(Tables.documents(s, d), col("source"))
+      val top = cnt.groupBy(col("term"))
+        .agg(sum(col("tf")).as("cw"))
         .withColumn("rk", row_number().over(
-          Window.orderBy(col("cw").desc, col("w"))))
+          Window.orderBy(col("cw").desc, col("term"))))
         .filter(col("rk") <= 30)
-        .select(col("w"))
-      val ns = cnt.groupBy(col("source")).agg(sum(col("c")).as("n_s"))
+        .select(col("term"))
+      val ns = cnt.groupBy(col("source")).agg(sum(col("tf")).as("n_s"))
       // dense 30 × |sources| grid: absent (source, word) pairs are
       // REAL zeros in the style profile, not missing rows.
       val grid = broadcast(top).crossJoin(broadcast(ns))
-        .join(cnt, Seq("source", "w"), "left")
-        .select(col("source"), col("w"),
-          expr("coalesce(c, 0L) * 1000000L DIV n_s").as("f"))
-      val wWord = Window.partitionBy(col("w"))
+        .join(cnt, Seq("source", "term"), "left")
+        .select(col("source"), col("term"),
+          expr("coalesce(tf, 0L) * 1000000L DIV n_s").as("f"))
+      val wWord = Window.partitionBy(col("term"))
       val stats = grid
         .withColumn("k", count(lit(1)).over(wWord))
         .withColumn("sf", sum(col("f")).over(wWord))
         .withColumn("sf2", sum(dec(col("f")) * dec(col("f"))).over(wWord))
         .withColumn("dd",
           dec(col("k")) * col("sf2") - dec(col("sf")) * dec(col("sf")))
-      val b = stats.select(col("w").as("w_b"), col("source").as("source_b"),
+      val b = stats.select(col("term").as("w_b"), col("source").as("source_b"),
         col("f").as("f_b"))
       stats.join(b,
-          col("w") === col("w_b") && col("source") < col("source_b"))
+          col("term") === col("w_b") && col("source") < col("source_b"))
         .withColumn("term_micro", when(col("dd") > 0,
           floor(col("k").cast("double") * abs(col("f") - col("f_b"))
             .cast("double") * 1e6
@@ -97,18 +93,16 @@ object CorpusSignals extends QueryModule {
     // top-100 cut is one TakeOrdered heap; |docs| is a 1-row
     // broadcast.
     "q325_word_burstiness" -> ((s, d) => {
-      val tok = Tables.documents(s, d)
-        .select(col("doc_id"), explode(Text.words(col("text"))).as("w"))
-        .filter(col("w") =!= "")
+      val tok = Text.terms(Tables.documents(s, d), col("doc_id"))
       val ndocs = Tables.documents(s, d)
         .agg(count(lit(1)).as("n_docs"))
-      tok.groupBy(col("w"))
+      tok.groupBy(col("term"))
         .agg(count(lit(1)).as("cf"), countDistinct(col("doc_id")).as("df"))
         .withColumn("rank", row_number().over(
-          Window.orderBy(col("cf").desc, col("w"))).cast("long"))
+          Window.orderBy(col("cf").desc, col("term"))).cast("long"))
         .filter(col("rank") <= 100L)
         .crossJoin(broadcast(ndocs))
-        .select(col("rank"), col("w").as("word"), col("cf"), col("df"),
+        .select(col("rank"), col("term").as("word"), col("cf"), col("df"),
           snap6(col("cf").cast("double") / col("df").cast("double"))
             .as("burstiness"),
           snap6(col("df").cast("double") / col("n_docs").cast("double"))
@@ -148,13 +142,13 @@ object CorpusSignals extends QueryModule {
     // frame; β by q245's OLS recipe (snapped micro-nat ln, DECIMAL
     // moments, one snapped division). The checkpoint position and
     // prefix sums ride DistributedRank's q101-style distributed
-    // prefix sum over the DOC frame (the r13 global sorted window
-    // funneled every doc through ONE task); everything shingle-sized
+    // prefix sum over the DOC frame (a global sorted window would
+    // funnel every doc through ONE task); everything shingle-sized
     // is hash-keyed.
     "q284_heaps_law" -> ((s, d) => {
       // the vocab unit is the 60-bit md5 fold of the shingle, hashed
-      // on BOTH engines (the q363 recipe, r14: the raw-string
-      // first-occurrence aggregate dominated the 100× rung's memory —
+      // on BOTH engines (the q363 recipe: the raw-string
+      // first-occurrence aggregate dominated memory at 100× scale —
       // the fold shuffles 8-byte longs and a collision cancels
       // cross-engine because the oracle folds identically); per-doc
       // n_toks counts post-array_distinct rows, so it is unaffected
@@ -191,7 +185,7 @@ object CorpusSignals extends QueryModule {
         sum(dec19(col("lx")) * dec19(col("lx"))).as("sxx"),
         sum(dec19(col("lx")) * dec19(col("ly"))).as("sxy"))
         // a degenerate curve (one checkpoint, or all-equal lx) has no
-        // slope: NULL, never 0/0 = NaN (r14 one-doc-corpus guard;
+        // slope: NULL, never 0/0 = NaN (the one-doc-corpus guard,
         // mirrored in the oracle)
         .withColumn("den", (dec19(col("n_points")) * col("sxx")
           - col("sx") * col("sx")).cast("double"))
@@ -224,12 +218,7 @@ object CorpusSignals extends QueryModule {
       val weights = "array(1000000L,900000L,810000L,729000L,656100L," +
         "590490L,531441L,478297L,430467L,387420L,348678L,313811L," +
         "282430L,254187L,228768L,205891L,185302L,166772L,150095L,135085L)"
-      val tf = Tables.documents(s, d)
-        .select(col("source"),
-          explode_outer(Text.words(col("text"))).as("term"))
-        .filter(col("term") =!= "")
-        .groupBy(col("source"), col("term"))
-        .agg(count(lit(1)).as("tf"))
+      val tf = Text.termCounts(Tables.documents(s, d), col("source"))
       // number of sources, derived by RE-AGGREGATING the tf frame
       // (not countDistinct over a fresh corpus subtree — that planned
       // a second scan): the un-foldable tf/nt references keep this
@@ -294,14 +283,7 @@ object CorpusSignals extends QueryModule {
     "q265_collocations" -> ((s, d) => {
       def t(k: Column): Column =
         k.cast("decimal(14,0)") * lm(k).cast("decimal(9,0)")
-      val bg = Tables.documents(s, d)
-        .withColumn("ws", Text.words(col("text")))
-        .filter(size(col("ws")) >= 2)
-        .select(explode(transform(
-          sequence(lit(1), size(col("ws")) - 1), i =>
-            struct(element_at(col("ws"), i).as("w1"),
-              element_at(col("ws"), i + 1).as("w2")))).as("bg"))
-        .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+      val bg = bigrams(Tables.documents(s, d))
         .groupBy(col("w1"), col("w2"))
         .agg(count(lit(1)).as("c"))
       val tot = bg.agg(sum(col("c")).as("n"))
@@ -328,17 +310,8 @@ object CorpusSignals extends QueryModule {
     }),
 
     "q255_kn_bigram" -> ((s, d) => {
-      def bigrams(df: DataFrame): DataFrame = df
-        .withColumn("ws", Text.words(col("text")))
-        .filter(size(col("ws")) >= 2)
-        .select(col("doc_id"), explode(transform(
-          sequence(lit(1), size(col("ws")) - 1), i =>
-            struct(element_at(col("ws"), i).as("w1"),
-              element_at(col("ws"), i + 1).as("w2")))).as("bg"))
-        .select(col("doc_id"), col("bg.w1").as("w1"),
-          col("bg.w2").as("w2"))
       val docs = Tables.documents(s, d)
-      val bg = bigrams(docs).groupBy(col("w1"), col("w2"))
+      val bg = bigrams(docs, col("doc_id")).groupBy(col("w1"), col("w2"))
         .agg(count(lit(1)).as("c"))
       // Marginals as KEYED WINDOWS over the one bigram frame, not
       // groupBy+join-back: each join-back branch re-planned the
@@ -366,7 +339,7 @@ object CorpusSignals extends QueryModule {
               * (col("nw2").cast("double") / col("nbb").cast("double")))
         .select(col("w1"), col("w2"),
           (-ln6(col("pkn"))).as("cost_micros"))
-      bigrams(docs).join(model, Seq("w1", "w2"))
+      bigrams(docs, col("doc_id")).join(model, Seq("w1", "w2"))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_bigrams"),
           sum(col("cost_micros")).as("nll_micros"))
@@ -411,22 +384,17 @@ object CorpusSignals extends QueryModule {
     // nothing like the q216 500-element trap), and the result is one
     // TakeOrdered heap.
     "q234_bpe_pairs" -> ((s, d) => {
-      val wf = Tables.documents(s, d)
-        .select(explode(Text.words(col("text"))).as("w"))
-        .filter(length(col("w")) >= 1)
-        .groupBy(col("w"))
-        .agg(count(lit(1)).as("freq"))
+      val wf = Text.termCounts(Tables.documents(s, d))
+      val w = col("term")
       val pairs = concat(
-        when(length(col("w")) >= 2,
-          transform(sequence(lit(1), length(col("w")) - 1), i =>
-            concat_ws(" ", col("w").substr(i, lit(1)),
-              col("w").substr(i + 1, lit(1)))))
+        when(length(w) >= 2,
+          transform(sequence(lit(1), length(w) - 1), i =>
+            concat_ws(" ", w.substr(i, lit(1)), w.substr(i + 1, lit(1)))))
           .otherwise(array().cast("array<string>")),
-        array(concat_ws(" ",
-          col("w").substr(length(col("w")), lit(1)), lit("</w>"))))
-      wf.select(col("freq"), explode(pairs).as("pair"))
+        array(concat_ws(" ", w.substr(length(w), lit(1)), lit("</w>"))))
+      wf.select(col("tf"), explode(pairs).as("pair"))
         .groupBy(col("pair"))
-        .agg(sum(col("freq")).as("n"))
+        .agg(sum(col("tf")).as("n"))
         .orderBy(col("n").desc, col("pair"))
         .limit(30)
     }),
@@ -443,18 +411,14 @@ object CorpusSignals extends QueryModule {
     // TakeOrdered heap for the top-1000 → rank window + OLS on that
     // bounded frame only.
     "q245_zipf_slope" -> ((s, d) => {
-      val top = Tables.documents(s, d)
-        .select(explode(Text.words(col("text"))).as("w"))
-        .filter(length(col("w")) >= 1)
-        .groupBy(col("w"))
-        .agg(count(lit(1)).as("freq"))
-        .orderBy(col("freq").desc, col("w"))
+      val top = Text.termCounts(Tables.documents(s, d))
+        .orderBy(col("tf").desc, col("term"))
         .limit(1000)
-      val wRank = Window.orderBy(col("freq").desc, col("w"))
+      val wRank = Window.orderBy(col("tf").desc, col("term"))
       top
         .withColumn("rk", row_number().over(wRank).cast("long"))
         .withColumn("lx", ln6(col("rk")))
-        .withColumn("ly", ln6(col("freq")))
+        .withColumn("ly", ln6(col("tf")))
         .agg(count(lit(1)).as("n_terms"),
           sum(dec19(col("lx"))).as("sx"), sum(dec19(col("ly"))).as("sy"),
           sum(dec19(col("lx")) * dec19(col("lx"))).as("sxx"),
@@ -481,40 +445,36 @@ object CorpusSignals extends QueryModule {
     // counter table. The counter table is what a 1000-executor
     // streaming job would merge per-batch — partials add.
     "q247_cms_heavy_hitters" -> ((s, d) => {
-      val wf = Tables.documents(s, d)
-        .select(explode(Text.words(col("text"))).as("w"))
-        .filter(length(col("w")) >= 1)
-        .groupBy(col("w"))
-        .agg(count(lit(1)).as("freq"))
+      val wf = Text.termCounts(Tables.documents(s, d))
       val rows = wf
-        .select(col("w"), col("freq"),
+        .select(col("term"), col("tf"),
           explode(sequence(lit(0), lit(3))).as("j"))
         .withColumn("bucket",
           pmod(Text.md5Long(
-            concat(col("j").cast("string"), lit(":"), col("w")), 8),
+            concat(col("j").cast("string"), lit(":"), col("term")), 8),
             lit(1024L)))
       val counters = rows.groupBy(col("j"), col("bucket"))
-        .agg(sum(col("freq")).as("cnt"))
+        .agg(sum(col("tf")).as("cnt"))
       // every sketch row sums to the exact corpus token count N —
       // read it off row j=0 (the merge-correctness invariant).
       val nTotal = counters.filter(col("j") === 0)
         .agg(sum(col("cnt")).as("n_total"))
-      val top = wf.orderBy(col("freq").desc, col("w")).limit(20)
-        .select(col("w"), col("freq"),
+      val top = wf.orderBy(col("tf").desc, col("term")).limit(20)
+        .select(col("term"), col("tf"),
           explode(sequence(lit(0), lit(3))).as("j"))
         .withColumn("bucket",
           pmod(Text.md5Long(
-            concat(col("j").cast("string"), lit(":"), col("w")), 8),
+            concat(col("j").cast("string"), lit(":"), col("term")), 8),
             lit(1024L)))
       top.join(broadcast(counters), Seq("j", "bucket"))
-        .groupBy(col("w"), col("freq"))
+        .groupBy(col("term"), col("tf"))
         .agg(min(col("cnt")).as("cms_est"))
         .crossJoin(broadcast(nTotal))
-        .select(col("w"), col("freq").as("exact_n"), col("cms_est"),
-          (col("cms_est") - col("freq")).as("overcount"),
+        .select(col("term").as("w"), col("tf").as("exact_n"), col("cms_est"),
+          (col("cms_est") - col("tf")).as("overcount"),
           // ε-bound at ε = 2/w, exact integer cross-multiplication:
           // (est − exact)·w ≤ 2·N
-          ((col("cms_est") - col("freq")) * 1024L <= col("n_total") * 2L)
+          ((col("cms_est") - col("tf")) * 1024L <= col("n_total") * 2L)
             .as("bound_ok"))
         .orderBy(col("exact_n").desc, col("w"))
     }),
@@ -707,14 +667,14 @@ object CorpusSignals extends QueryModule {
     // distinct-counted; novel ⟺ bucket = min_bucket; the rate is
     // one division of exact longs. Scale shape: decile bounds come
     // from DistributedRank over a SLIM (doc_id) projection and ride
-    // back as a broadcast 9-element array (the r13 global ntile
-    // window dragged the text arrays through ONE task); the tokenize
+    // back as a broadcast 9-element array (a global ntile window
+    // would drag the text arrays through ONE task); the tokenize
     // pass probes the bounds per row, and the distinct shuffles
     // 8-byte shingle hashes, not ~30-byte strings — the shared
-    // 60-bit md5 fold on BOTH engines (r13 rung: the raw-string
-    // distinct dominated q363's 100× wall; a fold collision cancels
-    // cross-engine because the oracle folds identically — the ADVICE
-    // r12 concern was the ONE-SIDED xxhash64, not hashing per se).
+    // 60-bit md5 fold on BOTH engines (the raw-string distinct
+    // dominated q363's wall at 100× scale; a fold collision cancels
+    // cross-engine because the oracle folds identically, which a
+    // one-sided xxhash64 would not).
     "q363_novelty_curve" -> ((s, d) => {
       val docsF = Tables.documents(s, d)
         .withColumn("ws", Text.words(col("text")))
@@ -733,8 +693,8 @@ object CorpusSignals extends QueryModule {
         .select(col("bkt"), Dedup.wordHash(col("gs")).as("g"))
         .distinct()
       // first_bkt as a g-keyed window over the distinct frame (the
-      // q261 one-exchange shape) — the r13 groupBy+join-back planned
-      // a SECOND corpus tokenize for the join's probe side
+      // q261 one-exchange shape) — a groupBy+join-back plans a
+      // SECOND corpus tokenize for the join's probe side
       sh.withColumn("first_bkt",
           min(col("bkt")).over(Window.partitionBy(col("g"))))
         .groupBy(col("bkt"))
@@ -785,6 +745,15 @@ object CorpusSignals extends QueryModule {
         .orderBy(col("source_a"), col("source_b"))
     })
   )
+
+  /** `(keys…, w1, w2)`: one row per adjacent word pair of each document
+    * (q255, q265). `keys` are plain column references.
+    */
+  private def bigrams(docs: DataFrame, keys: Column*): DataFrame = docs
+    .withColumn("ws", Text.words(col("text")))
+    .filter(size(col("ws")) >= 2)
+    .select(keys :+ explode(Text.wordTuples(col("ws"), 2)).as("bg"): _*)
+    .select(keys ++ Seq(col("bg.w1").as("w1"), col("bg.w2").as("w2")): _*)
 
   /** CCNet-style language-model quality scoring — the canonical
     * "train a small LM on the corpus, score every document by
@@ -898,12 +867,9 @@ object CorpusSignals extends QueryModule {
     val K1 = 1.2
     val B = 0.75
     val qterms = Seq("spark", "merge", "window")
-    val terms = docs.select(col("doc_id"),
-        explode_outer(Text.words(col("text"))).as("term"))
-      .filter(col("term") =!= "")
-    val tf = terms.groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    val dl = terms.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
+    val tf = Text.termCounts(docs, col("doc_id"))
+    val dl = Text.terms(docs, col("doc_id"))
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n"), sum(col("dl")).as("sumdl"))
     val dfq = tf.filter(col("term").isin(qterms: _*))
       .groupBy(col("term"))
@@ -950,11 +916,7 @@ object CorpusSignals extends QueryModule {
     * order it induces — is bit-identical cross-engine.
     */
   private[graft] def distinctiveTerms(docs: DataFrame): DataFrame = {
-    val terms = docs.select(col("source"),
-      explode_outer(Text.words(col("text"))).as("term"))
-      .filter(col("term") =!= "")
-    val tf = terms.groupBy(col("source"), col("term"))
-      .agg(count(lit(1)).as("tf"))
+    val tf = Text.termCounts(docs, col("source"))
     val totS = tf.groupBy(col("source")).agg(sum(col("tf")).as("tot_s"))
     val totT = tf.groupBy(col("term")).agg(sum(col("tf")).as("tf_t"))
     val tot = tf.agg(sum(col("tf")).as("tot"))
@@ -1029,10 +991,10 @@ object CorpusSignals extends QueryModule {
     * the list shape without an unbounded array in any row.
     */
   private[graft] def invertedIndex(docs: DataFrame): DataFrame = {
-    val terms = docs.select(col("doc_id"),
-      explode_outer(Text.words(col("text"))).as("term"))
-      .filter(col("term") =!= "")
-    val tf = terms.groupBy(col("term"), col("doc_id"))
+    // grouped (term, doc_id), not termCounts' (doc_id, term): the
+    // index is term-major, and its exchange keys stay term-first
+    val tf = Text.terms(docs, col("doc_id"))
+      .groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
     // count(CASE WHEN tf >= 1) — the q110 spelling that keeps this
     // branch's aggregate un-pruned so it shares the tokenize→explode
@@ -1055,10 +1017,8 @@ object CorpusSignals extends QueryModule {
     val grams = docs
       .withColumn("wrds", Text.words(col("text")))
       .filter(size(col("wrds")) >= 2)
-      .select(col("doc_id"), explode_outer(
-        transform(sequence(lit(1), size(col("wrds")) - 1), i =>
-          struct(element_at(col("wrds"), i).as("w1"),
-            element_at(col("wrds"), i + 1).as("w2")))).as("g"))
+      .select(col("doc_id"),
+        explode_outer(Text.wordTuples(col("wrds"), 2)).as("g"))
     // count per (doc, gram) on the cheap struct key; the gram STRING
     // materializes only for the per-doc distinct grams that survive
     // the first aggregation, never per occurrence.
@@ -1097,8 +1057,7 @@ object CorpusSignals extends QueryModule {
       .withColumn("wrds", Text.words(col("text")))
       .filter(size(col("wrds")) >= W)
     val win = w.select(col("doc_id"), explode_outer(
-      transform(sequence(lit(1), size(col("wrds")) - (W - 1)), i =>
-        md5(concat_ws(" ", slice(col("wrds"), i, lit(W)))))).as("h"))
+      transform(Text.ngrams(col("wrds"), W), g => md5(g))).as("h"))
     // `win` feeds both the occurrence aggregate and the join probe.
     // Pre-aggregating on (h, doc_id) makes the two consumers' shared
     // prefix — Exchange(h, doc_id) over the normalize→explode→md5
@@ -1133,19 +1092,12 @@ object CorpusSignals extends QueryModule {
     * the per-doc top-3 is a row_number window that WindowGroupLimit
     * evaluates partially below the doc_id exchange.
     *
-    * Degenerate-doc shedding: empty/whitespace-only text normalizes to
-    * the single '' token — ranking that as a term would inflate df
-    * corpus-wide and give degenerate docs a meaningless top-term row,
-    * inconsistent with how null text sheds (null term, dropped by the
-    * inner join). The term filter drops both classes the same way;
-    * the oracle applies the identical predicate.
+    * Degenerate docs (NULL, empty, whitespace-only text) have no terms
+    * ([[Text.terms]]), so they get no row and add nothing to df; the
+    * oracle applies the identical `term <> ''` predicate.
     */
   private[graft] def tfidfTopK(docs: DataFrame): DataFrame = {
-    val terms = docs.select(col("doc_id"),
-      explode_outer(Text.words(col("text"))).as("term"))
-      .filter(col("term") =!= "")
-    val tf = terms.groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
+    val tf = Text.termCounts(docs, col("doc_id"))
     // count(CASE WHEN tf >= 1 THEN 1 END), not count(*): tf ≥ 1
     // always, so the value is identical — but the un-foldable tf
     // reference stops ColumnPruning from stripping the count out of

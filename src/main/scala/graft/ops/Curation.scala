@@ -150,10 +150,8 @@ object Curation extends QueryModule {
     // (exact, no hash-collision gamble), but the corpus-side explode
     // never allocates the ~|corpus words| concatenated strings — the
     // join probe hashes the three word pointers directly.
-    def tri(w: org.apache.spark.sql.Column) = array_distinct(
-      transform(sequence(lit(1), size(w) - 2), i =>
-        struct(element_at(w, i).as("w1"), element_at(w, i + 1).as("w2"),
-          element_at(w, i + 2).as("w3"))))
+    def tri(w: org.apache.spark.sql.Column) =
+      array_distinct(Text.wordTuples(w, 3))
     val words = docs
       .withColumn("wrds", Text.words(col("text")))
       .filter(size(col("wrds")) >= 3)
@@ -239,22 +237,20 @@ object Curation extends QueryModule {
     }),
 
     "q270_oov_coverage" -> ((s, d) => {
-      val toks = Tables.documents(s, d)
-        .withColumn("bkt", (col("doc_id") * 1103515245L + 12345L) % 100L)
-        .select(col("lang"), col("bkt"),
-          explode_outer(Text.words(col("text"))).as("word"))
-        .filter(col("word") =!= "")
+      val toks = Text.terms(Tables.documents(s, d)
+        .withColumn("bkt", (col("doc_id") * 1103515245L + 12345L) % 100L),
+        col("lang"), col("bkt"))
       val vocab = toks.filter(col("bkt") < 80L)
-        .select(col("lang"), col("word")).distinct()
+        .select(col("lang"), col("term")).distinct()
         .withColumn("seen", lit(1))
       toks.filter(col("bkt") >= 80L)
-        .join(vocab, Seq("lang", "word"), "left")
+        .join(vocab, Seq("lang", "term"), "left")
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("held_tokens"),
           sum(when(col("seen").isNull, 1L).otherwise(0L))
             .as("oov_tokens"),
-          countDistinct(col("word")).as("held_types"),
-          countDistinct(when(col("seen").isNull, col("word")))
+          countDistinct(col("term")).as("held_types"),
+          countDistinct(when(col("seen").isNull, col("term")))
             .as("unseen_types"))
         .select(col("lang"), col("held_tokens"), col("oov_tokens"),
           (col("oov_tokens").cast("double")
@@ -382,16 +378,11 @@ object Curation extends QueryModule {
     // — broadcast); train side is one scan + one doc_id exchange
     // shared by the count window and the islands window.
     "q228_leak_spans" -> ((s, d) => {
-      val orderedSh = transform(
-        sequence(lit(1), size(col("words")) - 2), i =>
-          concat_ws(" ",
-            element_at(col("words"), i),
-            element_at(col("words"), i + 1),
-            element_at(col("words"), i + 2)))
       val sh = Tables.documents(s, d)
         .select(col("doc_id"), Text.words(col("text")).as("words"))
         .filter(size(col("words")) >= 3)
-        .select(col("doc_id"), posexplode(orderedSh).as(Seq("pos", "g")))
+        .select(col("doc_id"),
+          posexplode(Text.ngrams(col("words"), 3)).as(Seq("pos", "g")))
       val probe = sh.filter(col("doc_id") % 97 === 0)
         .select(col("g")).distinct().withColumn("hit", lit(1))
       val wd = Window.partitionBy(col("doc_id"))
@@ -487,12 +478,10 @@ object Curation extends QueryModule {
     // windows on the bucket frame, a broadcast join back, a per-doc
     // exact re-group, and ONE TakeOrdered heap for the top-25.
     "q235_dsir_weights" -> ((s, d) => {
-      val docTok = Tables.documents(s, d)
-        .select(col("doc_id"), col("source"),
-          explode(Text.words(col("text"))).as("w"))
-        .filter(length(col("w")) >= 1)
+      val docTok = Text.terms(Tables.documents(s, d),
+          col("doc_id"), col("source"))
         .withColumn("bucket",
-          pmod(Text.md5Long(col("w"), 4), lit(64L)))
+          pmod(Text.md5Long(col("term"), 4), lit(64L)))
       val db = docTok
         .groupBy(col("doc_id"), col("source"), col("bucket"))
         .agg(count(lit(1)).as("n_db"))
@@ -715,7 +704,7 @@ object Curation extends QueryModule {
         .agg(count(lit(1)).as("n_docs"),
           sum(dec(col("n_chars"))).as("sx"),
           sum(dec(col("n_chars")) * dec(col("n_chars"))).as("sxx"))
-        // n_docs = 1 guard (ADVICE r11): the Bessel denominator is 0
+        // n_docs = 1 guard: the Bessel denominator is 0
         // there, and Spark's Divide yields NULL while DuckDB's IEEE
         // double op yields NaN — a NaN that would poison the global
         // sum(ns) normalizer. Explicit NULL in BOTH engines (the CASE
@@ -806,8 +795,8 @@ object Curation extends QueryModule {
     val docs = docsIn
       .select(col("doc_id"), col("source"), col("n_chars"))
       // Both rank sides ride DistributedRank's q101-style distributed
-      // rank (the r13 form built the global reference distribution
-      // through ONE task's row_number, and the per-source ranks
+      // rank (a row_number window would build the global reference
+      // distribution through ONE task, and the per-source ranks
       // through one task per source). lead(v) over the global order
       // becomes a rank→rank+1 self-join of the narrow (rk, v) frame;
       // the corpus total nn is one column-less (footer-only) count

@@ -345,11 +345,7 @@ object Dedup extends QueryModule {
       val grams = Tables.documents(s, d)
         .withColumn("ws", Text.words(col("text")))
         .filter(size(col("ws")) >= 3)
-        .select(col("doc_id"), posexplode(transform(
-          sequence(lit(1), size(col("ws")) - 2), i =>
-            concat_ws(" ", element_at(col("ws"), i),
-              element_at(col("ws"), i + 1),
-              element_at(col("ws"), i + 2)))))
+        .select(col("doc_id"), posexplode(Text.ngrams(col("ws"), 3)))
         .withColumnRenamed("col", "g")
         .select(col("doc_id"), col("pos").cast("long").as("p"),
           Text.md5Long(col("g"), 15).as("h"))
@@ -1198,7 +1194,7 @@ object Dedup extends QueryModule {
     // bounded passes, the price of exact greedy at fixed k.
     "q300_greedy_coverage" -> ((s, d) => {
       // The unrolled greedy k=3 consumes the (doc_id, h) element frame
-      // ~7× (round 1 once, rounds 2-3 twice each through covered +
+      // ~7× (greedy step 1 once, steps 2-3 twice each through covered +
       // remaining, plus the final union) — and ReuseExchange can only
       // collapse some of those into shared exchanges, leaving 5 full
       // scan+shingle+md5+distinct pipelines in the lazy plan. A

@@ -70,12 +70,7 @@ object TextAnalysis extends QueryModule {
         .withColumn("n_distinct",
           size(array_distinct(col("ws"))).cast("long"))
         .withColumn("n_big_distinct",
-          size(array_distinct(when(size(col("ws")) >= 2, transform(
-            sequence(lit(1), size(col("ws")) - 1), i =>
-              concat_ws(" ", element_at(col("ws"), i),
-                element_at(col("ws"), i + 1))))
-            .otherwise(array().cast("array<string>"))))
-            .cast("long"))
+          size(array_distinct(Text.ngrams(col("ws"), 2))).cast("long"))
         .filter(col("n_words") >= 2)
         .withColumn("gold",
           col("n_big_distinct") * 10 >= (col("n_words") - 1L) * 9)
@@ -179,17 +174,13 @@ object TextAnalysis extends QueryModule {
     // one tokenize pass map-side-combines to (lang, word) counts; the
     // spectrum folds that frame per language.
     "q314_renyi_spectrum" -> ((s, d) => {
-      val cnt = Tables.documents(s, d)
-        .select(col("lang"), explode(Text.words(col("text"))).as("w"))
-        .filter(col("w") =!= "")
-        .groupBy(col("lang"), col("w"))
-        .agg(count(lit(1)).as("c"))
+      val cnt = Text.termCounts(Tables.documents(s, d), col("lang"))
       cnt.groupBy(col("lang"))
-        .agg(sum(col("c")).as("n_tokens"),
+        .agg(sum(col("tf")).as("n_tokens"),
           count(lit(1)).as("n_types"),
-          sum(dec(col("c")) * dec(col("c"))).as("sum_c2"),
-          max(col("c")).as("c_max"),
-          sum(dec(col("c")) * dec(ln6(col("c")))).as("sum_cmu"))
+          sum(dec(col("tf")) * dec(col("tf"))).as("sum_c2"),
+          max(col("tf")).as("c_max"),
+          sum(dec(col("tf")) * dec(ln6(col("tf")))).as("sum_cmu"))
         .withColumn("ln_n", snap6(log(col("n_tokens").cast("double"))))
         .select(col("lang"), col("n_tokens"), col("n_types"),
           snap6(log(col("n_types").cast("double"))).as("h0_hartley"),
@@ -215,12 +206,8 @@ object TextAnalysis extends QueryModule {
     // ≤|langs|·|distinct r| rows; the r+1 lookup is a self-join on
     // that bounded ladder, never on corpus rows.
     "q315_good_turing" -> ((s, d) => {
-      val cnt = Tables.documents(s, d)
-        .select(col("lang"), explode(Text.words(col("text"))).as("w"))
-        .filter(col("w") =!= "")
-        .groupBy(col("lang"), col("w"))
-        .agg(count(lit(1)).as("c"))
-      val ladder = cnt.groupBy(col("lang"), col("c").as("r"))
+      val cnt = Text.termCounts(Tables.documents(s, d), col("lang"))
+      val ladder = cnt.groupBy(col("lang"), col("tf").as("r"))
         .agg(count(lit(1)).as("n_r"))
       val wLang = Window.partitionBy(col("lang"))
       val up = ladder.select(col("lang").as("lang2"),
@@ -250,16 +237,12 @@ object TextAnalysis extends QueryModule {
     // is total on N₂ = 0. Exact longs, two single divisions. Scale
     // shape: tokenize → (lang, word) counts → ≤|langs| fold.
     "q323_chao_richness" -> ((s, d) => {
-      val cnt = Tables.documents(s, d)
-        .select(col("lang"), explode(Text.words(col("text"))).as("w"))
-        .filter(col("w") =!= "")
-        .groupBy(col("lang"), col("w"))
-        .agg(count(lit(1)).as("c"))
+      val cnt = Text.termCounts(Tables.documents(s, d), col("lang"))
       cnt.groupBy(col("lang"))
         .agg(count(lit(1)).as("n_types"),
-          sum(col("c")).as("n_tokens"),
-          sum(when(col("c") === 1L, 1L).otherwise(0L)).as("n1"),
-          sum(when(col("c") === 2L, 1L).otherwise(0L)).as("n2"))
+          sum(col("tf")).as("n_tokens"),
+          sum(when(col("tf") === 1L, 1L).otherwise(0L)).as("n1"),
+          sum(when(col("tf") === 2L, 1L).otherwise(0L)).as("n2"))
         .select(col("lang"), col("n_types"), col("n_tokens"),
           col("n1"), col("n2"),
           snap6(col("n_types").cast("double")
@@ -534,11 +517,8 @@ object TextAnalysis extends QueryModule {
         .withColumn("ws", Text.words(col("text")))
         .withColumn("u",
           array_sort(array_distinct(transform(col("ws"), wd => h(wd)))))
-        .withColumn("b", when(size(col("ws")) >= 2,
-          array_sort(array_distinct(transform(
-            sequence(lit(1), size(col("ws")) - 1), i => h(concat_ws(" ",
-              element_at(col("ws"), i), element_at(col("ws"), i + 1)))))))
-          .otherwise(array().cast("array<long>")))
+        .withColumn("b", array_sort(array_distinct(
+          transform(Text.ngrams(col("ws"), 2), g => h(g)))))
         .select(col("doc_id"), col("lang"), col("source"), col("u"),
           col("b"),
           lead(col("doc_id"), 1).over(w).as("ref_id"),
@@ -614,21 +594,18 @@ object TextAnalysis extends QueryModule {
     // stems computed per vocab row, ONE lang re-group; the ratio is a
     // single division of exact longs.
     "q269_stem_audit" -> ((s, d) => {
-      val w = col("word")
+      val w = col("term")
       val stem = when(length(w) >= 5 && w.endsWith("ing"),
-          expr("substring(word, 1, length(word) - 3)"))
+          expr("substring(term, 1, length(term) - 3)"))
         .when(length(w) >= 4 && w.endsWith("ed"),
-          expr("substring(word, 1, length(word) - 2)"))
+          expr("substring(term, 1, length(term) - 2)"))
         .when(length(w) >= 4 && w.endsWith("es"),
-          expr("substring(word, 1, length(word) - 2)"))
+          expr("substring(term, 1, length(term) - 2)"))
         .when(length(w) >= 3 && w.endsWith("s") && !w.endsWith("ss"),
-          expr("substring(word, 1, length(word) - 1)"))
+          expr("substring(term, 1, length(term) - 1)"))
         .otherwise(w)
-      val vocab = Tables.documents(s, d)
-        .select(col("lang"),
-          explode_outer(Text.words(col("text"))).as("word"))
-        .filter(col("word") =!= "")
-        .select(col("lang"), col("word")).distinct()
+      val vocab = Text.terms(Tables.documents(s, d), col("lang"))
+        .distinct()
         .withColumn("stem", stem)
       vocab
         .groupBy(col("lang"), col("stem"))

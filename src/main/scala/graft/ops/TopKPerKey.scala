@@ -62,8 +62,7 @@ object TopKPerKey extends QueryModule {
     * (measure desc, tie asc). Rows with a NULL key/measure/tie are
     * unrankable and excluded up front — the typed encoder's primitive
     * fields would otherwise throw NOT_NULL_ASSERT_VIOLATION the first
-    * time a half-corrupt batch ships a null measure (null-payload
-    * probe, r14).
+    * time a half-corrupt batch ships a null measure.
     */
   def apply(df: DataFrame, k: Int): DataFrame = {
     val spark = df.sparkSession
@@ -124,9 +123,8 @@ object TopKPerKey extends QueryModule {
     // regime (k < distinct) is property-pinned in NativeTopFreqSpec.
     "q287_heavy_hitters" -> ((s, d) =>
       topFreq(
-        Tables.documents(s, d)
-          .select(col("lang"), explode(Text.words(col("text"))).as("word"))
-          .filter(col("word") =!= ""),
+        Text.terms(Tables.documents(s, d), col("lang"))
+          .select(col("lang"), col("term").as("word")),
         "word", 64, Seq("lang"))
         .orderBy(col("lang"), col("rank")))
   )

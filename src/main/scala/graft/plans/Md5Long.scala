@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * expression computes the digest once and folds the leading nibbles
   * straight into a long: no hex encode, no radix parse, no allocation
   * beyond the digest itself. Measured on q271's 16-permutation
-  * signature stage (the catalog's hottest md5 chain) in round 15.
+  * signature stage (the catalog's hottest md5 chain).
   *
   * `k` must be a foldable INT literal in [1, 15]; the string side is
   * null-propagating like the chain it replaces.

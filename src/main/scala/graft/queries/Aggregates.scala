@@ -63,7 +63,7 @@ object Aggregates extends QueryModule {
     // stddev_samp, matching DuckDB). corr is NOT the builtin
     // aggregate: Spark's Corr divides by √(xMk·yMk) inside the
     // aggregate's eval, which ANSI-throws DIVIDE_BY_ZERO the moment a
-    // group has zero variance (degenerate-corpus probe, r14) and no
+    // group has zero variance (a degenerate corpus) and no
     // projection-level guard can reach it — so it is decomposed into
     // covar_pop/(σx·σy) on the SAME central co-moments, NULL-guarded,
     // with the identical decomposition mirrored in the oracle.
@@ -456,8 +456,8 @@ object Aggregates extends QueryModule {
     // re-profile. Bounds are 4-decimal-rounded before assignment so
     // bucket membership is bit-identical cross-engine.
     "q136_equidepth_hist" -> ((s, d) => {
-      // Exact percentile bounds WITHOUT the Percentile aggregate
-      // (round 14): `percentile(x, array(...))` builds a value→count
+      // Exact percentile bounds WITHOUT the Percentile aggregate:
+      // `percentile(x, array(...))` builds a value→count
       // OpenHashMap in every partial buffer and merges them all into
       // ONE final buffer — task memory grows with the distinct-value
       // count, the 100 TB OOM the rest of this file avoids. The same
@@ -499,7 +499,7 @@ object Aggregates extends QueryModule {
     "q132_winsorize" -> ((s, d) => {
       val li = Tables.lineitem(s, d)
         .select(col("l_returnflag"), col("l_extendedprice"))
-      // bounds via exactPercentiles (round 14, the q39b rationale):
+      // bounds via exactPercentiles (the q39b rationale):
       // bit-identical to the grouped percentile aggregate without its
       // per-group value-map buffer.
       val bounds = graft.ops.DistributedRank.exactPercentiles(
@@ -588,8 +588,8 @@ object Aggregates extends QueryModule {
     }),
 
     "q39b_percentile_exact" -> ((s, d) =>
-      // exact percentiles via DistributedRank.exactPercentiles
-      // (round 14): the Percentile aggregate's per-group value→count
+      // exact percentiles via DistributedRank.exactPercentiles:
+      // the Percentile aggregate's per-group value→count
       // map buffer holds each flag's whole distinct-value set in one
       // task at 100 TB; the deduped-value rank form is bit-identical
       // (helper doc) and keeps every task corpus/partitions-sized.
@@ -740,8 +740,8 @@ object Aggregates extends QueryModule {
           coalesce(col("spend"), lit(0).cast("decimal(22,2)")).as("y"))
         .transform(graft.ops.Materialize.frame)
       // doubled midranks via DistributedRank over the DEDUPED value
-      // frames, hash-joined back (round 14, the q283 recipe): the
-      // previous per-row range-frame windows put each segment's whole
+      // frames, hash-joined back (the q283 recipe): per-row
+      // range-frame windows would put each segment's whole
       // customer frame through one sort task (5 segments), and the
       // y side (per-customer spend) has no bounded value domain. For
       // value v with cnt rows and run = cumulative rows ≤ v, the
@@ -826,7 +826,7 @@ object Aggregates extends QueryModule {
     // Weighted median — the quantity-weighted median unit price per
     // brand: the weighted-quantile primitive plain percentile() can't
     // express (each row counts wt times). NOT a per-group sort to the
-    // driver — and (r14) not a brand-partitioned window either:
+    // driver — and not a brand-partitioned window either:
     // |brands| = 25 at every scale, so each brand partition carries
     // corpus/25 rows through ONE sort task. The cumulative LONG
     // weight (quantities are integral — exact in any merge order)
@@ -834,7 +834,7 @@ object Aggregates extends QueryModule {
     // linenumber) total order within each brand; the median is the
     // first row where 2·cum ≥ total, selected by a plain min
     // aggregate. Integer cross-multiplication, no division anywhere.
-    // Considered and rejected (r14): pre-folding to the
+    // Considered and rejected: pre-folding to the
     // (brand, price) weight histogram before the rank — provably the
     // same median (DistributedRankSpec pins the granularity
     // equivalence) and the right shape for a QUANTIZED value domain
@@ -947,7 +947,7 @@ object Aggregates extends QueryModule {
           / (lit(4.0) * col("n_a").cast("double")))
         .withColumn("h", lit(12.0) * sum(col("term")).over(wAll)
           / (col("n").cast("double") * (col("n") + 1L).cast("double")))
-        // Degenerate-input guards (ADVICE r11): n = 1 makes the tie
+        // Degenerate-input guards: n = 1 makes the tie
         // denominator n³−n zero, and an all-tied corpus (every row one
         // value) makes tie_c itself exactly 0 — both are 0-divisors
         // where Spark's Divide yields NULL but DuckDB's IEEE doubles
@@ -1007,7 +1007,7 @@ object Aggregates extends QueryModule {
           max(col("df_star")).as("df_star"),
           // df_star = 0 (single row OR single column in the table)
           // zeroes the V denominator — NULL in both engines rather
-          // than Spark-NULL vs DuckDB-inf (ADVICE r11).
+          // than Spark-NULL vs DuckDB-inf.
           when(max(col("df_star")) > 0L,
             snap6(sqrt(max(col("chi2"))
               / (max(col("n")).cast("double")
@@ -1208,7 +1208,7 @@ object Aggregates extends QueryModule {
     // N-scaled form keeps every operand an exact integer (inside 38
     // digits to N ~ 10⁸ rows; beyond that the statistic exceeds
     // double's exact range in any engine). Degenerate guards (one
-    // level, R = 0, R = N) emit NULL identically (the r12 rule).
+    // level, R = 0, R = N) emit NULL identically in both engines.
     // Scale shape: ONE corpus pass map-side-combines to the ≤|levels|
     // per-linestatus frame; the test folds ≤11 exact terms.
     "q317_trend_test" -> ((s, d) => {
@@ -1254,8 +1254,8 @@ object Aggregates extends QueryModule {
     // (value, event_id) — a total order; equal values make the weight
     // assignment among ties irrelevant to the SUM only for x, which
     // is the term being weighted, so any tie order yields the same Σ.
-    // Scale shape (r14): ranks ride DistributedRank within each type —
-    // the old type-partitioned window put corpus/|types| rows through
+    // Scale shape: ranks ride DistributedRank within each type —
+    // a type-partitioned window would put corpus/|types| rows through
     // ONE sort task (|event_type| is a bounded domain, the partitions
     // grow with the corpus); then a map-side-combined fold to the
     // ≤|types| frame.
@@ -1454,18 +1454,18 @@ object Aggregates extends QueryModule {
         .agg(map_from_entries(sort_array(
           collect_list(struct(col("event_type"), col("ca"))))).as("m"))
         .crossJoin(broadcast(tysArr))
-      // Round 15 (VERDICT r14 #5): the |types|² pair CDFs fold into ONE
-      // value-keyed frame. The r14 shape self-joined the zero-filled
-      // grid with itself on value and ran lead() over |types|²/2
-      // (t, t_b) window partitions; but dv = (next distinct value − v)
+      // The |types|² pair CDFs fold into ONE value-keyed frame rather
+      // than self-joining the zero-filled grid with itself on value
+      // and running lead() over |types|²/2 (t, t_b) window
+      // partitions: dv = (next distinct value − v)
       // is a property of the VALUE GRID alone — every pair sees every
       // value — so it rides the same per-type window exchange as the
       // cums (identical for each t; min() picks it deterministically in
       // the regroup), the per-value (cum, nt) vector regroups into one
       // map per value, and the pair fan-out is a map-side explode of
       // the broadcast type pairs — no self-join, no pair windows.
-      // Every (value, t_a, t_b) term6 is the same exact long as before;
-      // the per-pair sums and n_grid counts are therefore identical.
+      // Every (value, t_a, t_b) term6 is the same exact long as in the
+      // self-join form, so the per-pair sums and n_grid counts are too.
       val grid = pv
         .select(col("value"), col("m"), explode(col("tys")).as("t"))
         .select(col("value"), col("t"),
@@ -1526,9 +1526,9 @@ object Aggregates extends QueryModule {
       val ords = Tables.orders(s, d)
         .select(col("o_orderpriority").as("prio"),
           col("o_totalprice").as("v"))
-      // both prefix sums ride DistributedRank (round 14): the global
-      // cum_le window put the whole distinct-price frame through ONE
-      // task and the prio-partitioned one through 5 — o_totalprice's
+      // both prefix sums ride DistributedRank: a global cum_le
+      // window would put the whole distinct-price frame through ONE
+      // task and a prio-partitioned one through 5 — o_totalprice's
       // distinct-cents frame saturates only in the tens of millions
       // (q341's rungs show it still growing at 100×), far past a
       // single sort task's comfort. run/tot are the same exact longs.
@@ -1617,7 +1617,7 @@ object Aggregates extends QueryModule {
           snap6(col("num_tot").cast("double")
             / (dec(col("u2")) * dec(col("u2"))).cast("double"))
             .as("total_var"),
-          // k > 1 guard (VERDICT r12 #4): a single-item instrument has
+          // k > 1 guard: a single-item instrument has
           // no internal consistency to measure — k−1 = 0 would make
           // this 0/0 → NaN in Spark's double division, where the
           // oracle's HUGEINT path errors. NULL on both engines.
@@ -1730,7 +1730,7 @@ object Aggregates extends QueryModule {
         .select(col("o_orderpriority").as("g"), col("o_totalprice").as("v"))
       val pv = o.groupBy(col("g"), col("v")).agg(count(lit(1)).as("np"))
       // per-group running count via DistributedRank, not a
-      // g-partitioned window (round 14): |priorities| = 5 partitions
+      // g-partitioned window: |priorities| = 5 partitions
       // over the distinct-value grid funnel value-scale frames
       // through 5 sort tasks — the q179 funnel class. run_np is the
       // same inclusive prefix sum in exact longs.
@@ -1904,7 +1904,7 @@ object Aggregates extends QueryModule {
     // shape: one corpus pass to per-part cents (map-side combined),
     // then the cumulative revenue rides DistributedRank's q101-style
     // prefix sum over the PART frame — never a global sorted window
-    // (the r13 form funneled every part through ONE task), a 3-row
+    // (that would funnel every part through ONE task), a 3-row
     // fold.
     "q355_abc_analysis" -> ((s, d) => {
       val rev = Tables.lineitem(s, d)
@@ -2078,7 +2078,7 @@ object Aggregates extends QueryModule {
     // (tie → smaller rank); shares are single divisions. Scale
     // shape: one corpus pass to per-part cents, then rank/cumsum/
     // totals ride DistributedRank's q101-style prefix sum over the
-    // part frame (the r13 global sorted window funneled every part
+    // part frame (a global sorted window would funnel every part
     // through ONE task), and the argmax is a TakeOrdered heap — each
     // partition forwards one row, never a second global window.
     "q364_pareto_knee" -> ((s, d) => {
@@ -2165,7 +2165,7 @@ object Aggregates extends QueryModule {
     // double expression of exact counts, argmin on (snapped gini,
     // threshold). Scale shape: the decile boundaries come from
     // DistributedRank (q101-style distributed rank + the exact ntile
-    // formula — the r13 global ntile window funneled every order
+    // formula — a global ntile window would funnel every order
     // through ONE task), one corpus pass for the counts, a 9-row
     // readout.
     "q378_decision_stump" -> ((s, d) => {
@@ -2204,7 +2204,7 @@ object Aggregates extends QueryModule {
             / col("n").cast("double")))
         .withColumn("g6", snap6(col("gini")))
         .withColumn("best", row_number().over(
-          // dec10 as final tie-break (ADVICE r12): two deciles whose
+          // dec10 as final tie-break: two deciles whose
           // max price coincides carry identical (g6, thr), and the
           // arbitrary winner could differ across engines/partitionings.
           Window.orderBy(col("g6").asc_nulls_last, col("thr"),
@@ -2229,7 +2229,7 @@ object Aggregates extends QueryModule {
     // (left join — the concentration question includes them).
     // Scale shape: one corpus pass to per-customer cents, deciles
     // from DistributedRank's distributed rank + exact ntile formula
-    // (the r13 global ntile window funneled every customer through
+    // (a global ntile window would funnel every customer through
     // ONE task), a 10-row readout (whose own cum/tot windows ride
     // the bounded decile frame).
     "q380_lorenz_curve" -> ((s, d) => {

@@ -202,7 +202,7 @@ object Windows extends QueryModule {
     // engines reach the frontier by independent algorithms.
     "q149_skyline" -> ((s, d) => {
       // skyline probe via DistributedRank.withExclMax, not a
-      // brand-partitioned window (round 14): 25 brands × part-scale
+      // brand-partitioned window: 25 brands × part-scale
       // frames through one sort task each is the q179 funnel class;
       // the bucketed exclusive running max is value-identical
       // (greatest skips nulls exactly like the empty leading frame).
@@ -288,7 +288,7 @@ object Windows extends QueryModule {
               - col("l_discount").cast("decimal(12,2)")))
           .cast("decimal(18,2)").cast("double").as("revenue"))
       // cumulative revenue via DistributedRank, not a nation-
-      // partitioned window (round 14, the q179 funnel class: 25
+      // partitioned window (the q179 funnel class: 25
       // nations × customer-scale frames through one sort task each).
       // run_rev is the same inclusive DECIMAL prefix sum — exact in
       // any order — so the previous row's cumulative total is
@@ -336,8 +336,8 @@ object Windows extends QueryModule {
             * (lit(1).cast("decimal(12,2)")
               - col("l_discount").cast("decimal(12,2)")))
           .cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      // rank via DistributedRank, not a nation-partitioned window
-      // (round 14): 25 nations × customer-scale frames put each
+      // rank via DistributedRank, not a nation-partitioned window:
+      // 25 nations × customer-scale frames would put each
       // nation's whole customer set through ONE sort task — the same
       // funnel as the de-globalized q380 family, one level down
       // (partitioned by a bounded key instead of unpartitioned). The

@@ -365,19 +365,6 @@ object IOQueries extends QueryModule {
         .orderBy(col("doc_id"))
     }),
 
-    // Small-file compaction: the operational complement of the layout
-    // queries. A 100 TB ingest that lands 10^7 kilobyte-files (one per
-    // micro-batch per key) poisons every downstream scan with per-file
-    // open/footer cost and starves the scheduler; the fix is a periodic
-    // rewrite that coalesces to target-sized files WITHOUT a driver
-    // funnel (no coalesce(1)) and with a per-file row cap so no output
-    // file exceeds the target either. Here: fragment documents into 64
-    // shards (the pathological input, one file each), then compact via
-    // the REBALANCE hint — AQE's runtime coalescing packs the shuffle
-    // outputs to advisory-size partitions, splitting skewed ones —
-    // capped by maxRecordsPerFile. SourcesSpec pins the file counts
-    // (64 in, ≤8 out at the 500-doc scale, every file ≤ the cap); the
-    // aggregate oracle proves the double rewrite is lossless.
     // Sharded dataset export + integrity manifest — the packaging step
     // a training run consumes (WebDataset/TFRecord-style shard
     // layout): the corpus hash-routes into 8 shards (deterministic
@@ -410,6 +397,19 @@ object IOQueries extends QueryModule {
         .orderBy(col("shard"))
     }),
 
+    // Small-file compaction: the operational complement of the layout
+    // queries. A 100 TB ingest that lands 10^7 kilobyte-files (one per
+    // micro-batch per key) poisons every downstream scan with per-file
+    // open/footer cost and starves the scheduler; the fix is a periodic
+    // rewrite that coalesces to target-sized files WITHOUT a driver
+    // funnel (no coalesce(1)) and with a per-file row cap so no output
+    // file exceeds the target either. Here: fragment documents into 64
+    // shards (the pathological input, one file each), then compact via
+    // the REBALANCE hint — AQE's runtime coalescing packs the shuffle
+    // outputs to advisory-size partitions, splitting skewed ones —
+    // capped by maxRecordsPerFile. SourcesSpec pins the file counts
+    // (64 in, ≤8 out at the 500-doc scale, every file ≤ the cap); the
+    // aggregate oracle proves the double rewrite is lossless.
     "q118_compaction" -> ((s, d) => {
       val frag = scratch(d, "frag")
       val compact = scratch(d, "compact")
@@ -460,11 +460,6 @@ object IOQueries extends QueryModule {
         .orderBy(col("generation"))
     }),
 
-    // custom DataSource V2 SINK round-trip (MemTableSource): write
-    // through the V2 batch-commit protocol (executor writers →
-    // driver-side atomic commit, overwrite = truncate), read back
-    // through its pruned scan, aggregate, oracle vs the parquet
-    // original — proving writer and reader agree byte-for-byte.
     // Arrow IPC round-trip through the DSV2 file source/sink — the
     // reference's from_arrow/to_arrow surface (dataframe.rs:391-407,
     // 515-525) as a cluster-shaped exchange: write task-parallel .arrow
@@ -491,6 +486,11 @@ object IOQueries extends QueryModule {
         .orderBy(col("o_orderstatus"))
     }),
 
+    // custom DataSource V2 SINK round-trip (MemTableSource): write
+    // through the V2 batch-commit protocol (executor writers →
+    // driver-side atomic commit, overwrite = truncate), read back
+    // through its pruned scan, aggregate, oracle vs the parquet
+    // original — proving writer and reader agree byte-for-byte.
     "q85_mem_sink_roundtrip" -> ((s, d) => {
       Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"),

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * what the testdata corpora hold, and reading a table through them
   * launches no Spark job while a query is built. Also the shared
   * (event_type, day, n) series [[Tables.dailyEvents]]: its counts, and
-  * that the queries built on it stay lazy.
+  * that the queries built on it, and on the term stream, stay lazy.
   */
 class TablesSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -96,6 +96,23 @@ class TablesSpec extends AnyFunSuite {
     // the shared series stays a lazy aggregate: materializing it would
     // start jobs here
     for (q <- dailySeriesQueries)
+      assert(constructionJobs(q) == 0, s"building $q launched Spark jobs")
+  }
+
+  /** The queries that read their tokens through [[graft.ops.Text.terms]]
+    * or [[graft.ops.Text.termCounts]]. */
+  private val termStreamQueries = Seq(
+    "q110_tfidf_topk", "q129_inverted_index", "q144_distinctive_terms",
+    "q168_bm25", "q234_bpe_pairs", "q235_dsir_weights", "q245_zipf_slope",
+    "q247_cms_heavy_hitters", "q266_rbo_rankings", "q269_stem_audit",
+    "q270_oov_coverage", "q287_heavy_hitters", "q314_renyi_spectrum",
+    "q315_good_turing", "q320_burrows_delta", "q323_chao_richness",
+    "q325_word_burstiness")
+
+  test("building the term-stream queries launches no Spark job") {
+    // the term frame stays lazy: nothing is collected or materialized
+    // while the query is built
+    for (q <- termStreamQueries)
       assert(constructionJobs(q) == 0, s"building $q launched Spark jobs")
   }
 
